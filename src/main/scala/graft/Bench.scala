@@ -4,49 +4,15 @@ import org.apache.spark.sql.SparkSession
 /** Driver benchmark: runs every SparkEntry query at SPARK_GRAFT_SF_DIR
   * and prints one JSON line with per-query seconds and statuses.
   *
-  * Robustness rules learned from the round-1 driver run (which died of
-  * "unable to send heartbeats to driver more than 60 times" while the
-  * host was loaded, then reported the unexecuted queries as
-  * milliseconds):
-  *   - a local-mode JVM must never heartbeat-suicide: the executor and
-  *     driver share the process, so a long GC pause starves the
-  *     heartbeater RPC without anything actually being wrong — raise
-  *     the failure tolerance and timeouts instead of dying;
-  *   - every query reports ok/err and the process exits nonzero on any
-  *     error, so a failed run cannot masquerade as a fast one.
+  * Every query reports ok/err and the process exits nonzero on any
+  * error, so a failed run cannot masquerade as a fast one (an early run
+  * that died mid-way reported its unexecuted queries as milliseconds).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Default to the machine, like Verify — a hard-coded 4 silently
-    // quarters throughput when the caller forgets the env var.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // NTZ-vintage events.ts casts wall clock → instant through the
-      // session zone; UTC keeps it identical to the oracle's naive read.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Heartbeat headroom (see scaladoc): tolerate minutes-long GC /
-      // CPU starvation on a loaded host rather than exiting mid-run.
-      .config("spark.executor.heartbeatInterval", "20s")
-      .config("spark.executor.heartbeat.maxFailures", "10000")
-      .config("spark.network.timeout", "600s")
-      .config("spark.rpc.askTimeout", "600s")
-      // Report sessions rebuild the same processed-zone prefixes per
-      // query; persist them once (PlanCache) like the reference's
-      // staged zones persist between jobs.
-      .config("spark.graft.cachePrefixes", "true")
-      // Wide shared prefixes (dedup feature table) go to a parquet
-      // side-table instead of block storage — see PlanCache.sideTable.
-      .config("spark.graft.featureTableDir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_feature_tables")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cachePrefixes = true)
     // Ambient-load sentinel (VERDICT r12 #5): two FIXED-WORK probes —
     // pure distributed compute (codegen'd hash fold over a constant
     // range) and raw host I/O (write + read-back of a constant-size
@@ -61,13 +27,13 @@ object Bench {
       // job pays JIT + codegen compilation, which inflated the start-
       // edge probe 2-30x over the end-edge one on an IDLE box — the
       // probe must measure the host, not the JVM's cold start
-      spark.range(0, 20000000L, 1, cpus.toInt)
+      spark.range(0, 20000000L, 1, cpus)
         .selectExpr("bit_xor(xxhash64(id)) AS s").collect(): Unit
       val c0 = System.nanoTime()
       // bit_xor, not sum: summing 200M 64-bit hashes overflows Long
       // under ANSI semantics (measured, stage-0 crash); xor folds the
       // same codegen'd hash work overflow-free
-      spark.range(0, 200000000L, 1, cpus.toInt)
+      spark.range(0, 200000000L, 1, cpus)
         .selectExpr("bit_xor(xxhash64(id)) AS s").collect(): Unit
       val cpuSec = (System.nanoTime() - c0) / 1e9
       val i0 = System.nanoTime()

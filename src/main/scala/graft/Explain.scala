@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan for each named
   * query (or all). Used to confirm filter/column pushdown into the
   * parquet scans, broadcast choices, and whole-stage-codegen coverage.
@@ -34,20 +32,11 @@ object Explain {
         asked
       }
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // SPARK_GRAFT_CACHE=true replicates the bench session's
-      // PlanCache confs so captured plans match the bench path
-      // (persisted shared prefixes) instead of the cold verify path.
-      .config("spark.graft.cachePrefixes",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE", "false"))
-      .getOrCreate()
+    // SPARK_GRAFT_CACHE=true replicates the bench session's PlanCache
+    // confs so captured plans match the bench path (persisted shared
+    // prefixes) instead of the cold verify path.
+    val spark = GraftSession.local(
+      cachePrefixes = sys.env.get("SPARK_GRAFT_CACHE").exists(_.toBoolean))
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n===== $n =====")

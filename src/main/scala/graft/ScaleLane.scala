@@ -46,15 +46,7 @@ object ScaleLane {
     if (java.nio.file.Files.exists(marker)) {
       println(s"scale replica already at $out"); return
     }
-    val cpus = Runtime.getRuntime.availableProcessors.toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     build(spark, src, out)
     java.nio.file.Files.createFile(marker)
     println(s"scale replica built at $out")

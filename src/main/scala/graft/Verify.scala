@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -36,17 +35,8 @@ import scala.concurrent.duration.Duration
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // Optional subset filter for local iteration: SPARK_GRAFT_ONLY=q1,q2
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -73,7 +63,7 @@ object Verify {
     // driver's time budget is the binding constraint at 387 —
     // SPARK_GRAFT_WORKERS overrides for measurement.
     val workers = sys.env.get("SPARK_GRAFT_WORKERS").map(_.toInt)
-      .getOrElse(math.max(2, math.min(8, cpus.toInt)))
+      .getOrElse(math.max(2, math.min(8, cpus)))
     val pool = Executors.newFixedThreadPool(workers)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val t0 = System.nanoTime()

@@ -1822,19 +1822,12 @@ object Dedup {
     // semi, block cross) — cut them once or every branch re-runs the
     // tokenize+signature aggregation (measured: the un-cut shape more
     // than doubled the query)
-    def prof[A](n: String)(f: => A): A =
-      if (sys.env.contains("GRAFT_E2E_PROFILE")) {
-        val t0 = System.nanoTime(); val r = f
-        println(f"SIMPHASE $n%-12s ${(System.nanoTime() - t0) / 1e9}%6.2f s"); r
-      } else f
-    val sims = prof("sims_cut")(graft.ops.Checkpoints.cut(
-      simsIn.select("doc_id", "lang", "simhash")))
+    val sims = graft.ops.Checkpoints.cut(simsIn.select("doc_id", "lang", "simhash"))
     val stackParts = simhashBands.zipWithIndex.map { case ((off, w), i) =>
       s"$i, ${simhashBandVal("simhash", off, w, SparkD)}"
     }.mkString(", ")
-    val groups = prof("groups_cut")(graft.ops.Checkpoints.cut(
-      sims.groupBy("simhash", "lang").agg(
-        collect_list(col("doc_id")).as("ms"))))
+    val groups = graft.ops.Checkpoints.cut(
+      sims.groupBy("simhash", "lang").agg(collect_list(col("doc_id")).as("ms")))
     val valuePairs = if (groups.count() <= maxDirect) {
       // direct path: every within-lang group pair tested exactly once,
       // Hamming cut IN the join condition (before any row is emitted),

@@ -180,13 +180,6 @@ object EndToEnd {
         expr(s"CAST($digest AS BIGINT)").as("digest"))
       .selectExpr(s"'$zone' AS zone", "n_rows", "digest")
 
-  private def phase[A](name: String)(f: => A): A =
-    if (sys.env.contains("GRAFT_E2E_PROFILE")) {
-      val t0 = System.nanoTime(); val r = f
-      println(f"E2EPHASE $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    } else f
-
   /** Run independent driver actions concurrently (guide §2.6): each
     * thunk submits its own Spark job; the scheduler back-fills one
     * job's straggler tail with the next job's tasks. Exceptions
@@ -210,25 +203,28 @@ object EndToEnd {
     * digests (deterministic regardless of parallelism), and the
     * schema is taken verbatim from the union plan, so the result is
     * row- and schema-identical to executing the union itself. */
-  private def concurrentSummaryUnion(spark: SparkSession,
+  private[graft] def concurrentSummaryUnion(spark: SparkSession,
       branches: Seq[DataFrame]): DataFrame = {
     // schema comes from the union PLAN itself (nullability is the
     // per-field OR over branches), so the result is schema-identical
-    // to executing the union
+    // to executing the union; each branch is collected in the union's
+    // column order, since unionByName matches by name, not position
     val schema = branches.reduce(_ unionByName _).schema
-    val rows = inParallel(branches.map(df => () => df.collect().toSeq)).flatten
+    val cols = schema.fieldNames.map(col)
+    val rows = inParallel(branches.map(df => () =>
+      df.select(cols: _*).collect().toSeq)).flatten
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1), schema)
   }
 
   def pipelineEndToEnd(spark: SparkSession, dir: String): DataFrame = {
-    val raw = phase("stageRawZone")(stageRawZone(spark, dir))
+    val raw = stageRawZone(spark, dir)
     val out = s"$tmp/graft_e2e_zones/${dirTag(dir)}"
     def zonePath(z: String): String = s"$out/$z"
 
     // Raw reads with declared schemas (S1) — the five jobs below
     // consume ONLY these CSV relations, exactly like the Glue jobs.
-    val rels = phase("rawRelations")(rawRelations(spark, dir, raw))
+    val rels = rawRelations(spark, dir, raw)
     import rels.{orders, items, products, customers, feedback, marketing,
       invOld, invNew}
 
@@ -240,67 +236,60 @@ object EndToEnd {
     // CONCURRENT Spark jobs — they write disjoint zones, so the only
     // thing the reference's sequential loop adds is idle executors
     // (see [[Orchestrator.runRecordedConcurrent]]'s deviation note).
-    val (results, crawl) = phase("jobs+crawl")(
-      Orchestrator.runAndCrawlRecordedConcurrent(
-        "incoming/daily_batch_2024_08.csv") {
-        case Orchestrator.SalesRevenue => phase("job:SalesRevenue") {
-          // two sinks consume the same transform — persist so the
-          // joins/derivations run once, not once per write. r14:
-          // materialize the cache FIRST (one count over the persisted
-          // plan fills it), then run the two independent sink writes
-          // concurrently — the tiny curated agg hides under the
-          // 80-partition processed write instead of following it
-          val sales = SalesRevenue.run(orders, items, products).persist()
-          try {
-            phase("  sales:materialize")(sales.count()): Unit
-            phase("  sales:writes")(inParallel(Seq(
-              () => phase("  sales:processed")(Writers.processed(sales,
-                zonePath("processed_sales_transactions"), Seq("year", "month"))),
-              () => phase("  sales:curated")(Writers.curated(
-                Aggregations.revenueByCategory(sales),
-                zonePath("curated_revenue_by_category")))))): Unit
-          } finally sales.unpersist(blocking = false): Unit
-        }
-        case Orchestrator.DeliveryPerformance => phase("job:DeliveryPerformance") {
-          Writers.curated(
-            Aggregations.deliveryPartnerPerformance(
-              DeliveryPerformance.run(orders)),
-            zonePath("curated_delivery_partner_performance"))
-        }
-        case Orchestrator.CustomerFeedback => phase("job:CustomerFeedback") {
-          Writers.curated(
-            CustomerFeedback.areaMetrics(CustomerFeedback.enrich(
-              feedback, customers, orders, CustomerFeedback.ratingIcons(spark))),
-            zonePath("curated_area_feedback_metrics"))
-        }
-        case Orchestrator.MarketingRoi => phase("job:MarketingRoi") {
-          Writers.curated(
-            Aggregations.campaignPerformanceSummary(MarketingRoi.run(marketing)),
-            zonePath("curated_campaign_performance_summary"))
-        }
-        case Orchestrator.InventoryReconciliation => phase("job:InventoryReconciliation") {
-          val recon = InventoryReconciliation.run(invOld, invNew, products)
-            .persist()
-          try {
-            recon.count(): Unit // fill the cache once, then fan out
-            inParallel(Seq(
-              () => Writers.curated(Aggregations.categoryInventoryImpact(recon),
-                zonePath("curated_category_inventory_impact")),
-              () => Writers.curated(
-                Aggregations.productInventoryDiscrepancies(recon),
-                zonePath("curated_product_inventory_discrepancies")))): Unit
-          } finally recon.unpersist(blocking = false): Unit
-        }
-      } { _ =>
-        // Crawler step: register every curated zone + the partitioned
-        // processed zone in the catalog, e2e_-prefixed (see e2eSql).
-        zoneDigests.map(_._1).foreach { z =>
-          if (z.startsWith("processed_"))
-            Catalog.registerExternal(spark, s"e2e_$z", zonePath(z))
-          else
-            Catalog.registerExternalUnpartitioned(spark, s"e2e_$z", zonePath(z))
-        }
-      })
+    val (results, crawl) = Orchestrator.runAndCrawlRecordedConcurrent(
+      "incoming/daily_batch_2024_08.csv") {
+      case Orchestrator.SalesRevenue =>
+        // two sinks consume the same transform — persist so the
+        // joins/derivations run once, not once per write. r14:
+        // materialize the cache FIRST (one count over the persisted
+        // plan fills it), then run the two independent sink writes
+        // concurrently — the tiny curated agg hides under the
+        // 80-partition processed write instead of following it
+        val sales = SalesRevenue.run(orders, items, products).persist()
+        try {
+          sales.count(): Unit
+          inParallel(Seq(
+            () => Writers.processed(sales,
+              zonePath("processed_sales_transactions"), Seq("year", "month")),
+            () => Writers.curated(Aggregations.revenueByCategory(sales),
+              zonePath("curated_revenue_by_category")))): Unit
+        } finally sales.unpersist(blocking = false): Unit
+      case Orchestrator.DeliveryPerformance =>
+        Writers.curated(
+          Aggregations.deliveryPartnerPerformance(
+            DeliveryPerformance.run(orders)),
+          zonePath("curated_delivery_partner_performance"))
+      case Orchestrator.CustomerFeedback =>
+        Writers.curated(
+          CustomerFeedback.areaMetrics(CustomerFeedback.enrich(
+            feedback, customers, orders, CustomerFeedback.ratingIcons(spark))),
+          zonePath("curated_area_feedback_metrics"))
+      case Orchestrator.MarketingRoi =>
+        Writers.curated(
+          Aggregations.campaignPerformanceSummary(MarketingRoi.run(marketing)),
+          zonePath("curated_campaign_performance_summary"))
+      case Orchestrator.InventoryReconciliation =>
+        val recon = InventoryReconciliation.run(invOld, invNew, products)
+          .persist()
+        try {
+          recon.count(): Unit // fill the cache once, then fan out
+          inParallel(Seq(
+            () => Writers.curated(Aggregations.categoryInventoryImpact(recon),
+              zonePath("curated_category_inventory_impact")),
+            () => Writers.curated(
+              Aggregations.productInventoryDiscrepancies(recon),
+              zonePath("curated_product_inventory_discrepancies")))): Unit
+        } finally recon.unpersist(blocking = false): Unit
+    } { _ =>
+      // Crawler step: register every curated zone + the partitioned
+      // processed zone in the catalog, e2e_-prefixed (see e2eSql).
+      zoneDigests.map(_._1).foreach { z =>
+        if (z.startsWith("processed_"))
+          Catalog.registerExternal(spark, s"e2e_$z", zonePath(z))
+        else
+          Catalog.registerExternalUnpartitioned(spark, s"e2e_$z", zonePath(z))
+      }
+    }
     rels.release() // zones are written; the raw parses are done with
     val failed = results.filterNot(_.succeeded)
     if (failed.nonEmpty || !crawl.contains("succeeded"))
@@ -309,12 +298,11 @@ object EndToEnd {
 
     // Athena tier over the crawled tables, then one summary row per
     // zone and per query.
-    val zoneRows = phase("zoneSummaries")(zoneDigests.map { case (z, digest) =>
-      summarize(z, spark.table(s"e2e_$z"), digest) })
-    val queryRows = phase("querySummaries")(queryDigests.map { case (q, digest) =>
-      summarize(q, spark.sql(e2eSql(AthenaQueries.all(q))), digest) })
-    phase("summaryUnion")(
-      concurrentSummaryUnion(spark, zoneRows ++ queryRows).orderBy("zone"))
+    val zoneRows = zoneDigests.map { case (z, digest) =>
+      summarize(z, spark.table(s"e2e_$z"), digest) }
+    val queryRows = queryDigests.map { case (q, digest) =>
+      summarize(q, spark.sql(e2eSql(AthenaQueries.all(q))), digest) }
+    concurrentSummaryUnion(spark, zoneRows ++ queryRows).orderBy("zone")
   }
 
   /** `pipeline_end_to_end_ledger`: the reference's unit of work with
@@ -332,7 +320,7 @@ object EndToEnd {
     * checks, so the oracle hash fails if any protocol step regresses. */
   def pipelineEndToEndLedger(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.{LedgerRefs, LedgerSink}
-    val raw = phase("l:stageRawZone")(stageRawZone(spark, dir))
+    val raw = stageRawZone(spark, dir)
     graft.sources.LedgerLifecycle.initCatalog(spark)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.e2el")
     // identifier-safe tag (dirTag keeps dots, which a SQL table name
@@ -349,7 +337,7 @@ object EndToEnd {
     zones.foreach(z =>
       graft.sources.LedgerLifecycle.deleteRecursively(tPath(z).toString))
 
-    val rels = phase("l:rawRelations")(rawRelations(spark, dir, raw))
+    val rels = rawRelations(spark, dir, raw)
     import rels.{orders, items, products, customers, feedback, marketing,
       invOld, invNew}
 
@@ -361,34 +349,33 @@ object EndToEnd {
       df.write.format(ledger).option("path", tPath(zone).toString)
         .option("wapId", "w1").mode("append").save()
     }
-    val (results, crawl) = phase("l:jobs+crawl")(
-      Orchestrator.runAndCrawlRecordedConcurrent(
-        "incoming/daily_batch_2024_08.csv") {
-        case Orchestrator.SalesRevenue =>
-          stageWap("curated_revenue_by_category",
-            Aggregations.revenueByCategory(
-              SalesRevenue.run(orders, items, products)))
-        case Orchestrator.DeliveryPerformance =>
-          stageWap("curated_delivery_partner_performance",
-            Aggregations.deliveryPartnerPerformance(
-              DeliveryPerformance.run(orders)))
-        case Orchestrator.CustomerFeedback =>
-          stageWap("curated_area_feedback_metrics",
-            CustomerFeedback.areaMetrics(CustomerFeedback.enrich(
-              feedback, customers, orders, CustomerFeedback.ratingIcons(spark))))
-        case Orchestrator.MarketingRoi =>
-          stageWap("curated_campaign_performance_summary",
-            Aggregations.campaignPerformanceSummary(MarketingRoi.run(marketing)))
-        case Orchestrator.InventoryReconciliation =>
-          val recon = InventoryReconciliation.run(invOld, invNew, products)
-            .persist()
-          try {
-            stageWap("curated_category_inventory_impact",
-              Aggregations.categoryInventoryImpact(recon))
-            stageWap("curated_product_inventory_discrepancies",
-              Aggregations.productInventoryDiscrepancies(recon))
-          } finally recon.unpersist(blocking = false): Unit
-      } { _ => () }) // the catalog IS the crawler here: path-convention tables
+    val (results, crawl) = Orchestrator.runAndCrawlRecordedConcurrent(
+      "incoming/daily_batch_2024_08.csv") {
+      case Orchestrator.SalesRevenue =>
+        stageWap("curated_revenue_by_category",
+          Aggregations.revenueByCategory(
+            SalesRevenue.run(orders, items, products)))
+      case Orchestrator.DeliveryPerformance =>
+        stageWap("curated_delivery_partner_performance",
+          Aggregations.deliveryPartnerPerformance(
+            DeliveryPerformance.run(orders)))
+      case Orchestrator.CustomerFeedback =>
+        stageWap("curated_area_feedback_metrics",
+          CustomerFeedback.areaMetrics(CustomerFeedback.enrich(
+            feedback, customers, orders, CustomerFeedback.ratingIcons(spark))))
+      case Orchestrator.MarketingRoi =>
+        stageWap("curated_campaign_performance_summary",
+          Aggregations.campaignPerformanceSummary(MarketingRoi.run(marketing)))
+      case Orchestrator.InventoryReconciliation =>
+        val recon = InventoryReconciliation.run(invOld, invNew, products)
+          .persist()
+        try {
+          stageWap("curated_category_inventory_impact",
+            Aggregations.categoryInventoryImpact(recon))
+          stageWap("curated_product_inventory_discrepancies",
+            Aggregations.productInventoryDiscrepancies(recon))
+        } finally recon.unpersist(blocking = false): Unit
+    } { _ => () } // the catalog IS the crawler here: path-convention tables
     rels.release() // staged; the raw parses are done with
     val failed = results.filterNot(_.succeeded)
     if (failed.nonEmpty || !crawl.contains("succeeded"))
@@ -402,18 +389,18 @@ object EndToEnd {
     // the six audits read disjoint staged zones — independent jobs,
     // run concurrently (r14); every audit still completes before any
     // publish below, so the protocol ordering is untouched
-    val audited = phase("l:audit")(inParallel(zones.map(z => () =>
+    val audited = inParallel(zones.map(z => () =>
       z -> spark.read.format(ledger).option("path", tPath(z).toString)
-        .option("wapId", "w1").load().count())).toMap)
+        .option("wapId", "w1").load().count())).toMap
     if (audited.values.exists(_ == 0L))
       throw new IllegalStateException(s"audit found an empty zone: $audited")
     zones.foreach(z => LedgerRefs.publishWap(tPath(z), "w1"): Unit)
     // post-publish verification: the version/wap checks are driver
     // file reads, the recounts are independent scans — concurrent (r14)
-    val publishOk = phase("l:publishOk")(if (inParallel(zones.map(z => () =>
+    val publishOk = if (inParallel(zones.map(z => () =>
       LedgerSink.currentVersion(tPath(z)) == 2 &&
         spark.table(tName(z)).count() == audited(z) &&
-        LedgerSink.listWaps(tPath(z)).isEmpty)).forall(identity)) 1 else 0)
+        LedgerSink.listWaps(tPath(z)).isEmpty)).forall(identity)) 1 else 0
 
     // a deliberately FAILING audit: stage an empty second batch where
     // the audit demands rows — abort must leave live state untouched
@@ -441,8 +428,7 @@ object EndToEnd {
       "CAST(4 AS BIGINT) AS n_rows",
       s"CAST($stageIsolated * 1000 + $publishOk * 100 + " +
         s"$auditFails * 10 + $abortClean AS BIGINT) AS digest")
-    phase("l:summaryUnion")(
-      concurrentSummaryUnion(spark, zoneRows ++ queryRows :+ verdict))
+    concurrentSummaryUnion(spark, zoneRows ++ queryRows :+ verdict)
       .orderBy("zone")
   }
 

@@ -482,14 +482,6 @@ object LedgerLifecycle {
     * union — which is precisely what the oracle demands: the hash is
     * the FULL-corpus `dedup_minhash_pairs` oracle, so one lost or
     * duplicated delta pair fails the gate. */
-  /** Env-gated section timer (the EndToEnd phase pattern). */
-  private def prof[A](name: String)(f: => A): A =
-    if (sys.env.contains("GRAFT_E2E_PROFILE")) {
-      val t0 = System.nanoTime(); val r = f
-      println(f"LEDGERPHASE $name%-24s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    } else f
-
   def cdcIncrementalDedup(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.llm.Dedup
     val dir =
@@ -498,11 +490,11 @@ object LedgerLifecycle {
     // one materialization feeds all three commits' narrow filters (the
     // commitVolume staging-buffer pattern, r14): the text-heavy
     // documents scan ran once per commit before
-    val docs = prof("cdc:stage")(graft.ops.Checkpoints.cut(
+    val docs = graft.ops.Checkpoints.cut(
       graft.io.Tables.documents(spark, sfDir)
         .selectExpr("CAST(doc_id AS BIGINT) AS doc_id", "lang", "source",
-          "text", "CAST(doc_id AS BIGINT) % 3 AS b")))
-    prof("cdc:commits")((0 until 3).foreach { b =>
+          "text", "CAST(doc_id AS BIGINT) % 3 AS b"))
+    (0 until 3).foreach { b =>
       // Two files per commit, not one-per-scan-task: a daily-crawl
       // append lands as a few well-sized files; ten 100-row files per
       // commit just multiplies manifest entries, bloom sidecars and
@@ -511,15 +503,14 @@ object LedgerLifecycle {
       docs.filter(col("b") === b).drop("b").coalesce(2)
         .write.format(ledger).option("path", dir)
         .mode(if (b == 0) "overwrite" else "append").save()          // v(b+1)
-    })
+    }
     def deltaDocs(v: Int): DataFrame =
       spark.read.format(ledger).option("path", dir)
         .option("changesFromVersion", (v - 1).toString)
         .option("changesToVersion", v.toString).load()
     var corpusFeats: Option[DataFrame] = None
     (1 to 3).map { v =>
-      val deltaFeats = prof(s"cdc:feats$v")(
-        graft.ops.Checkpoints.cut(Dedup.featuresOf(deltaDocs(v))))
+      val deltaFeats = graft.ops.Checkpoints.cut(Dedup.featuresOf(deltaDocs(v)))
       val within = Dedup.minhashPairsOf(deltaFeats,
         Dedup.repBandCandidatesOf(deltaFeats))
       val tier = corpusFeats match {

@@ -366,18 +366,4 @@ object OracleSql {
 
   val deliveryPerformance: String =
     withCtes("SELECT * FROM deliv ORDER BY order_id")
-
-  val curatedQueries: Map[String, String] = Map(
-    "curated_revenue_by_category" -> "ORDER BY category",
-    "curated_campaign_performance_summary" -> "ORDER BY campaign_id, channel",
-    "curated_delivery_partner_performance" -> "ORDER BY delivery_partner_id",
-    "curated_area_feedback_metrics" -> "ORDER BY avg_rating DESC, area",
-    "curated_category_inventory_impact" -> "ORDER BY category",
-    "curated_product_inventory_discrepancies" -> "ORDER BY product_id"
-  ).map { case (name, order) => name -> withCtes(s"SELECT * FROM $name $order") }
-
-  /** The six Athena-layer queries: same dialect-common text the Spark
-    * side executes, over the curated CTEs. */
-  val athenaQueries: Map[String, String] =
-    AthenaQueries.all.map { case (name, q) => name -> withCtes(q) }
 }

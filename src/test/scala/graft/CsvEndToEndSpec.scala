@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.io.{Readers, Writers}
-import graft.orchestrate.Orchestrator
+import graft.orchestrate.{EndToEnd, Orchestrator}
 import graft.pipelines.InventoryReconciliation
 import graft.schema.Schemas
 
@@ -53,5 +53,14 @@ class CsvEndToEndSpec extends SparkSpec {
     val ran = scala.collection.mutable.ArrayBuffer.empty[Orchestrator.Job]
     Orchestrator.run("raw/inventory/inventoryNew_batch1.csv")(ran += _)
     assert(ran.toSeq == Seq(Orchestrator.InventoryReconciliation))
+  }
+
+  test("summary union collects each branch in the union's column order") {
+    val a = Seq(("z1", 1L, 10L)).toDF("zone", "n_rows", "digest")
+    val b = Seq((20L, "z2", 2L)).toDF("digest", "zone", "n_rows")
+    val union = a.unionByName(b)
+    val out = EndToEnd.concurrentSummaryUnion(spark, Seq(a, b))
+    assert(out.schema == union.schema)
+    assert(out.orderBy("zone").collect().toSeq == union.orderBy("zone").collect().toSeq)
   }
 }

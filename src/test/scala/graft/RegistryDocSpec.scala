@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps README's correctness-gate numbers honest: the "X of the Y
-  * `SparkEntry.queries`" sentence must be derived from the registries,
+  * `SparkEntry.queries`" sentence must be derived from the registry,
   * not hand-maintained (the round-5 review caught it stale). Also pins
   * the registry invariants the driver relies on: every oracle key names
   * a registered query, and exactly the two by-construction-approximate
@@ -20,6 +20,10 @@ class RegistryDocSpec extends AnyFunSuite {
     val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(noOracle.isEmpty,
       s"queries without oracle SQL (drivers record these as errors): $noOracle")
+  }
+
+  test("oracle SQL is built once per query, not per oracleSql call") {
+    assert(SparkEntry.oracleSql("dedup_kcore") eq SparkEntry.oracleSql("dedup_kcore"))
   }
 
   test("no two registered names one edit apart (near-twin guard)") {
