@@ -16,6 +16,30 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** (name, size, mtime) of every regular file under `path`, sorted —
+    * cheap fs metadata, no content read; "missing" when `path` is
+    * absent. A rewritten fixture changes size or mtime, so a JVM-global
+    * cache keyed by path plus this fingerprint cannot serve state
+    * derived from the files a rewrite replaced (ADVICE r8: the rollup
+    * registry was keyed by path alone, and an in-process rewrite of
+    * lineitem.parquet would have served pre-rewrite aggregates
+    * forever). */
+  private[graft] def fingerprint(path: String): String = {
+    val p = java.nio.file.Paths.get(path)
+    if (!java.nio.file.Files.exists(p)) "missing"
+    else {
+      val s = java.nio.file.Files.walk(p)
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala
+          .filter(java.nio.file.Files.isRegularFile(_))
+          .map(f => s"${f.getFileName}:${java.nio.file.Files.size(f)}:" +
+            s"${java.nio.file.Files.getLastModifiedTime(f).toMillis}")
+          .toSeq.sorted.mkString("|")
+      } finally s.close()
+    }
+  }
+
   /** Raw scan (keeps the `_metadata` hidden column resolvable). */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")

@@ -68,8 +68,8 @@ object EndToEnd {
     if (!java.nio.file.Files.exists(marker)) {
       // reclaim the pre-v2 zone on warm machines — the layout bump
       // must not leave a full orphaned CSV copy of every entity behind
-      graft.sources.LedgerLifecycle.deleteRecursively(
-        s"$tmp/graft_raw_zone/${dirTag(dir)}")
+      graft.sources.LedgerSink.deleteRecursively(
+        java.nio.file.Paths.get(s"$tmp/graft_raw_zone/${dirTag(dir)}"))
       entities(spark, dir).foreach { case (name, df) =>
         // A handful of CSV files per entity, not one-per-task: the raw
         // zone models the producer's batch drop (the reference ingests
@@ -87,21 +87,27 @@ object EndToEnd {
     root
   }
 
-  /** Entity name → declared schema, resolved ONCE per (session, dir)
+  /** Entity name → declared schema, resolved ONCE per fixture state
     * (r14): every [[readEntity]] call previously re-constructed and
     * re-analyzed all eight entity plans just to read one schema —
     * 8×8 = 64 plan analyses of pure driver time per composite run. */
   private val entitySchemas =
     new java.util.concurrent.ConcurrentHashMap[
-      String, Map[String, org.apache.spark.sql.types.StructType]]()
+      String, (String, Map[String, org.apache.spark.sql.types.StructType])]()
 
-  // keyed by dir alone: the declared schemas are a pure function of
-  // the fixture layout (plain StructTypes, no session references)
-  private def entitySchema(spark: SparkSession, dir: String,
-      name: String): org.apache.spark.sql.types.StructType =
-    entitySchemas.computeIfAbsent(dir, _ =>
-      entities(spark, dir).map { case (n, df) => n -> df.schema }.toMap
-    ).apply(name)
+  // keyed by dir, valid while the dir's file fingerprint holds: the
+  // declared schemas are a pure function of the fixture files (plain
+  // StructTypes, no session references), and a fixture regenerated at
+  // the same path in this JVM replaces the entry instead of reading a
+  // stale one
+  private[graft] def entitySchema(spark: SparkSession, dir: String,
+      name: String): org.apache.spark.sql.types.StructType = {
+    val fp = graft.io.Tables.fingerprint(dir)
+    entitySchemas.compute(dir, (_, cached) =>
+      if (cached != null && cached._1 == fp) cached
+      else fp -> entities(spark, dir).map { case (n, df) => n -> df.schema }.toMap
+    )._2.apply(name)
+  }
 
   private def readEntity(spark: SparkSession, dir: String, raw: String,
       name: String): DataFrame =
@@ -319,23 +325,16 @@ object EndToEnd {
     * travel as one extra summary row whose digest folds the four
     * checks, so the oracle hash fails if any protocol step regresses. */
   def pipelineEndToEndLedger(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{LedgerRefs, LedgerSink}
+    import graft.sources.{LedgerGate, LedgerRefs, LedgerSink}
     val raw = stageRawZone(spark, dir)
-    graft.sources.LedgerLifecycle.initCatalog(spark)
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.e2el")
     // identifier-safe tag (dirTag keeps dots, which a SQL table name
-    // cannot carry unquoted) — the lifecycle gates' own sanitizer
-    val g = graft.sources.LedgerLifecycle.tag(dir)
-    val catRoot = graft.sources.LedgerLifecycle.catalogRoot
-    def tPath(zone: String) = java.nio.file.Paths.get(catRoot, "e2el", s"${zone}_$g")
-    def tName(zone: String) = s"graft_cat.e2el.${zone}_$g"
-    val ledger = classOf[LedgerSink].getName
+    // cannot carry unquoted) — the ledger gates' own sanitizer
+    val g = LedgerGate.tag(dir)
     val zones = zoneDigests.filterNot(_._1.startsWith("processed_")).map(_._1)
     // fresh tables per run: the protocol verdicts assert version
     // arithmetic from v1, which a previous run's published tables on a
     // warm machine would break
-    zones.foreach(z =>
-      graft.sources.LedgerLifecycle.deleteRecursively(tPath(z).toString))
+    val t = zones.map(z => z -> LedgerGate.catalogPath(spark, "e2el", z, dir)).toMap
 
     val rels = rawRelations(spark, dir, raw)
     import rels.{orders, items, products, customers, feedback, marketing,
@@ -344,10 +343,8 @@ object EndToEnd {
     // each job CREATES its empty curated table (v1) then STAGES the
     // rows under wapId w1 — no version advances until publish
     def stageWap(zone: String, df: DataFrame): Unit = {
-      df.limit(0).write.format(ledger)
-        .option("path", tPath(zone).toString).mode("overwrite").save()
-      df.write.format(ledger).option("path", tPath(zone).toString)
-        .option("wapId", "w1").mode("append").save()
+      t(zone).write(df.limit(0), "overwrite")
+      t(zone).write(df, "append", "wapId" -> "w1")
     }
     val (results, crawl) = Orchestrator.runAndCrawlRecordedConcurrent(
       "incoming/daily_batch_2024_08.csv") {
@@ -385,42 +382,39 @@ object EndToEnd {
     // AUDIT → PUBLISH. Audit reads the staged (base ∪ wap) state and
     // demands rows; staging must not have advanced any version.
     val stageIsolated = if (zones.forall(z =>
-      LedgerSink.currentVersion(tPath(z)) == 1)) 1 else 0
+      LedgerSink.currentVersion(t(z).root) == 1)) 1 else 0
     // the six audits read disjoint staged zones — independent jobs,
     // run concurrently (r14); every audit still completes before any
     // publish below, so the protocol ordering is untouched
     val audited = inParallel(zones.map(z => () =>
-      z -> spark.read.format(ledger).option("path", tPath(z).toString)
-        .option("wapId", "w1").load().count())).toMap
+      z -> t(z).read("wapId" -> "w1").count())).toMap
     if (audited.values.exists(_ == 0L))
       throw new IllegalStateException(s"audit found an empty zone: $audited")
-    zones.foreach(z => LedgerRefs.publishWap(tPath(z), "w1"): Unit)
+    zones.foreach(z => LedgerRefs.publishWap(t(z).root, "w1"): Unit)
     // post-publish verification: the version/wap checks are driver
     // file reads, the recounts are independent scans — concurrent (r14)
     val publishOk = if (inParallel(zones.map(z => () =>
-      LedgerSink.currentVersion(tPath(z)) == 2 &&
-        spark.table(tName(z)).count() == audited(z) &&
-        LedgerSink.listWaps(tPath(z)).isEmpty)).forall(identity)) 1 else 0
+      LedgerSink.currentVersion(t(z).root) == 2 &&
+        spark.table(t(z).name).count() == audited(z) &&
+        LedgerSink.listWaps(t(z).root).isEmpty)).forall(identity)) 1 else 0
 
     // a deliberately FAILING audit: stage an empty second batch where
     // the audit demands rows — abort must leave live state untouched
     val probe = zones.head
-    spark.table(tName(probe)).limit(0).write.format(ledger)
-      .option("path", tPath(probe).toString)
-      .option("wapId", "w2").mode("append").save()
+    val pt = t(probe)
+    pt.write(spark.table(pt.name).limit(0), "append", "wapId" -> "w2")
     val auditFails =
-      if (spark.read.format(ledger).option("path", tPath(probe).toString)
-        .option("wapId", "w2").load().count() == audited(probe)) 1 else 0
-    LedgerRefs.abortWap(tPath(probe), "w2")
-    val abortClean = if (LedgerSink.currentVersion(tPath(probe)) == 2 &&
-      spark.table(tName(probe)).count() == audited(probe) &&
-      LedgerSink.listWaps(tPath(probe)).isEmpty) 1 else 0
+      if (pt.read("wapId" -> "w2").count() == audited(probe)) 1 else 0
+    LedgerRefs.abortWap(pt.root, "w2")
+    val abortClean = if (LedgerSink.currentVersion(pt.root) == 2 &&
+      spark.table(pt.name).count() == audited(probe) &&
+      LedgerSink.listWaps(pt.root).isEmpty) 1 else 0
 
     // the six queries over the PUBLISHED catalog state
     def ledgerSql(sql: String): String =
       sql.replaceAll("\\bcurated_(\\w+)", s"graft_cat.e2el.curated_$$1_$g")
     val zoneRows = zoneDigests.filterNot(_._1.startsWith("processed_"))
-      .map { case (z, digest) => summarize(z, spark.table(tName(z)), digest) }
+      .map { case (z, digest) => summarize(z, spark.table(t(z).name), digest) }
     val queryRows = queryDigests.map { case (q, digest) =>
       summarize(q, spark.sql(ledgerSql(AthenaQueries.all(q))), digest) }
     val verdict = spark.range(1).selectExpr(

@@ -9,6 +9,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Proj
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 
+import graft.io.Tables
+
 /** Materialized-aggregate query rewrite — the engine's first
   * `Rule[LogicalPlan]` (SURVEY §7.3's (c) mechanism beyond custom
   * expressions): an Aggregate over the raw `lineitem` scan whose
@@ -53,35 +55,13 @@ object RollupRewrite {
                         measures: Map[String, (String, String)],
                         baseFingerprint: String)
 
-  /** (name, size, mtime) of every regular file under `path`, sorted —
-    * cheap fs metadata, no content read. A rewritten base parquet
-    * changes size or mtime, so a stale rollup can't silently answer
-    * for it (ADVICE r8: the registry was keyed by path alone, and an
-    * in-process rewrite of lineitem.parquet would have served
-    * pre-rewrite aggregates forever). */
-  private def fingerprintOf(path: String): String = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(p)) "missing"
-    else {
-      val s = java.nio.file.Files.walk(p)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala
-          .filter(java.nio.file.Files.isRegularFile(_))
-          .map(f => s"${f.getFileName}:${java.nio.file.Files.size(f)}:" +
-            s"${java.nio.file.Files.getLastModifiedTime(f).toMillis}")
-          .toSeq.sorted.mkString("|")
-      } finally s.close()
-    }
-  }
-
   /** The spec for `basePath` if it is registered AND its base files
     * still match the fingerprint taken at rollup-build time; a stale
     * entry is dropped (the next ensure() rebuilds it) and the rule
     * refuses to fire rather than serve pre-rewrite aggregates. */
   private def validSpec(basePath: String): Option[Spec] =
     registry.get(basePath).filter { spec =>
-      val fresh = spec.baseFingerprint == fingerprintOf(spec.basePath)
+      val fresh = spec.baseFingerprint == Tables.fingerprint(spec.basePath)
       if (!fresh) registry.remove(basePath, spec): Unit
       fresh
     }
@@ -111,7 +91,7 @@ object RollupRewrite {
       // fingerprint BEFORE the build: if the base changes mid-build the
       // recorded witness mismatches on the next check and forces a
       // rebuild — conservative in the right direction
-      val fp = fingerprintOf(basePath)
+      val fp = Tables.fingerprint(basePath)
       val rollupPath = s"${System.getProperty("java.io.tmpdir")}" +
         s"/graft_rollup_${dirTag(dir)}"
       import org.apache.spark.sql.functions._

@@ -468,8 +468,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // delete children bottom-up; the manifest goes FIRST so a crash
     // mid-drop leaves a non-table directory, never a corrupt table
     Files.deleteIfExists(dir.resolve(LedgerSink.ManifestName))
-    withStream(Files.walk(dir).sorted(java.util.Comparator.reverseOrder()))(
-      _.foreach(Files.deleteIfExists(_)))
+    LedgerSink.deleteRecursively(dir)
     true
   }
 
@@ -557,8 +556,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (!Files.isDirectory(dir)) return false
     if (!cascade && withStream(Files.list(dir))(_.hasNext))
       throw new IllegalStateException(s"namespace not empty: $dir")
-    withStream(Files.walk(dir).sorted(java.util.Comparator.reverseOrder()))(
-      _.foreach(Files.deleteIfExists(_)))
+    LedgerSink.deleteRecursively(dir)
     true
   }
 }
@@ -573,27 +571,20 @@ object CatalogRoundtrip {
   import org.apache.spark.sql.{DataFrame, SparkSession}
 
   def catalogSqlRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    spark.conf.set("spark.sql.catalog.graft_cat",
-      classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_cat.root",
-      s"${System.getProperty("java.io.tmpdir")}/graft_catalog_rt")
+    val tag = LedgerGate.tag(sfDir)
     graft.io.Tables.nation(spark, sfDir)
       .createOrReplaceTempView(s"cat_rt_nation_$tag")
-    spark.sql(s"DROP TABLE IF EXISTS graft_cat.rt.nation_$tag")
-    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_cat.rt")
+    val t = LedgerGate.catalogTable(spark, "rt", "nation", sfDir,
+      "(n_nationkey BIGINT, n_name STRING, n_regionkey BIGINT)").name
     spark.sql(
-      s"""CREATE TABLE graft_cat.rt.nation_$tag
-            (n_nationkey BIGINT, n_name STRING, n_regionkey BIGINT)""")
-    spark.sql(
-      s"""INSERT INTO graft_cat.rt.nation_$tag
+      s"""INSERT INTO $t
           SELECT CAST(n_nationkey AS BIGINT), n_name,
                  CAST(n_regionkey AS BIGINT)
           FROM cat_rt_nation_$tag""")
     spark.sql(
       s"""SELECT n_regionkey, count(*) AS n_nations,
             min(n_name) AS first_name, max(n_name) AS last_name
-          FROM graft_cat.rt.nation_$tag
+          FROM $t
           GROUP BY n_regionkey ORDER BY n_regionkey""")
   }
 
@@ -613,11 +604,8 @@ object CatalogRoundtrip {
     * magic-method binding, and the partial-agg merge tree all compute
     * the declared function. */
   def functionCatalogQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    spark.conf.set("spark.sql.catalog.graft_cat",
-      classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_cat.root",
-      s"${System.getProperty("java.io.tmpdir")}/graft_catalog_rt")
+    val tag = LedgerGate.tag(sfDir)
+    LedgerGate.initCatalog(spark)
     graft.io.Tables.orders(spark, sfDir)
       .createOrReplaceTempView(s"cat_fn_orders_$tag")
     spark.sql(

@@ -1,12 +1,8 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.EqualTo
+import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual, LessThan}
 
 /** Oracle gates for the round-10 ledger lifecycle tiers — partition
   * pruning, id-based schema evolution, OPTIMIZE, and CDC-driven
@@ -23,29 +19,7 @@ import org.apache.spark.sql.sources.EqualTo
   * contract at the connector layer, where it can be asserted rather
   * than assumed. */
 object LedgerLifecycle {
-
-  private[sources] def ledger = classOf[LedgerSink].getName
-
-  private[graft] def catalogRoot: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_catalog_rt"
-
-  private[graft] def initCatalog(spark: SparkSession): Unit = {
-    spark.conf.set("spark.sql.catalog.graft_cat",
-      classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_cat.root", catalogRoot)
-  }
-
-  private[graft] def tag(sfDir: String): String =
-    sfDir.replaceAll("[^A-Za-z0-9]", "_")
-
-  private[graft] def deleteRecursively(dirStr: String): Unit = {
-    val root = Paths.get(dirStr)
-    if (Files.exists(root)) {
-      val s = Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-      try s.iterator().asScala.foreach(Files.deleteIfExists(_))
-      finally s.close()
-    }
-  }
+  import LedgerGate._
 
   /** `dsv2_partition_pruning`: customer loaded into a table
     * `PARTITIONED BY (c_mktsegment)` through plain SQL, then read
@@ -58,34 +32,23 @@ object LedgerLifecycle {
     * dropped a matching file would poison n_rows/bal_sum; pruning
     * that kept extras would poison files_planned). */
   def partitionPruning(spark: SparkSession, sfDir: String): DataFrame = {
-    initCatalog(spark)
-    val t = s"graft_cat.pp.cust_${tag(sfDir)}"
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.pp")
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(
-      s"""CREATE TABLE $t (c_custkey BIGINT, c_mktsegment STRING, bal_c BIGINT)
+    val t = catalogTable(spark, "pp", "cust", sfDir,
+      """(c_custkey BIGINT, c_mktsegment STRING, bal_c BIGINT)
           PARTITIONED BY (c_mktsegment)""")
     graft.io.Tables.customer(spark, sfDir)
       .createOrReplaceTempView(s"pp_base_${tag(sfDir)}")
     spark.sql(
-      s"""INSERT INTO $t
+      s"""INSERT INTO ${t.name}
           SELECT CAST(c_custkey AS BIGINT), c_mktsegment,
                  CAST(round(c_acctbal * 100) AS BIGINT)
           FROM pp_base_${tag(sfDir)}""")
-    val dir = Paths.get(catalogRoot, "pp", s"cust_${tag(sfDir)}")
-    val manifest = LedgerSink.readManifest(dir).get
-    val builder = new LedgerScanBuilder(dir, manifest.schema)
-    builder.pushFilters(Array(EqualTo("c_mktsegment", "BUILDING")))
-    val planned = builder.build()
-      .asInstanceOf[org.apache.spark.sql.connector.read.Batch]
-      .planInputPartitions().length
-    val strict = if (planned < manifest.files.length) 1 else 0
+    val planned = plannedFiles(t.root, Array(EqualTo("c_mktsegment", "BUILDING")))
+    val total = LedgerSink.readManifest(t.root).get.files.length
     spark.sql(
       s"""SELECT count(*) AS n_rows, sum(bal_c) AS bal_sum
-          FROM $t WHERE c_mktsegment = 'BUILDING'""")
-      .selectExpr("n_rows", "bal_sum",
-        s"CAST($planned AS INT) AS files_planned",
-        s"CAST($strict AS INT) AS prune_strict")
+          FROM ${t.name} WHERE c_mktsegment = 'BUILDING'""")
+      .selectExpr("n_rows", "bal_sum", intCol("files_planned", planned),
+        flag("prune_strict", planned < total))
   }
 
   val partitionPruningOracle: String =
@@ -105,12 +68,9 @@ object LedgerLifecycle {
     * the drop hides the column without touching the rows that carried
     * it (v6), and no commit leaked into its neighbors. */
   def schemaEvolution(spark: SparkSession, sfDir: String): DataFrame = {
-    initCatalog(spark)
     val g = tag(sfDir)
-    val t = s"graft_cat.evo.chain_$g"
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.evo")
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, name STRING)")             // v1
+    val t = catalogTable(spark, "evo", "chain", sfDir,
+      "(k BIGINT, name STRING)").name                                 // v1
     graft.io.Tables.nation(spark, sfDir)
       .createOrReplaceTempView(s"evo_nation_$g")
     graft.io.Tables.region(spark, sfDir)
@@ -192,13 +152,9 @@ object LedgerLifecycle {
     * (BIGINT → INT) and a cross-family change (STRING → BIGINT) must
     * refuse. DuckDB recomputes the digests from the fixture. */
   def typeWidening(spark: SparkSession, sfDir: String): DataFrame = {
-    initCatalog(spark)
     val g = tag(sfDir)
-    val t = s"graft_cat.tw.ord_$g"
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.tw")
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    deleteRecursively(s"$catalogRoot/tw/ord_$g")
-    spark.sql(s"CREATE TABLE $t (okey INT, price_c BIGINT)")          // v1
+    val t = catalogTable(spark, "tw", "ord", sfDir,
+      "(okey INT, price_c BIGINT)").name                              // v1
     graft.io.Tables.orders(spark, sfDir)
       .createOrReplaceTempView(s"tw_base_$g")
     spark.sql(s"""INSERT INTO $t
@@ -206,32 +162,28 @@ object LedgerLifecycle {
                CAST(round(o_totalprice * 100) AS BIGINT)
         FROM tw_base_$g""")                                           // v2
     spark.sql(s"ALTER TABLE $t ALTER COLUMN okey TYPE BIGINT")        // v3
-    val widenedTypeOk = if (spark.table(t).schema("okey").dataType ==
-      org.apache.spark.sql.types.LongType) 1 else 0
+    val widenedTypeOk = spark.table(t).schema("okey").dataType ==
+      org.apache.spark.sql.types.LongType
     spark.sql(s"""INSERT INTO $t
         SELECT CAST(o_orderkey AS BIGINT) + 2147483648,
                CAST(round(o_totalprice * 100) AS BIGINT)
         FROM tw_base_$g WHERE o_orderkey % 100 = 0""")                // v4
     val v2Df = spark.sql(s"SELECT * FROM $t VERSION AS OF 2")
-    val v2TypeInt = if (v2Df.schema("okey").dataType ==
-      org.apache.spark.sql.types.IntegerType) 1 else 0
+    val v2TypeInt = v2Df.schema("okey").dataType ==
+      org.apache.spark.sql.types.IntegerType
     // Narrowing/cross-family refusals surface at two layers: Spark's
     // own v2 analyzer (Cast.canUpCast gate, NOT_SUPPORTED_CHANGE_COLUMN)
     // for SQL, and this catalog's applyChanges for direct API callers
     // (GraftCatalogSpec pins that layer) — either refusal is the
     // contract; silently succeeding is the failure.
-    def refuses(sql: String): Int =
-      try { spark.sql(sql); 0 }
-      catch { case e: Exception =>
-        if (exceptionChainContains(e, "safe") ||
-          exceptionChainContains(e, "NOT_SUPPORTED_CHANGE_COLUMN")) 1
-        else throw e }
+    def alterRefused(sql: String): Boolean =
+      refuses("safe", "NOT_SUPPORTED_CHANGE_COLUMN")(spark.sql(sql))
     val narrowRefused =
-      refuses(s"ALTER TABLE $t ALTER COLUMN price_c TYPE INT")
+      alterRefused(s"ALTER TABLE $t ALTER COLUMN price_c TYPE INT")
     // cross-family: first give the table a STRING column to attack
     spark.sql(s"ALTER TABLE $t ADD COLUMN note STRING")               // v5
     val crossRefused =
-      refuses(s"ALTER TABLE $t ALTER COLUMN note TYPE BIGINT")
+      alterRefused(s"ALTER TABLE $t ALTER COLUMN note TYPE BIGINT")
     val live = spark.table(t).selectExpr("count(*) AS n",
       "CAST(sum(okey) AS BIGINT) AS sum_k",
       "CAST(sum(price_c) AS BIGINT) AS sum_p")
@@ -239,10 +191,8 @@ object LedgerLifecycle {
       "CAST(sum(okey) AS BIGINT) AS sum_k_v2")
     live.crossJoin(broadcast(v2d)).selectExpr(
       "n", "sum_k", "sum_p", "n_v2", "sum_k_v2",
-      s"CAST($widenedTypeOk AS INT) AS widened_type_ok",
-      s"CAST($v2TypeInt AS INT) AS v2_type_int",
-      s"CAST($narrowRefused AS INT) AS narrow_refused",
-      s"CAST($crossRefused AS INT) AS cross_refused")
+      flag("widened_type_ok", widenedTypeOk), flag("v2_type_int", v2TypeInt),
+      flag("narrow_refused", narrowRefused), flag("cross_refused", crossRefused))
   }
 
   /** `dsv2_add_column_default`: ADD COLUMN ... DEFAULT with
@@ -257,13 +207,9 @@ object LedgerLifecycle {
     * has neither column. DuckDB recomputes the whole digest from the
     * fixture. */
   def addColumnDefault(spark: SparkSession, sfDir: String): DataFrame = {
-    initCatalog(spark)
     val g = tag(sfDir)
-    val t = s"graft_cat.dflt.cust_$g"
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.dflt")
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    deleteRecursively(s"$catalogRoot/dflt/cust_$g")
-    spark.sql(s"CREATE TABLE $t (ckey BIGINT, bal_c BIGINT)")         // v1
+    val t = catalogTable(spark, "dflt", "cust", sfDir,
+      "(ckey BIGINT, bal_c BIGINT)").name                             // v1
     graft.io.Tables.customer(spark, sfDir)
       .createOrReplaceTempView(s"dflt_base_$g")
     spark.sql(s"""INSERT INTO $t
@@ -279,13 +225,12 @@ object LedgerLifecycle {
         WHERE bal_c < 0""")                                           // v5
     // explicit NULL in a file that HAS the column stays NULL
     spark.sql(s"INSERT INTO $t VALUES (99000001, 42, 'vip', NULL)")   // v6
-    val preEvoCols =
-      if (spark.sql(s"SELECT * FROM $t VERSION AS OF 2").columns.toSeq
-        == Seq("ckey", "bal_c")) 1 else 0
+    val preEvoCols = spark.sql(s"SELECT * FROM $t VERSION AS OF 2")
+      .columns.toSeq == Seq("ckey", "bal_c")
     spark.sql(s"ALTER TABLE $t RENAME COLUMN segment TO seg")         // v7
-    val renameKeeps = if (spark.sql(
+    val renameKeeps = spark.sql(
       s"SELECT count(*) AS n FROM $t WHERE seg = 'unassigned'")
-      .head.getLong(0) > 0) 1 else 0
+      .head.getLong(0) > 0
     spark.table(t).selectExpr("count(*) AS n_total",
         "CAST(sum(bal_c) AS BIGINT) AS sum_bal",
         "CAST(sum(CASE WHEN seg = 'unassigned' THEN 1 ELSE 0 END) AS BIGINT)" +
@@ -295,9 +240,8 @@ object LedgerLifecycle {
         "CAST(sum(bonus_c) AS BIGINT) AS sum_bonus",
         "CAST(count(*) - count(bonus_c) AS BIGINT) AS n_bonus_null")
       .selectExpr("n_total", "sum_bal", "n_unassigned", "n_vip",
-        "sum_bonus", "n_bonus_null",
-        s"CAST($preEvoCols AS INT) AS pre_evo_two_cols",
-        s"CAST($renameKeeps AS INT) AS rename_keeps_default")
+        "sum_bonus", "n_bonus_null", flag("pre_evo_two_cols", preEvoCols),
+        flag("rename_keeps_default", renameKeeps))
   }
 
   val addColumnDefaultOracle: String =
@@ -342,34 +286,25 @@ object LedgerLifecycle {
     * still reads identically through time travel (compaction is a
     * commit, not a rewrite of history). */
   def compaction(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ledger_opt_${tag(sfDir)}"
-    deleteRecursively(dir)
+    val t = scratch(spark, "opt", sfDir)
     val cust = graft.io.Tables.customer(spark, sfDir).selectExpr(
       "CAST(c_custkey AS BIGINT) AS c_custkey", "c_name",
       "CAST(round(c_acctbal * 100) AS BIGINT) AS bal_c")
     (0 until 10).foreach { i =>
-      cust.filter(col("c_custkey") % 10 === i).repartition(2)
-        .write.format(ledger).option("path", dir)
-        .mode(if (i == 0) "overwrite" else "append").save()
+      t.write(cust.filter(col("c_custkey") % 10 === i).repartition(2),
+        if (i == 0) "overwrite" else "append")
     }
-    val preVersion = LedgerSink.currentVersion(Paths.get(dir))
-    val (nb, na) = LedgerMaintenance.optimize(spark, dir, 64L << 20)
-    def digest(df: DataFrame): DataFrame =
-      df.agg(count(lit(1)).as("n_rows"),
-        sum(col("bal_c")).as("bal_sum"),
-        sum(col("c_custkey")).as("key_sum"))
-    val live = digest(spark.read.format(ledger).option("path", dir).load())
-    val pre = digest(spark.read.format(ledger).option("path", dir)
-      .option("versionAsOf", preVersion.toString).load())
-      .selectExpr("n_rows AS p_n", "bal_sum AS p_bal", "key_sum AS p_key")
-    live.crossJoin(broadcast(pre))
-      .selectExpr(
-        s"CAST($nb AS INT) AS files_before",
-        s"CAST($na AS INT) AS files_after",
+    val preVersion = LedgerSink.currentVersion(t.root)
+    val (nb, na) = LedgerMaintenance.optimize(spark, t.dir, 64L << 20)
+    val pre = digest(t.read("versionAsOf" -> preVersion.toString), "pre",
+      "bal_c" -> "bal", "c_custkey" -> "key")
+    t.read().selectExpr("count(*) AS n_rows", "sum(bal_c) AS bal_sum",
+        "sum(c_custkey) AS key_sum")
+      .crossJoin(broadcast(pre))
+      .selectExpr(intCol("files_before", nb), intCol("files_after", na),
         "n_rows", "bal_sum", "key_sum",
-        "CAST(CASE WHEN n_rows = p_n AND bal_sum = p_bal AND key_sum = p_key" +
-          " THEN 1 ELSE 0 END AS INT) AS old_version_intact")
+        "CAST(CASE WHEN n_rows = n_pre AND bal_sum = bal_pre" +
+          " AND key_sum = key_pre THEN 1 ELSE 0 END AS INT) AS old_version_intact")
   }
 
   val compactionOracle: String =
@@ -404,10 +339,7 @@ object LedgerLifecycle {
     * `customer`, the (data-dependent) commit count the oracle derives
     * the same way, and exact invariant flags. */
   def commitVolume(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ledger_cvol_${tag(sfDir)}"
-    deleteRecursively(dir)
-    val root = Paths.get(dir)
+    val t = scratch(spark, "cvol", sfDir)
     val cust = graft.io.Tables.customer(spark, sfDir).selectExpr(
       "CAST(c_custkey AS BIGINT) AS ckey",
       "CAST(round(c_acctbal * 100) AS BIGINT) AS bal_c")
@@ -418,30 +350,27 @@ object LedgerLifecycle {
     val staged = graft.ops.Checkpoints.cut(
       cust.withColumn("b", pmod(col("ckey"), lit(nCommits.toLong))))
     def commitBatch(i: Int): Unit =
-      staged.where(col("b") === i).drop("b").coalesce(1)
-        .write.format(ledger).option("path", dir)
-        .mode(if (i == 0) "overwrite" else "append").save()
+      t.write(staged.where(col("b") === i).drop("b").coalesce(1),
+        if (i == 0) "overwrite" else "append")
     (0 until nCommits - 1).foreach(commitBatch)
     // input digest, COLLECTED pre-maintenance: a lazy frame would
     // re-read the table after the maintenance below and make
     // live_intact vacuously true
     val preRow = staged
       .selectExpr("count(*)", "sum(bal_c)", "sum(ckey)").head
-    val (nb, na) = LedgerMaintenance.optimize(spark, dir, 64L << 20)
+    val (nb, na) = LedgerMaintenance.optimize(spark, t.dir, 64L << 20)
     commitBatch(nCommits - 1) // the through-the-window commit
-    val expired = LedgerRefs.expireVersions(root, keepLast = 1)
-    val expiredAllPre = if (expired == (1 until nCommits)) 1 else 0
-    val reclaimed = LedgerSink.vacuum(root, olderThanMillis = 0L).size
-    spark.read.format(ledger).option("path", dir).load()
+    val expired = LedgerRefs.expireVersions(t.root, keepLast = 1)
+    val reclaimed = LedgerSink.vacuum(t.root, olderThanMillis = 0L).size
+    t.read()
       .selectExpr("count(*) AS n_rows", "sum(bal_c) AS bal_sum",
         "sum(ckey) AS key_sum")
       .selectExpr(
-        "n_rows", "bal_sum", "key_sum",
-        s"CAST($nCommits AS INT) AS commits",
-        s"CAST(${if (nb == nCommits - 1) 1 else 0} AS INT) AS one_file_per_commit",
-        s"CAST(${if (na < nb) 1 else 0} AS INT) AS compacted",
-        s"CAST($expiredAllPre AS INT) AS expired_all_pre",
-        s"CAST(${if (reclaimed == nCommits - 1) 1 else 0} AS INT) AS vacuum_reclaimed_all",
+        "n_rows", "bal_sum", "key_sum", intCol("commits", nCommits),
+        flag("one_file_per_commit", nb == nCommits - 1),
+        flag("compacted", na < nb),
+        flag("expired_all_pre", expired == (1 until nCommits)),
+        flag("vacuum_reclaimed_all", reclaimed == nCommits - 1),
         s"CAST(CASE WHEN n_rows = ${preRow.getLong(0)}L" +
           s" AND bal_sum = ${preRow.getLong(1)}L" +
           s" AND key_sum = ${preRow.getLong(2)}L" +
@@ -484,9 +413,7 @@ object LedgerLifecycle {
     * duplicated delta pair fails the gate. */
   def cdcIncrementalDedup(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.llm.Dedup
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ledger_cdc_${tag(sfDir)}"
-    deleteRecursively(dir)
+    val t = scratch(spark, "cdc", sfDir)
     // one materialization feeds all three commits' narrow filters (the
     // commitVolume staging-buffer pattern, r14): the text-heavy
     // documents scan ran once per commit before
@@ -500,14 +427,11 @@ object LedgerLifecycle {
       // commit just multiplies manifest entries, bloom sidecars and
       // CDC open() calls — measured as the gate's hypersensitivity to
       // ambient host I/O (r11 driver record 21.6 s vs 7.6 s steady).
-      docs.filter(col("b") === b).drop("b").coalesce(2)
-        .write.format(ledger).option("path", dir)
-        .mode(if (b == 0) "overwrite" else "append").save()          // v(b+1)
+      t.write(docs.filter(col("b") === b).drop("b").coalesce(2),
+        if (b == 0) "overwrite" else "append")                        // v(b+1)
     }
-    def deltaDocs(v: Int): DataFrame =
-      spark.read.format(ledger).option("path", dir)
-        .option("changesFromVersion", (v - 1).toString)
-        .option("changesToVersion", v.toString).load()
+    def deltaDocs(v: Int): DataFrame = t.read(
+      "changesFromVersion" -> (v - 1).toString, "changesToVersion" -> v.toString)
     var corpusFeats: Option[DataFrame] = None
     (1 to 3).map { v =>
       val deltaFeats = graft.ops.Checkpoints.cut(Dedup.featuresOf(deltaDocs(v)))
@@ -545,21 +469,18 @@ object LedgerLifecycle {
     * read, and admission is by range overlap, so the key need not
     * exist in any row. */
   def sortedCompaction(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ledger_srt_${tag(sfDir)}"
-    deleteRecursively(dir)
+    val t = scratch(spark, "srt", sfDir)
     val ord = graft.io.Tables.orders(spark, sfDir).selectExpr(
       "CAST(o_orderkey AS BIGINT) AS okey",
       "CAST(round(o_totalprice * 100) AS BIGINT) AS price_c",
       "o_orderpriority")
     (0 until 4).foreach { i =>
-      ord.filter(col("okey") % 4 === i).repartition(2)
-        .write.format(ledger).option("path", dir)
-        .mode(if (i == 0) "overwrite" else "append").save()
+      t.write(ord.filter(col("okey") % 4 === i).repartition(2),
+        if (i == 0) "overwrite" else "append")
     }
-    val root = Paths.get(dir)
+    val root = t.root
     val preVersion = LedgerSink.currentVersion(root)
-    val (fb, fa) = LedgerMaintenance.optimizeSorted(spark, dir, 4)
+    val (fb, fa) = LedgerMaintenance.optimizeSorted(spark, t.dir, 4)
     // probe key: the SECOND range-clustered file's min — an interior
     // key that exists in the data (sparse key spaces make the
     // metadata midpoint fall into inter-file gaps, where the sorted
@@ -575,42 +496,27 @@ object LedgerLifecycle {
     require(mins.length >= 2,
       s"sorted compaction left ${mins.length} file(s) with stats; " +
         "the interior probe key needs at least 2")
-    val key = mins(1)
-    def probePlanned(version: Option[Int]): Int = {
-      val m = LedgerSink.readManifestAt(root, version).get
-      val b = new LedgerScanBuilder(root, m.schema, version)
-      b.pushFilters(Array(EqualTo("okey", key)))
-      b.build().asInstanceOf[org.apache.spark.sql.connector.read.Batch]
-        .planInputPartitions().length
+    val probe = Array[org.apache.spark.sql.sources.Filter](EqualTo("okey", mins(1)))
+    val probeBefore = plannedFiles(root, probe, Some(preVersion))
+    val probeAfter = plannedFiles(root, probe)
+    val ranges = LedgerSink.readManifest(root).get.files
+      .flatMap(e => e.min.zip(e.max)).sortBy(_._1)
+    val disjoint = ranges.sliding(2).forall {
+      case Seq((_, hiA), (loB, _)) => hiA < loB
+      case _ => true
     }
-    val probeBefore = probePlanned(Some(preVersion))
-    val probeAfter = probePlanned(None)
-    val disjoint = {
-      val ranges = LedgerSink.readManifest(root).get.files
-        .flatMap(e => e.min.zip(e.max)).sortBy(_._1)
-      if (ranges.sliding(2).forall {
-        case Seq((_, hiA), (loB, _)) => hiA < loB
-        case _ => true
-      }) 1 else 0
-    }
-    def digest(df: DataFrame): DataFrame =
-      df.agg(count(lit(1)).as("n_rows"),
-        sum(col("price_c")).as("price_sum"),
-        sum(col("okey")).as("key_sum"))
-    val live = digest(spark.read.format(ledger).option("path", dir).load())
-    val pre = digest(spark.read.format(ledger).option("path", dir)
-      .option("versionAsOf", preVersion.toString).load())
-      .selectExpr("n_rows AS p_n", "price_sum AS p_p", "key_sum AS p_k")
-    live.crossJoin(broadcast(pre))
-      .selectExpr(
-        s"CAST($fb AS INT) AS files_before",
-        s"CAST(CASE WHEN $fa < $fb THEN 1 ELSE 0 END AS INT) AS files_reduced",
-        s"CAST($probeBefore AS INT) AS probe_files_before",
-        s"CAST($probeAfter AS INT) AS probe_files_after",
-        s"CAST($disjoint AS INT) AS ranges_disjoint",
+    val pre = digest(t.read("versionAsOf" -> preVersion.toString), "pre",
+      "price_c" -> "price", "okey" -> "key")
+    t.read().selectExpr("count(*) AS n_rows", "sum(price_c) AS price_sum",
+        "sum(okey) AS key_sum")
+      .crossJoin(broadcast(pre))
+      .selectExpr(intCol("files_before", fb), flag("files_reduced", fa < fb),
+        intCol("probe_files_before", probeBefore),
+        intCol("probe_files_after", probeAfter),
+        flag("ranges_disjoint", disjoint),
         "n_rows", "price_sum", "key_sum",
-        "CAST(CASE WHEN n_rows = p_n AND price_sum = p_p AND key_sum = p_k" +
-          " THEN 1 ELSE 0 END AS INT) AS old_version_intact")
+        "CAST(CASE WHEN n_rows = n_pre AND price_sum = price_pre" +
+          " AND key_sum = key_pre THEN 1 ELSE 0 END AS INT) AS old_version_intact")
   }
 
   val sortedCompactionOracle: String =
@@ -641,17 +547,11 @@ object LedgerLifecycle {
     * fact-to-fact join that moves both tables and one that moves
     * nothing. */
   def spjJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    initCatalog(spark)
     val g = tag(sfDir)
-    val tc = s"graft_cat.spj.cust_$g"
-    val ts = s"graft_cat.spj.supp_$g"
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.spj")
-    spark.sql(s"DROP TABLE IF EXISTS $tc")
-    spark.sql(s"DROP TABLE IF EXISTS $ts")
-    spark.sql(s"""CREATE TABLE $tc (c_custkey BIGINT, nk BIGINT,
-      bal_c BIGINT) PARTITIONED BY (nk)""")
-    spark.sql(s"""CREATE TABLE $ts (s_suppkey BIGINT, nk_s BIGINT,
-      acct_c BIGINT) PARTITIONED BY (nk_s)""")
+    val tc = catalogTable(spark, "spj", "cust", sfDir,
+      "(c_custkey BIGINT, nk BIGINT, bal_c BIGINT) PARTITIONED BY (nk)").name
+    val ts = catalogTable(spark, "spj", "supp", sfDir,
+      "(s_suppkey BIGINT, nk_s BIGINT, acct_c BIGINT) PARTITIONED BY (nk_s)").name
     graft.io.Tables.customer(spark, sfDir)
       .createOrReplaceTempView(s"spj_cust_$g")
     graft.io.Tables.supplier(spark, sfDir)
@@ -666,16 +566,13 @@ object LedgerLifecycle {
       FROM spj_supp_$g""")
     val j = spark.table(tc)
       .join(spark.table(ts), expr("nk = nk_s"), "full_outer")
-    val plan = j.queryExecution.executedPlan.toString
-    val spj = if (!plan.contains("Exchange") &&
-      plan.contains("SortMergeJoin")) 1 else 0
     j.groupBy(expr("coalesce(nk, nk_s)").as("nation"))
       .agg(count(col("c_custkey")).as("n_cust"),
         count(col("s_suppkey")).as("n_supp"),
         sum(col("bal_c")).as("bal_sum"),
         sum(col("acct_c")).as("acct_sum"))
       .selectExpr("nation", "n_cust", "n_supp", "bal_sum", "acct_sum",
-        s"CAST($spj AS INT) AS spj_no_shuffle")
+        flag("spj_no_shuffle", shuffleFreeSmj(j)))
       .orderBy("nation")
   }
 
@@ -711,37 +608,31 @@ object LedgerLifecycle {
     * or sum. */
   def streamReplication(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val g = tag(sfDir)
-    val base = System.getProperty("java.io.tmpdir")
-    val srcDir = s"$base/graft_ledger_repl_src_$g"
-    val dstDir = s"$base/graft_ledger_repl_dst_$g"
-    val ckpt = s"$base/graft_ledger_repl_ckpt_$g"
-    Seq(srcDir, dstDir, ckpt).foreach(deleteRecursively)
+    val src = scratch(spark, "repl_src", sfDir)
+    val dst = scratch(spark, "repl_dst", sfDir)
+    val ckpt = scratch(spark, "repl_ckpt", sfDir).dir
     val cust = graft.io.Tables.customer(spark, sfDir).selectExpr(
       "CAST(c_custkey AS BIGINT) AS c_custkey", "c_mktsegment",
       "CAST(round(c_acctbal * 100) AS BIGINT) AS bal_c")
     (0 until 3).foreach { i =>                                 // v1..v3
-      cust.filter(col("c_custkey") % 3 === i).repartition(2)
-        .write.format(ledger).option("path", srcDir)
-        .mode(if (i == 0) "overwrite" else "append").save()
+      src.write(cust.filter(col("c_custkey") % 3 === i).repartition(2),
+        if (i == 0) "overwrite" else "append")
     }
-    LedgerMaintenance.optimize(spark, srcDir, 64L << 20): Unit // v4
+    LedgerMaintenance.optimize(spark, src.dir, 64L << 20): Unit // v4
     def drain(): Unit = {
-      val q = spark.readStream.format(ledger).option("path", srcDir)
-        .option("skipChangeCommits", "true")
-        .option("maxFilesPerTrigger", "3")
-        .load()
-        .writeStream.format(ledger).option("path", dstDir)
+      val q = src.readStream("skipChangeCommits" -> "true",
+          "maxFilesPerTrigger" -> "3")
+        .writeStream.format(ledger).option("path", dst.dir)
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
     drain()
-    cust.filter(col("c_custkey") % 7 === 0)                    // v5
-      .selectExpr("c_custkey + 1000000 AS c_custkey", "c_mktsegment", "bal_c")
-      .write.format(ledger).option("path", srcDir).mode("append").save()
+    src.write(cust.filter(col("c_custkey") % 7 === 0)          // v5
+      .selectExpr("c_custkey + 1000000 AS c_custkey", "c_mktsegment", "bal_c"),
+      "append")
     drain()
-    spark.read.format(ledger).option("path", dstDir).load()
+    dst.read()
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n"),
         sum(col("bal_c")).as("bal_sum"),
@@ -768,20 +659,16 @@ object LedgerLifecycle {
     *     planned with NO Exchange on either side, resolved through
     *     the catalog's empty-namespace `bucket` function. */
   def transformPartitioning(spark: SparkSession, sfDir: String): DataFrame = {
-    initCatalog(spark)
     val g = tag(sfDir)
     val dayMs = 86400000L
-    val tb = s"graft_cat.txf.ord_b_$g"
-    val tb2 = s"graft_cat.txf.ord_b2_$g"
-    val td = s"graft_cat.txf.ord_d_$g"
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.txf")
-    Seq(tb, tb2, td).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    spark.sql(s"""CREATE TABLE $tb (okey BIGINT, price_c BIGINT)
-      PARTITIONED BY (bucket(8, okey))""")
-    spark.sql(s"""CREATE TABLE $tb2 (okey2 BIGINT, price2_c BIGINT)
-      PARTITIONED BY (bucket(8, okey2))""")
-    spark.sql(s"""CREATE TABLE $td (okey BIGINT, ts BIGINT, price_c BIGINT)
-      PARTITIONED BY (days(ts))""")
+    val b = catalogTable(spark, "txf", "ord_b", sfDir,
+      "(okey BIGINT, price_c BIGINT) PARTITIONED BY (bucket(8, okey))")
+    val tb = b.name
+    val tb2 = catalogTable(spark, "txf", "ord_b2", sfDir,
+      "(okey2 BIGINT, price2_c BIGINT) PARTITIONED BY (bucket(8, okey2))").name
+    val d = catalogTable(spark, "txf", "ord_d", sfDir,
+      "(okey BIGINT, ts BIGINT, price_c BIGINT) PARTITIONED BY (days(ts))")
+    val td = d.name
     graft.io.Tables.orders(spark, sfDir).selectExpr(
         "CAST(o_orderkey AS BIGINT) AS okey",
         "CAST(round(o_totalprice * 100) AS BIGINT) AS price_c",
@@ -792,45 +679,28 @@ object LedgerLifecycle {
     spark.sql(s"INSERT INTO $tb2 SELECT okey, price_c FROM txf_ord_$g")
     spark.sql(s"INSERT INTO $td SELECT okey, ts, price_c FROM txf_ord_$g")
 
-    // count planned FILES, not partitions: with v2 bucketing on, the
-    // scan groups files by partition tuple for SPJ, so the partition
-    // count is the distinct-tuple count, not the admitted-file count
-    def planned(dir: java.nio.file.Path,
-        fs: Array[org.apache.spark.sql.sources.Filter]): Int = {
-      val m = LedgerSink.readManifest(dir).get
-      val b = new LedgerScanBuilder(dir, m.schema)
-      b.pushFilters(fs)
-      b.build().asInstanceOf[org.apache.spark.sql.connector.read.Batch]
-        .planInputPartitions().map {
-          case g: LedgerFileGroupPartition => g.files.length
-          case _ => 1
-        }.sum
-    }
     def tupleFiles(dir: java.nio.file.Path, want: Set[String]): Int =
       LedgerSink.readManifest(dir).get.files
         .count(_.partVals.exists(v => want(v.head)))
-    val dirB = Paths.get(catalogRoot, "txf", s"ord_b_$g")
-    val dirD = Paths.get(catalogRoot, "txf", s"ord_d_$g")
+    val (dirB, dirD) = (b.root, d.root)
     val totalB = LedgerSink.readManifest(dirB).get.files.length
     val totalD = LedgerSink.readManifest(dirD).get.files.length
     // bucket point probe: okey = 7 → bucket 7 only. okey is ALSO the
     // stats column, so the expected set composes BOTH prunings: the
     // matching bucket tuple AND a [min,max] range covering the key —
     // the planner must admit exactly that set, no more, no less
-    val pB = planned(dirB, Array(EqualTo("okey", 7L)))
+    val pB = plannedFiles(dirB, Array(EqualTo("okey", 7L)))
     val wantB = LedgerSink.readManifest(dirB).get.files.count(e =>
       e.partVals.exists(_.head == "7") &&
         e.min.exists(_ <= 7L) && e.max.exists(_ >= 7L))
-    val bktExact = if (pB == wantB && pB < totalB) 1 else 0
+    val bktExact = pB == wantB && pB < totalB
     // days point probe: ts inside day 3 → day-3 files only
-    val pDEq = planned(dirD, Array(EqualTo("ts", 3 * dayMs + 12345L)))
-    val dEqExact = if (pDEq == tupleFiles(dirD, Set("3")) && pDEq < totalD) 1 else 0
+    val pDEq = plannedFiles(dirD, Array(EqualTo("ts", 3 * dayMs + 12345L)))
+    val dEqExact = pDEq == tupleFiles(dirD, Set("3")) && pDEq < totalD
     // days range probe: [day2, day4) → exactly days 2..3
-    val pDR = planned(dirD, Array(
-      org.apache.spark.sql.sources.GreaterThanOrEqual("ts", 2 * dayMs),
-      org.apache.spark.sql.sources.LessThan("ts", 4 * dayMs)))
-    val dRngExact =
-      if (pDR == tupleFiles(dirD, Set("2", "3")) && pDR < totalD) 1 else 0
+    val pDR = plannedFiles(dirD, Array(
+      GreaterThanOrEqual("ts", 2 * dayMs), LessThan("ts", 4 * dayMs)))
+    val dRngExact = pDR == tupleFiles(dirD, Set("2", "3")) && pDR < totalD
 
     // SPJ over bucket co-partitioning: force the join shape (no
     // broadcast) so the verdict is about partitioning, not size
@@ -842,9 +712,7 @@ object LedgerLifecycle {
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       val j = spark.table(tb).join(spark.table(tb2), expr("okey = okey2"))
-      val plan = j.queryExecution.executedPlan.toString
-      val spj = if (!plan.contains("Exchange") &&
-        plan.contains("SortMergeJoin")) 1 else 0
+      val spj = shuffleFreeSmj(j)
       val joinDigest = j.agg(count(lit(1)).as("n_join"),
         sum(col("price_c")).as("price_join"))
       val rngDigest = spark.sql(
@@ -853,10 +721,8 @@ object LedgerLifecycle {
             FROM $td WHERE ts >= ${2 * dayMs} AND ts < ${4 * dayMs}""")
       rngDigest.crossJoin(broadcast(joinDigest))
         .selectExpr("n_rng", "price_rng", "key_rng", "n_join", "price_join",
-          s"CAST($bktExact AS INT) AS bkt_probe_exact",
-          s"CAST($dEqExact AS INT) AS day_probe_exact",
-          s"CAST($dRngExact AS INT) AS day_range_exact",
-          s"CAST($spj AS INT) AS spj_no_shuffle")
+          flag("bkt_probe_exact", bktExact), flag("day_probe_exact", dEqExact),
+          flag("day_range_exact", dRngExact), flag("spj_no_shuffle", spj))
     } finally prev.foreach { case (k, v) =>
       v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
@@ -895,45 +761,31 @@ object LedgerLifecycle {
     * lines). DuckDB recomputes every digest from the fixture with the
     * same predicate. */
   def morDelete(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ledger_mor_${tag(sfDir)}"
-    deleteRecursively(dir)
-    graft.io.Tables.orders(spark, sfDir).selectExpr(
+    val t = scratch(spark, "mor", sfDir)
+    t.write(graft.io.Tables.orders(spark, sfDir).selectExpr(
         "CAST(o_orderkey AS BIGINT) AS okey",
-        "CAST(round(o_totalprice * 100) AS BIGINT) AS price_c")
-      .write.format(ledger).option("path", dir).mode("overwrite").save() // v1
-    val nDel = LedgerMaintenance.deleteMoR(spark, dir, Array(
-      org.apache.spark.sql.sources.LessThan("price_c", 10000000L)))      // v2
-    val root = Paths.get(dir)
-    val dvPresent =
-      if (LedgerSink.readManifest(root).get.files.exists(_.dv.nonEmpty)) 1
-      else 0
-    def digest(df: DataFrame, p: String): DataFrame =
-      df.selectExpr("count(*) AS n", "sum(price_c) AS p", "sum(okey) AS k")
-        .selectExpr(s"n AS n_$p", s"p AS price_$p", s"k AS key_$p")
+        "CAST(round(o_totalprice * 100) AS BIGINT) AS price_c"), "overwrite") // v1
+    val nDel = LedgerMaintenance.deleteMoR(spark, t.dir,
+      Array(LessThan("price_c", 10000000L)))                             // v2
+    val dvPresent = LedgerSink.readManifest(t.root).get.files.exists(_.dv.nonEmpty)
     // the "live" digest reads versionAsOf=2 — the DV-carrying snapshot
     // — NOT the head: DataFrames are lazy, and a head read would
     // execute after the OPTIMIZE below, silently planning against the
     // compacted (DV-free) manifest and making opt_intact tautological.
     // Pinning v2 forces the scan to MERGE the deletion vectors, so a
     // skipped or extra ordinal in fileRows poisons these sums.
-    val live = digest(spark.read.format(ledger).option("path", dir)
-      .option("versionAsOf", "2").load(), "live")
-    val tt = digest(spark.read.format(ledger).option("path", dir)
-      .option("versionAsOf", "1").load(), "v1")
-    LedgerMaintenance.optimize(spark, dir): Unit                         // v3
-    val dvCleared =
-      if (LedgerSink.readManifest(root).get.files.forall(_.dv.isEmpty)) 1
-      else 0
-    val opt = digest(
-      spark.read.format(ledger).option("path", dir).load(), "opt")
+    val live = digest(t.read("versionAsOf" -> "2"), "live",
+      "price_c" -> "price", "okey" -> "key")
+    val tt = digest(t.read("versionAsOf" -> "1"), "v1",
+      "price_c" -> "price", "okey" -> "key")
+    LedgerMaintenance.optimize(spark, t.dir): Unit                       // v3
+    val dvCleared = LedgerSink.readManifest(t.root).get.files.forall(_.dv.isEmpty)
+    val opt = digest(t.read(), "opt", "price_c" -> "price", "okey" -> "key")
     live.crossJoin(broadcast(tt)).crossJoin(broadcast(opt))
-      .selectExpr(
-        s"CAST($nDel AS BIGINT) AS n_deleted",
+      .selectExpr(longCol("n_deleted", nDel),
         "n_live", "price_live", "key_live",
         "n_v1", "price_v1", "key_v1",
-        s"CAST($dvPresent AS INT) AS dv_present",
-        s"CAST($dvCleared AS INT) AS dv_cleared",
+        flag("dv_present", dvPresent), flag("dv_cleared", dvCleared),
         "CAST(CASE WHEN n_opt = n_live AND price_opt = price_live " +
           "AND key_opt = key_live THEN 1 ELSE 0 END AS INT) AS opt_intact")
   }
@@ -968,28 +820,18 @@ object LedgerLifecycle {
     * the commit (every matched row appears exactly once as delete(old)
     * and once as insert(new) — the multiset diff pairs them). */
   def morUpdate(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ledger_moru_${tag(sfDir)}"
-    deleteRecursively(dir)
-    graft.io.Tables.orders(spark, sfDir).selectExpr(
+    val t = scratch(spark, "moru", sfDir)
+    t.write(graft.io.Tables.orders(spark, sfDir).selectExpr(
         "CAST(o_orderkey AS BIGINT) AS okey",
-        "CAST(round(o_totalprice * 100) AS BIGINT) AS price_c")
-      .write.format(ledger).option("path", dir).mode("overwrite").save() // v1
-    val nUpd = LedgerMaintenance.updateMoR(spark, dir, Array(
-      org.apache.spark.sql.sources.LessThan("price_c", 10000000L)),
+        "CAST(round(o_totalprice * 100) AS BIGINT) AS price_c"), "overwrite") // v1
+    val nUpd = LedgerMaintenance.updateMoR(spark, t.dir,
+      Array(LessThan("price_c", 10000000L)),
       Map("price_c" -> "price_c + 111"))                                 // v2
-    val oneCommit =
-      if (LedgerSink.currentVersion(Paths.get(dir)) == 2) 1 else 0
-    val live = spark.read.format(ledger).option("path", dir).load()
-      .selectExpr("count(*) AS n_live", "sum(price_c) AS price_live",
-        "sum(okey) AS key_live")
-    val tt = spark.read.format(ledger).option("path", dir)
-      .option("versionAsOf", "1").load()
-      .selectExpr("count(*) AS n_v1", "sum(price_c) AS price_v1")
-    val feed = spark.read.format(ledger).option("path", dir)
-      .option("readChangeFeed", "true")
-      .option("changesFromVersion", "1")
-      .option("changesToVersion", "2").load()
+    val oneCommit = LedgerSink.currentVersion(t.root) == 2
+    val live = digest(t.read(), "live", "price_c" -> "price", "okey" -> "key")
+    val tt = digest(t.read("versionAsOf" -> "1"), "v1", "price_c" -> "price")
+    val feed = t.read("readChangeFeed" -> "true",
+        "changesFromVersion" -> "1", "changesToVersion" -> "2")
       .selectExpr(
         "sum(CASE WHEN _change_type = 'insert' THEN 1 ELSE 0 END) AS n_ins",
         "sum(CASE WHEN _change_type = 'delete' THEN 1 ELSE 0 END) AS n_del",
@@ -998,11 +840,10 @@ object LedgerLifecycle {
         "sum(CASE WHEN _change_type = 'delete' THEN price_c ELSE 0 END)" +
           " AS price_del")
     live.crossJoin(broadcast(tt)).crossJoin(broadcast(feed))
-      .selectExpr(
-        s"CAST($nUpd AS BIGINT) AS n_updated",
+      .selectExpr(longCol("n_updated", nUpd),
         "n_live", "price_live", "key_live", "n_v1", "price_v1",
         "n_ins", "n_del", "price_ins", "price_del",
-        s"CAST($oneCommit AS INT) AS one_commit")
+        flag("one_commit", oneCommit))
   }
 
   val morUpdateOracle: String =
@@ -1039,12 +880,9 @@ object LedgerLifecycle {
     * verdict: pre-state ∪ inserts ∖ deletes must equal the post-state
     * exactly (exceptAll — multiset semantics). */
   def cdcRowLevel(spark: SparkSession, sfDir: String): DataFrame = {
-    initCatalog(spark)
     val g = tag(sfDir)
-    val t = s"graft_cat.cdf.cust_$g"
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.cdf")
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, bal BIGINT)")              // v1
+    val ct = catalogTable(spark, "cdf", "cust", sfDir, "(k BIGINT, bal BIGINT)") // v1
+    val t = ct.name
     graft.io.Tables.customer(spark, sfDir).selectExpr(
         "CAST(c_custkey AS BIGINT) AS k",
         "CAST(round(c_acctbal * 100) AS BIGINT) AS bal")
@@ -1058,11 +896,8 @@ object LedgerLifecycle {
           ) src ON dst.k = src.k
           WHEN MATCHED THEN UPDATE SET bal = src.nb
           WHEN NOT MATCHED THEN INSERT (k, bal) VALUES (src.k, src.nb)""") // v3
-    val dir = s"$catalogRoot/cdf/cust_$g"
-    val feed = spark.read.format(ledger).option("path", dir)
-      .option("readChangeFeed", "true")
-      .option("changesFromVersion", "2")
-      .option("changesToVersion", "3").load()
+    val feed = ct.read("readChangeFeed" -> "true",
+      "changesFromVersion" -> "2", "changesToVersion" -> "3")
     feed.createOrReplaceTempView(s"cdf_feed_$g")
     val byType = spark.sql(
       s"""SELECT
@@ -1078,12 +913,10 @@ object LedgerLifecycle {
     val reconstructed = pre
       .unionByName(feed.filter("_change_type = 'insert'").select("k", "bal"))
       .exceptAll(feed.filter("_change_type = 'delete'").select("k", "bal"))
-    val ok =
-      if (reconstructed.exceptAll(post).isEmpty &&
-          post.exceptAll(reconstructed).isEmpty) 1
-      else 0
+    val ok = reconstructed.exceptAll(post).isEmpty &&
+      post.exceptAll(reconstructed).isEmpty
     byType.selectExpr("n_ins", "n_del", "k_ins", "k_del",
-      "bal_ins", "bal_del", s"CAST($ok AS INT) AS reconstructs")
+      "bal_ins", "bal_del", flag("reconstructs", ok))
   }
 
   val cdcRowLevelOracle: String =
@@ -1118,37 +951,30 @@ object LedgerLifecycle {
     * resume delta each poison a sum. */
   def cdfStreamReplication(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val g = tag(sfDir)
-    val base = System.getProperty("java.io.tmpdir")
-    val srcDir = s"$base/graft_ledger_cdfr_src_$g"
-    val dstDir = s"$base/graft_ledger_cdfr_dst_$g"
-    val ckpt = s"$base/graft_ledger_cdfr_ckpt_$g"
-    Seq(srcDir, dstDir, ckpt).foreach(deleteRecursively)
+    val src = scratch(spark, "cdfr_src", sfDir)
+    val dst = scratch(spark, "cdfr_dst", sfDir)
+    val ckpt = scratch(spark, "cdfr_ckpt", sfDir).dir
     val cust = graft.io.Tables.customer(spark, sfDir).selectExpr(
       "CAST(c_custkey AS BIGINT) AS k",
       "CAST(round(c_acctbal * 100) AS BIGINT) AS bal")
-    cust.write.format(ledger).option("path", srcDir)
-      .mode("overwrite").save()                                     // v1
-    LedgerMaintenance.deleteMoR(spark, srcDir, Array(
-      org.apache.spark.sql.sources.LessThan("bal", 100000L))): Unit // v2
-    cust.filter(col("k") % 5 === 0)
-      .selectExpr("k + 100000000 AS k", "bal")
-      .write.format(ledger).option("path", srcDir)
-      .mode("append").save()                                        // v3
+    src.write(cust, "overwrite")                                    // v1
+    LedgerMaintenance.deleteMoR(spark, src.dir,
+      Array(LessThan("bal", 100000L))): Unit                        // v2
+    src.write(cust.filter(col("k") % 5 === 0)
+      .selectExpr("k + 100000000 AS k", "bal"), "append")           // v3
     def drain(): Unit = {
-      val q = spark.readStream.format(ledger).option("path", srcDir)
-        .option("readChangeFeed", "true").load()
-        .writeStream.format(ledger).option("path", dstDir)
+      val q = src.readStream("readChangeFeed" -> "true")
+        .writeStream.format(ledger).option("path", dst.dir)
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
     drain()
-    LedgerMaintenance.updateMoR(spark, srcDir, Array(
-      org.apache.spark.sql.sources.GreaterThanOrEqual("bal", 100000L)),
+    LedgerMaintenance.updateMoR(spark, src.dir,
+      Array(GreaterThanOrEqual("bal", 100000L)),
       Map("bal" -> "bal + 7")): Unit                                // v4
     drain()
-    spark.read.format(ledger).option("path", dstDir).load()
+    dst.read()
       .groupBy(col("_change_type"))
       .agg(count(lit(1)).as("n"), sum(col("k")).as("k_sum"),
         sum(col("bal")).as("bal_sum"))
@@ -1210,14 +1036,12 @@ object LedgerLifecycle {
     *     may have held the extreme) and fall back to a real scan —
     *     the honesty boundary, folded as a fact, not a comment. */
   def aggPushdown(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ledger_aggp_${tag(sfDir)}"
-    deleteRecursively(dir)
+    val t = scratch(spark, "aggp", sfDir)
     graft.io.Tables.customer(spark, sfDir).selectExpr(
         "CAST(c_custkey AS BIGINT) AS ckey",
         "CAST(round(c_acctbal * 100) AS BIGINT) AS bal_c",
         "CAST(c_nationkey AS BIGINT) AS nk")
-      .write.format(ledger).option("path", dir)
+      .write.format(ledger).option("path", t.dir)
       .partitionBy("nk").mode("overwrite").save()                      // v1
     def pushedPlan(df: DataFrame): Boolean =
       df.queryExecution.executedPlan.toString.contains("graft-ledger-agg")
@@ -1226,28 +1050,23 @@ object LedgerLifecycle {
     // DV-carrying manifest (refusing min/max pushdown and changing the
     // digest). Version pinning keeps the grouped profile the full
     // pre-delete table — and proves pushdown works through time travel.
-    val grouped = spark.read.format(ledger).option("path", dir)
-      .option("versionAsOf", "1").load()
+    val grouped = t.read("versionAsOf" -> "1")
       .groupBy("nk").agg(count(lit(1)).as("n"),
         min("ckey").as("key_lo"), max("ckey").as("key_hi"))
-    val groupedPushed = if (pushedPlan(grouped)) 1 else 0
+    val groupedPushed = pushedPlan(grouped)
     // merge-on-read delete, then the DV-honesty pair
-    val nDel = LedgerMaintenance.deleteMoR(spark, dir, Array(
-      org.apache.spark.sql.sources.LessThan("bal_c", 0L)))             // v2
-    val cnt = spark.read.format(ledger).option("path", dir).load()
-      .selectExpr("count(*) AS n_after_del")
-    val cntPushed = if (pushedPlan(cnt)) 1 else 0
-    val mn = spark.read.format(ledger).option("path", dir).load()
-      .selectExpr("min(ckey) AS key_lo_after_del")
-    val minRefused = if (!pushedPlan(mn)) 1 else 0
+    val nDel = LedgerMaintenance.deleteMoR(spark, t.dir,
+      Array(LessThan("bal_c", 0L)))                                    // v2
+    val cnt = t.read().selectExpr("count(*) AS n_after_del")
+    val cntPushed = pushedPlan(cnt)
+    val mn = t.read().selectExpr("min(ckey) AS key_lo_after_del")
+    val minRefused = !pushedPlan(mn)
     grouped
       .crossJoin(broadcast(cnt)).crossJoin(broadcast(mn))
       .selectExpr("nk", "n", "key_lo", "key_hi",
-        "n_after_del", "key_lo_after_del",
-        s"CAST($nDel AS BIGINT) AS n_deleted",
-        s"CAST($groupedPushed AS INT) AS grouped_pushed",
-        s"CAST($cntPushed AS INT) AS count_pushed_dv",
-        s"CAST($minRefused AS INT) AS minmax_refused")
+        "n_after_del", "key_lo_after_del", longCol("n_deleted", nDel),
+        flag("grouped_pushed", groupedPushed),
+        flag("count_pushed_dv", cntPushed), flag("minmax_refused", minRefused))
       .orderBy("nk")
   }
 
@@ -1268,15 +1087,12 @@ object LedgerLifecycle {
     * doc_id per cluster; DuckDB replays it relationally. Folded verdicts:
     * `files_preserved`, `dv_present`, `one_commit`. */
   def dedupKillListMoR(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.llm.Gen.{DuckD, SparkD}
-    initCatalog(spark)
+    import graft.llm.Gen.SparkD
     val g = tag(sfDir)
-    val t = s"graft_cat.rlo.corpus_$g"
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.rlo")
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (doc_id BIGINT, fp STRING, n_chars BIGINT)" +
-      " TBLPROPERTIES ('graft.ledger.rowLevelMode'='mor')")
-    val tDir = Paths.get(catalogRoot, "rlo", s"corpus_$g")
+    val ct = catalogTable(spark, "rlo", "corpus", sfDir,
+      "(doc_id BIGINT, fp STRING, n_chars BIGINT)" +
+        " TBLPROPERTIES ('graft.ledger.rowLevelMode'='mor')")
+    val (t, tDir) = (ct.name, ct.root)
     graft.io.Tables.documents(spark, sfDir)
       .selectExpr("doc_id",
         s"md5(substr(${graft.llm.Dedup.normExpr(SparkD)}, 1, 64)) AS fp",
@@ -1297,17 +1113,15 @@ object LedgerLifecycle {
     } finally saved.foreach(v =>
       spark.conf.set("graft.ledger.rowLevelMode", v))
     val post = LedgerSink.readManifest(tDir).get
-    val preserved =
-      if (post.files.map(_.file).toSet == pre) 1 else 0
-    val dvPresent = if (post.files.exists(_.dv.nonEmpty)) 1 else 0
-    val oneCommit =
-      if (LedgerSink.currentVersion(tDir) == preVersion + 1) 1 else 0
+    val preserved = post.files.map(_.file).toSet == pre
+    val dvPresent = post.files.exists(_.dv.nonEmpty)
+    val oneCommit = LedgerSink.currentVersion(tDir) == preVersion + 1
     spark.sql(s"SELECT count(*) AS n_docs, sum(doc_id) AS id_sum," +
       s" sum(n_chars) AS chars_sum," +
       s" count(DISTINCT fp) AS n_fps," +
-      s" CAST($preserved AS INT) AS files_preserved," +
-      s" CAST($dvPresent AS INT) AS dv_present," +
-      s" CAST($oneCommit AS INT) AS one_commit FROM $t")
+      s" ${flag("files_preserved", preserved)}," +
+      s" ${flag("dv_present", dvPresent)}," +
+      s" ${flag("one_commit", oneCommit)} FROM $t")
   }
 
   def dedupKillListMoROracle: String = {
@@ -1329,6 +1143,29 @@ object LedgerLifecycle {
        FROM keep WHERE doc_id = canon"""
   }
 
+  /** The upsert streams' source: three versions, one micro-batch each
+    * — every customer, then re-valued k%3 keys, then re-valued k%5 keys
+    * plus shifted k%11 inserts, each row stamped with its version `v`.
+    * Returns the customer projection it was cut from. */
+  private def upsertBatches(spark: SparkSession, sfDir: String,
+      src: PathTable): DataFrame = {
+    val cust = graft.io.Tables.customer(spark, sfDir).selectExpr(
+      "CAST(c_custkey AS BIGINT) AS ckey",
+      "CAST(round(c_acctbal * 100) AS BIGINT) AS bal_c")
+    src.write(cust.selectExpr("ckey", "bal_c AS val", "CAST(1 AS BIGINT) AS v")
+      .coalesce(1), "overwrite")                                      // v1
+    src.write(cust.filter("ckey % 3 = 0")
+      .selectExpr("ckey", "bal_c + 100000 AS val", "CAST(2 AS BIGINT) AS v")
+      .coalesce(1), "append")                                         // v2
+    src.write(cust.filter("ckey % 5 = 0")
+      .selectExpr("ckey", "bal_c + 900000 AS val", "CAST(3 AS BIGINT) AS v")
+      .unionByName(cust.filter("ckey % 11 = 0").selectExpr(
+        "ckey + 10000000 AS ckey", "CAST(555 AS BIGINT) AS val",
+        "CAST(3 AS BIGINT) AS v"))
+      .coalesce(1), "append")                                         // v3
+    cust
+  }
+
   /** `dsv2_stream_upsert`: the canonical streaming-upsert pattern
     * (Delta's `foreachBatch` + MERGE): a ledger STREAM (versions as
     * offsets, one version per micro-batch via `maxFilesPerTrigger=1`
@@ -1344,40 +1181,17 @@ object LedgerLifecycle {
     * rewritten by later batches). */
   def streamUpsert(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    initCatalog(spark)
     val g = tag(sfDir)
-    val srcDir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ledger_upsrc_$g"
-    deleteRecursively(srcDir)
-    val t = s"graft_cat.rlo.stream_upsert_$g"
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.rlo")
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (ckey BIGINT, val BIGINT)")
-    val tDir = Paths.get(catalogRoot, "rlo", s"stream_upsert_$g")
-    val cust = graft.io.Tables.customer(spark, sfDir).selectExpr(
-      "CAST(c_custkey AS BIGINT) AS ckey",
-      "CAST(round(c_acctbal * 100) AS BIGINT) AS bal_c")
-    // three source versions = three micro-batches of upserts
-    cust.selectExpr("ckey", "bal_c AS val", "CAST(1 AS BIGINT) AS v")
-      .coalesce(1).write.format(ledger).option("path", srcDir)
-      .mode("overwrite").save()                                       // v1
-    cust.filter("ckey % 3 = 0")
-      .selectExpr("ckey", "bal_c + 100000 AS val", "CAST(2 AS BIGINT) AS v")
-      .coalesce(1).write.format(ledger).option("path", srcDir)
-      .mode("append").save()                                          // v2
-    cust.filter("ckey % 5 = 0")
-      .selectExpr("ckey", "bal_c + 900000 AS val", "CAST(3 AS BIGINT) AS v")
-      .unionByName(cust.filter("ckey % 11 = 0").selectExpr(
-        "ckey + 10000000 AS ckey", "CAST(555 AS BIGINT) AS val",
-        "CAST(3 AS BIGINT) AS v"))
-      .coalesce(1).write.format(ledger).option("path", srcDir)
-      .mode("append").save()                                          // v3
-    val ckpt = s"$srcDir/_checkpoint"
+    val src = scratch(spark, "upsrc", sfDir)
+    val ct = catalogTable(spark, "rlo", "stream_upsert", sfDir,
+      "(ckey BIGINT, val BIGINT)")
+    val (t, tDir) = (ct.name, ct.root)
+    upsertBatches(spark, sfDir, src): Unit
+    val ckpt = s"${src.dir}/_checkpoint"
     val baseFiles = scala.collection.mutable.Set.empty[String]
     try {
       spark.conf.set("graft.ledger.rowLevelMode", "mor")
-      val q = spark.readStream.format(ledger).option("path", srcDir)
-        .option("maxFilesPerTrigger", "1").load()
+      val q = src.readStream("maxFilesPerTrigger" -> "1")
         .writeStream.option("checkpointLocation", ckpt)
         .foreachBatch { (batch: DataFrame, _: Long) =>
           batch.createOrReplaceTempView(s"up_batch_$g")
@@ -1402,13 +1216,11 @@ object LedgerLifecycle {
     // unset, not set-to-cow: leaving "cow" SET would override
     // table-PROPERTY routing for everything else on this session
     val post = LedgerSink.readManifest(tDir).get
-    val morDvs = if (post.files.exists(_.dv.nonEmpty)) 1 else 0
-    val baseKept =
-      if (baseFiles.toSet.subsetOf(post.files.map(_.file).toSet)) 1 else 0
+    val morDvs = post.files.exists(_.dv.nonEmpty)
+    val baseKept = baseFiles.toSet.subsetOf(post.files.map(_.file).toSet)
     spark.sql(s"SELECT count(*) AS n_rows, sum(val) AS val_sum," +
-      s" sum(ckey) AS key_sum," +
-      s" CAST($morDvs AS INT) AS mor_dvs," +
-      s" CAST($baseKept AS INT) AS base_files_kept FROM $t")
+      s" sum(ckey) AS key_sum, ${flag("mor_dvs", morDvs)}," +
+      s" ${flag("base_files_kept", baseKept)} FROM $t")
   }
 
   val streamUpsertOracle: String =
@@ -1447,37 +1259,14 @@ object LedgerLifecycle {
     * OPTIMIZE materializing them without changing the digest. */
   def streamEqualityUpsert(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val g = tag(sfDir)
-    val srcDir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ledger_equpsrc_$g"
-    val tDir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ledger_equptgt_$g"
-    deleteRecursively(srcDir)
-    deleteRecursively(tDir)
-    val cust = graft.io.Tables.customer(spark, sfDir).selectExpr(
-      "CAST(c_custkey AS BIGINT) AS ckey",
-      "CAST(round(c_acctbal * 100) AS BIGINT) AS bal_c")
-    // three source versions = three micro-batches of upserts
-    cust.selectExpr("ckey", "bal_c AS val", "CAST(1 AS BIGINT) AS v")
-      .coalesce(1).write.format(ledger).option("path", srcDir)
-      .mode("overwrite").save()                                       // v1
-    cust.filter("ckey % 3 = 0")
-      .selectExpr("ckey", "bal_c + 100000 AS val", "CAST(2 AS BIGINT) AS v")
-      .coalesce(1).write.format(ledger).option("path", srcDir)
-      .mode("append").save()                                          // v2
-    cust.filter("ckey % 5 = 0")
-      .selectExpr("ckey", "bal_c + 900000 AS val", "CAST(3 AS BIGINT) AS v")
-      .unionByName(cust.filter("ckey % 11 = 0").selectExpr(
-        "ckey + 10000000 AS ckey", "CAST(555 AS BIGINT) AS val",
-        "CAST(3 AS BIGINT) AS v"))
-      .coalesce(1).write.format(ledger).option("path", srcDir)
-      .mode("append").save()                                          // v3
+    val src = scratch(spark, "equpsrc", sfDir)
+    val tgt = scratch(spark, "equptgt", sfDir)
+    val tDir = tgt.dir
+    val cust = upsertBatches(spark, sfDir, src)
     // empty target: schema-only manifest (version 1)
-    cust.limit(0).selectExpr("ckey", "bal_c AS val")
-      .write.format(ledger).option("path", tDir).mode("overwrite").save()
-    val ckpt = s"$srcDir/_checkpoint_eq"
-    val q = spark.readStream.format(ledger).option("path", srcDir)
-      .option("maxFilesPerTrigger", "1").load()
+    tgt.write(cust.limit(0).selectExpr("ckey", "bal_c AS val"), "overwrite")
+    val ckpt = s"${src.dir}/_checkpoint_eq"
+    val q = src.readStream("maxFilesPerTrigger" -> "1")
       .writeStream.option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // last image per key within the batch, then one-commit upsert
@@ -1492,32 +1281,26 @@ object LedgerLifecycle {
       }
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-    val root = Paths.get(tDir)
+    val root = tgt.root
     val cur = LedgerSink.currentVersion(root)
-    val oneCommitPerBatch = if (cur == 4) 1 else 0  // create + 3 batches
-    val noRewrites = if ((2 to cur).forall { v =>
+    val oneCommitPerBatch = cur == 4  // create + 3 batches
+    val noRewrites = (2 to cur).forall { v =>
       LedgerSink.readManifestAt(root, Some(v - 1)).get.files.map(_.file)
         .toSet.subsetOf(
           LedgerSink.readManifestAt(root, Some(v)).get.files.map(_.file).toSet)
-    }) 1 else 0
-    val eqdActive =
-      if (LedgerSink.readManifest(root).get.eqDeletes.nonEmpty) 1 else 0
-    def digest(): org.apache.spark.sql.Row =
-      spark.read.format(ledger).option("path", tDir).load()
-        .selectExpr("count(*)", "sum(val)", "sum(ckey)").collect()(0)
-    val pre = digest()
+    }
+    val eqdActive = LedgerSink.readManifest(root).get.eqDeletes.nonEmpty
+    def liveRow() =
+      digest(tgt.read(), "live", "val" -> "val", "ckey" -> "key").collect()(0)
+    val pre = liveRow()
     LedgerMaintenance.optimize(spark, tDir): Unit
     val m2 = LedgerSink.readManifest(root).get
-    val optimizedClean = if (digest() == pre && m2.eqDeletes.isEmpty &&
-      m2.files.map(_.rows).sum == pre.getLong(0)) 1 else 0
-    spark.sql(
-      s"""SELECT CAST(${pre.getLong(0)} AS BIGINT) AS n_rows,
-            CAST(${pre.getLong(1)} AS BIGINT) AS val_sum,
-            CAST(${pre.getLong(2)} AS BIGINT) AS key_sum,
-            CAST($oneCommitPerBatch AS INT) AS one_commit_per_batch,
-            CAST($noRewrites AS INT) AS no_rewrites,
-            CAST($eqdActive AS INT) AS eqd_active,
-            CAST($optimizedClean AS INT) AS optimized_clean""")
+    val optimizedClean = liveRow() == pre && m2.eqDeletes.isEmpty &&
+      m2.files.map(_.rows).sum == pre.getLong(0)
+    spark.sql("SELECT " + (longCols(pre, "n_rows", "val_sum", "key_sum") ++ Seq(
+      flag("one_commit_per_batch", oneCommitPerBatch),
+      flag("no_rewrites", noRewrites), flag("eqd_active", eqdActive),
+      flag("optimized_clean", optimizedClean))).mkString(", "))
   }
 
   val streamEqualityUpsertOracle: String =
@@ -1554,39 +1337,24 @@ object LedgerLifecycle {
     * replays — correctness never depends on the bloom because every
     * filter stays residual. */
   def bloomSkipping(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ledger_bloom_${tag(sfDir)}"
-    deleteRecursively(dir)
-    graft.io.Tables.customer(spark, sfDir).selectExpr(
+    val t = scratch(spark, "bloom", sfDir)
+    t.write(graft.io.Tables.customer(spark, sfDir).selectExpr(
         "c_name AS name",
         "CAST(c_custkey AS BIGINT) AS ckey",
         "CAST(round(c_acctbal * 100) AS BIGINT) AS bal_c")
-      .repartition(16)
-      .write.format(ledger).option("path", dir).mode("overwrite").save()
+      .repartition(16), "overwrite")
     val probe = graft.io.Tables.customer(spark, sfDir)
       .agg(min("c_name")).head().getString(0)
-    val root = Paths.get(dir)
-    val m = LedgerSink.readManifest(root).get
-    def planned(fs: Array[org.apache.spark.sql.sources.Filter]): Int = {
-      val sb = new LedgerScanBuilder(root, m.schema)
-      sb.pushFilters(fs): Unit
-      sb.build().toBatch.planInputPartitions().length
-    }
-    val total = m.files.length
-    val hit = planned(Array(org.apache.spark.sql.sources.EqualTo(
-      "name", probe)))
-    val miss = planned(Array(org.apache.spark.sql.sources.EqualTo(
-      "name", "zzz_no_such_customer")))
-    val pruned = if (hit * 4 <= total) 1 else 0
-    val absentZero = if (miss == 0) 1 else 0
-    spark.read.format(ledger).option("path", dir).load()
+    val total = LedgerSink.readManifest(t.root).get.files.length
+    val hit = plannedFiles(t.root, Array(EqualTo("name", probe)))
+    val miss = plannedFiles(t.root, Array(EqualTo("name", "zzz_no_such_customer")))
+    t.read()
       .filter(col("name") === lit(probe))
       .agg(count(lit(1)).as("n_match"),
         sum(col("ckey")).as("key_sum"),
         sum(col("bal_c")).as("bal_sum"))
       .selectExpr("n_match", "key_sum", "bal_sum",
-        s"CAST($pruned AS INT) AS probe_pruned",
-        s"CAST($absentZero AS INT) AS absent_zero")
+        flag("probe_pruned", hit * 4 <= total), flag("absent_zero", miss == 0))
   }
 
   val bloomSkippingOracle: String =
@@ -1634,41 +1402,27 @@ object LedgerLifecycle {
     * overwritten files (>0), the expired version fails fast, and
     * keepLast=0 is refused. */
   def restoreExpire(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ledger_ref_${tag(sfDir)}"
-    deleteRecursively(dir)
-    val root = Paths.get(dir)
+    val t = scratch(spark, "ref", sfDir)
+    val root = t.root
     val base = graft.io.Tables.customer(spark, sfDir).selectExpr(
       "CAST(c_custkey AS BIGINT) AS ckey",
       "CAST(round(c_acctbal * 100) AS BIGINT) AS bal_c")
-    base.write.format(ledger).option("path", dir)
-      .mode("overwrite").save()                                       // v1
-    base.where("bal_c >= 0").write.format(ledger).option("path", dir)
-      .mode("overwrite").save()                                       // v2
+    t.write(base, "overwrite")                                        // v1
+    t.write(base.where("bal_c >= 0"), "overwrite")                    // v2
     LedgerRefs.createTag(root, "audit"): Unit                        // → v2
-    base.where("bal_c < 0").write.format(ledger).option("path", dir)
-      .mode("append").save()                                          // v3
+    t.write(base.where("bal_c < 0"), "append")                        // v3
     val vRestore = LedgerRefs.restore(root, 2)                        // v4
-    def digest(df: DataFrame, p: String): DataFrame =
-      df.selectExpr("count(*) AS n", "sum(bal_c) AS b", "sum(ckey) AS k")
-        .selectExpr(s"n AS n_$p", s"b AS bal_$p", s"k AS key_$p")
-    val restored = digest(spark.read.format(ledger).option("path", dir)
-      .option("versionAsOf", vRestore.toString).load(), "r")
-    val tagRows = spark.read.format(ledger).option("path", dir)
-      .option("tagAsOf", "audit").load()
-    val vAsOf2 = spark.read.format(ledger).option("path", dir)
-      .option("versionAsOf", "2").load()
+    val balKey = Seq("bal_c" -> "bal", "ckey" -> "key")
+    val restored = digest(t.read("versionAsOf" -> vRestore.toString), "r", balKey: _*)
+    val tagRows = t.read("tagAsOf" -> "audit")
+    val vAsOf2 = t.read("versionAsOf" -> "2")
     val tagMatches =
-      if (tagRows.exceptAll(vAsOf2).isEmpty && vAsOf2.exceptAll(tagRows).isEmpty)
-        1 else 0
+      tagRows.exceptAll(vAsOf2).isEmpty && vAsOf2.exceptAll(tagRows).isEmpty
     LedgerRefs.restore(root, 3): Unit                                 // v5
-    val fwd = digest(
-      spark.read.format(ledger).option("path", dir).load(), "f")
-    val expired = LedgerRefs.expireVersions(root, keepLast = 1)
+    val fwd = digest(t.read(), "f", balKey: _*)
     // protected: v4 (newest archive) + v2 (tag); v3's archive expires
     // with v1 — its row-set lives on as the current (v5) manifest
-    val expiredOk =
-      if (expired == Seq(1, 3)) 1 else 0
+    val expiredOk = LedgerRefs.expireVersions(root, keepLast = 1) == Seq(1, 3)
     // In-flight-writer guard: a YOUNG unreferenced staged file is
     // exactly what a concurrent writer's pre-commit stage looks like
     // (files land in _staging BEFORE the commit lock); the default
@@ -1680,33 +1434,23 @@ object LedgerLifecycle {
       .resolve("inflight-part-0-99-0.ledger")
     java.nio.file.Files.write(inflight,
       "9999|9999|9999\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val youngStagedKept =
-      if (LedgerSink.vacuum(root).isEmpty &&
-        java.nio.file.Files.exists(inflight)) 1 else 0
-    val vacuumed = LedgerSink.vacuum(root, olderThanMillis = 0L)
-    val vacuumedGt0 = if (vacuumed.nonEmpty) 1 else 0
+    val youngStagedKept = LedgerSink.vacuum(root).isEmpty &&
+      java.nio.file.Files.exists(inflight)
+    val vacuumedGt0 = LedgerSink.vacuum(root, olderThanMillis = 0L).nonEmpty
     val expiredUnreadable =
-      try {
-        spark.read.format(ledger).option("path", dir)
-          .option("versionAsOf", "1").load(): Unit
-        0
-      } catch { case _: IllegalArgumentException => 1 }
+      fails[IllegalArgumentException](t.read("versionAsOf" -> "1"))
     val keepGuard =
-      try { LedgerRefs.expireVersions(root, 0): Unit; 0 }
-      catch { case _: IllegalArgumentException => 1 }
+      fails[IllegalArgumentException](LedgerRefs.expireVersions(root, 0))
     // tagged v2 must still read exactly after expire+vacuum — its
     // archive was protected, so its files stayed referenced
-    val tagAfter = digest(spark.read.format(ledger).option("path", dir)
-      .option("tagAsOf", "audit").load(), "t")
+    val tagAfter = digest(t.read("tagAsOf" -> "audit"), "t", balKey: _*)
     restored.crossJoin(broadcast(fwd)).crossJoin(broadcast(tagAfter))
       .selectExpr("n_r", "bal_r", "key_r", "n_f", "bal_f", "key_f",
-        "n_t", "bal_t", "key_t",
-        s"CAST($tagMatches AS INT) AS tag_matches",
-        s"CAST($expiredOk AS INT) AS expired_ok",
-        s"CAST($youngStagedKept AS INT) AS young_staged_kept",
-        s"CAST($vacuumedGt0 AS INT) AS vacuumed_gt0",
-        s"CAST($expiredUnreadable AS INT) AS expired_unreadable",
-        s"CAST($keepGuard AS INT) AS keeplast_guard")
+        "n_t", "bal_t", "key_t", flag("tag_matches", tagMatches),
+        flag("expired_ok", expiredOk), flag("young_staged_kept", youngStagedKept),
+        flag("vacuumed_gt0", vacuumedGt0),
+        flag("expired_unreadable", expiredUnreadable),
+        flag("keeplast_guard", keepGuard))
   }
 
   val restoreExpireOracle: String =
@@ -1741,66 +1485,43 @@ object LedgerLifecycle {
     * staged manifest gone); a second staged commit aborts cleanly
     * (live untouched, staged files deleted from disk). */
   def wapPublish(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ledger_wap_${tag(sfDir)}"
-    deleteRecursively(dir)
-    val root = Paths.get(dir)
+    val t = scratch(spark, "wap", sfDir)
+    val root = t.root
     val all = graft.io.Tables.orders(spark, sfDir).selectExpr(
       "CAST(o_orderkey AS BIGINT) AS okey",
       "CAST(round(o_totalprice * 100) AS BIGINT) AS price_c")
-    all.where("price_c >= 10000000").write.format(ledger)
-      .option("path", dir).mode("overwrite").save()                   // v1
+    t.write(all.where("price_c >= 10000000"), "overwrite")            // v1
     val vBefore = LedgerSink.currentVersion(root)
-    all.where("price_c < 10000000").write.format(ledger)
-      .option("path", dir).option("wapId", "w1").mode("append").save()
-    val stageNoVersion =
-      if (LedgerSink.currentVersion(root) == vBefore) 1 else 0
+    t.write(all.where("price_c < 10000000"), "append", "wapId" -> "w1")
+    val stageNoVersion = LedgerSink.currentVersion(root) == vBefore
     // the live-while-staged and audit digests must be EAGER (collected
     // before publish) — a lazy plan would read the post-publish
     // manifest and make the stage-isolation check tautological
-    def digestRow(df: DataFrame): org.apache.spark.sql.Row =
-      df.selectExpr("count(*) AS n", "sum(price_c) AS pr", "sum(okey) AS k")
-        .collect()(0)
-    val liveStaged = digestRow(
-      spark.read.format(ledger).option("path", dir).load())
-    val audit = digestRow(spark.read.format(ledger).option("path", dir)
-      .option("wapId", "w1").load())
+    val priceKey = Seq("price_c" -> "price", "okey" -> "key")
+    val liveStaged = digest(t.read(), "base", priceKey: _*).collect()(0)
+    val audit = digest(t.read("wapId" -> "w1"), "a", priceKey: _*).collect()(0)
     // horizon 0 so this pins REFERENCE protection (staged manifests
     // keep their files live), not the age guard
-    val vacuumKeeps =
-      if (LedgerSink.vacuum(root, olderThanMillis = 0L).isEmpty) 1 else 0
+    val vacuumKeeps = LedgerSink.vacuum(root, olderThanMillis = 0L).isEmpty
     val vPub = LedgerRefs.publishWap(root, "w1")
-    val pubOneVersion = if (vPub == vBefore + 1) 1 else 0
-    val pubDigest = spark.read.format(ledger).option("path", dir).load()
-      .selectExpr("count(*) AS n_p", "sum(price_c) AS price_p",
-        "sum(okey) AS key_p")
-    val wapGone = if (LedgerSink.listWaps(root).isEmpty) 1 else 0
+    val pubDigest = digest(t.read(), "p", priceKey: _*)
+    val wapGone = LedgerSink.listWaps(root).isEmpty
     // stage a second commit, then ABORT it: live untouched, its
     // staged files really deleted (vacuum finds nothing either)
-    all.limit(100).write.format(ledger)
-      .option("path", dir).option("wapId", "w2").mode("append").save()
+    t.write(all.limit(100), "append", "wapId" -> "w2")
     val w2Files = LedgerSink.readWap(root, "w2")
       .props(LedgerSink.WapNewFilesProp).split(",").toSeq.filter(_.nonEmpty)
     LedgerRefs.abortWap(root, "w2")
-    val abortClean =
-      if (w2Files.nonEmpty && w2Files.forall(f =>
-        !java.nio.file.Files.exists(root.resolve(f))) &&
-        LedgerSink.listWaps(root).isEmpty &&
-        LedgerSink.currentVersion(root) == vPub) 1 else 0
-    pubDigest
-      .selectExpr(
-        s"CAST(${liveStaged.getLong(0)} AS BIGINT) AS n_base",
-        s"CAST(${liveStaged.getLong(1)} AS BIGINT) AS price_base",
-        s"CAST(${liveStaged.getLong(2)} AS BIGINT) AS key_base",
-        s"CAST(${audit.getLong(0)} AS BIGINT) AS n_a",
-        s"CAST(${audit.getLong(1)} AS BIGINT) AS price_a",
-        s"CAST(${audit.getLong(2)} AS BIGINT) AS key_a",
-        "n_p", "price_p", "key_p",
-        s"CAST($stageNoVersion AS INT) AS stage_no_version",
-        s"CAST($vacuumKeeps AS INT) AS vacuum_keeps_staged",
-        s"CAST($pubOneVersion AS INT) AS publish_one_version",
-        s"CAST($wapGone AS INT) AS wap_gone",
-        s"CAST($abortClean AS INT) AS abort_clean")
+    val abortClean = w2Files.nonEmpty && w2Files.forall(f =>
+      !java.nio.file.Files.exists(root.resolve(f))) &&
+      LedgerSink.listWaps(root).isEmpty && LedgerSink.currentVersion(root) == vPub
+    pubDigest.selectExpr(
+      longCols(liveStaged, "n_base", "price_base", "key_base") ++
+      longCols(audit, "n_a", "price_a", "key_a") ++ Seq(
+        "n_p", "price_p", "key_p", flag("stage_no_version", stageNoVersion),
+        flag("vacuum_keeps_staged", vacuumKeeps),
+        flag("publish_one_version", vPub == vBefore + 1),
+        flag("wap_gone", wapGone), flag("abort_clean", abortClean)): _*)
   }
 
   val wapPublishOracle: String =
@@ -1836,64 +1557,36 @@ object LedgerLifecycle {
     * null-passes rule) and land; a null KEY trips NOT NULL. DuckDB
     * replays the surviving ingest exactly. */
   def checkConstraints(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ledger_chk_${tag(sfDir)}"
-    deleteRecursively(dir)
-    val root = Paths.get(dir)
-    val ledgerName = ledger
+    val t = scratch(spark, "chk", sfDir)
     val base = graft.io.Tables.customer(spark, sfDir).selectExpr(
       "coalesce(CAST(c_custkey AS BIGINT), CAST(0 AS BIGINT)) AS ckey",
       "CAST(round(c_acctbal * 100) AS BIGINT) AS bal_c")
-    base.write.format(ledgerName).option("path", dir)
-      .mode("overwrite").save()                                       // v1
-    LedgerConstraints.addCheck(spark, dir, "bal_floor",
+    t.write(base, "overwrite")                                        // v1
+    LedgerConstraints.addCheck(spark, t.dir, "bal_floor",
       "bal_c >= -100000000")                                          // v2
-    val addRejected =
-      try {
-        LedgerConstraints.addCheck(spark, dir, "bal_pos", "bal_c >= 0"); 0
-      } catch { case _: IllegalStateException => 1 }
+    val addRejected = fails[IllegalStateException](
+      LedgerConstraints.addCheck(spark, t.dir, "bal_pos", "bal_c >= 0"))
     // in-bound append: the non-negative rows again, keys offset to
     // stay distinguishable in the replay
-    base.where("bal_c >= 0")
-      .selectExpr("ckey + 10000000 AS ckey", "bal_c")
-      .write.format(ledgerName).option("path", dir).mode("append").save()
-    def digest(p: String): DataFrame =
-      spark.read.format(ledgerName).option("path", dir).load()
-        .selectExpr("count(*) AS n", "sum(bal_c) AS b", "sum(ckey) AS k")
-        .selectExpr(s"n AS n_$p", s"b AS bal_$p", s"k AS key_$p")
-    val mid = digest("mid").collect()(0)
-    val checkRejected =
-      try {
-        base.limit(50).selectExpr("ckey", "bal_c - 200000000 AS bal_c")
-          .write.format(ledgerName).option("path", dir).mode("append").save()
-        0
-      } catch { case e: Exception =>
-        if (exceptionChainContains(e, "CHECK constraint 'bal_floor'")) 1
-        else throw e
-      }
-    val notNullRejected =
-      try {
-        base.limit(50).selectExpr("CAST(NULL AS BIGINT) AS ckey", "bal_c")
-          .write.format(ledgerName).option("path", dir).mode("append").save()
-        0
-      } catch { case e: Exception =>
-        if (exceptionChainContains(e, "NOT NULL violation")) 1 else throw e
-      }
-    val afterFail = digest("af").collect()(0)
-    val failedAtomic =
-      if (afterFail.getLong(0) == mid.getLong(0) &&
-        afterFail.getLong(1) == mid.getLong(1) &&
-        afterFail.getLong(2) == mid.getLong(2)) 1 else 0
+    t.write(base.where("bal_c >= 0")
+      .selectExpr("ckey + 10000000 AS ckey", "bal_c"), "append")
+    val balKey = Seq("bal_c" -> "bal", "ckey" -> "key")
+    val mid = digest(t.read(), "mid", balKey: _*).collect()(0)
+    val checkRejected = refuses("CHECK constraint 'bal_floor'")(t.write(
+      base.limit(50).selectExpr("ckey", "bal_c - 200000000 AS bal_c"), "append"))
+    val notNullRejected = refuses("NOT NULL violation")(t.write(
+      base.limit(50).selectExpr("CAST(NULL AS BIGINT) AS ckey", "bal_c"), "append"))
+    val afterFail = digest(t.read(), "af", balKey: _*).collect()(0)
+    val failedAtomic = (0 until 3).forall(i => afterFail.getLong(i) == mid.getLong(i))
     // NULL passes CHECK: 5 smallest keys with NULL balances land
-    base.orderBy("ckey").limit(5)
-      .selectExpr("ckey + 20000000 AS ckey", "CAST(NULL AS BIGINT) AS bal_c")
-      .write.format(ledgerName).option("path", dir).mode("append").save()
-    digest("fin")
+    t.write(base.orderBy("ckey").limit(5)
+      .selectExpr("ckey + 20000000 AS ckey", "CAST(NULL AS BIGINT) AS bal_c"),
+      "append")
+    digest(t.read(), "fin", balKey: _*)
       .selectExpr("n_fin", "bal_fin", "key_fin",
-        s"CAST($addRejected AS INT) AS add_rejected",
-        s"CAST($checkRejected AS INT) AS check_rejected",
-        s"CAST($notNullRejected AS INT) AS notnull_rejected",
-        s"CAST($failedAtomic AS INT) AS failed_atomic")
+        flag("add_rejected", addRejected), flag("check_rejected", checkRejected),
+        flag("notnull_rejected", notNullRejected),
+        flag("failed_atomic", failedAtomic))
   }
 
   /** `dsv2_spec_evolution`: partition-spec evolution
@@ -1908,61 +1601,44 @@ object LedgerLifecycle {
     * travel to the unpartitioned era, and the post-OPTIMIZE digest
     * (bins never mix specs). */
   def specEvolution(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ledger_spev_${tag(sfDir)}"
-    deleteRecursively(dir)
-    val root = Paths.get(dir)
+    val t = scratch(spark, "spev", sfDir)
+    val root = t.root
     val base = graft.io.Tables.customer(spark, sfDir).selectExpr(
       "CAST(c_custkey AS BIGINT) AS ckey",
       "CAST(c_nationkey AS BIGINT) AS nk",
       "CAST(round(c_acctbal * 100) AS BIGINT) AS bal_c")
-    base.repartition(4).write.format(ledger).option("path", dir)
-      .mode("overwrite").save()                                       // v1
+    t.write(base.repartition(4), "overwrite")                         // v1
     val newSpecId =
-      LedgerMaintenance.alterPartitionSpec(dir, Seq(("nk", "identity", 0)))
-    base.selectExpr("ckey + 10000000 AS ckey", "nk", "bal_c")
-      .write.format(ledger).option("path", dir).mode("append").save() // v3
+      LedgerMaintenance.alterPartitionSpec(t.dir, Seq(("nk", "identity", 0)))
+    t.write(base.selectExpr("ckey + 10000000 AS ckey", "nk", "bal_c"), "append") // v3
     val probeNk = base.agg(min("nk")).head().getLong(0)
     val m = LedgerSink.readManifest(root).get
     val oldFiles = m.files.count(e => m.specOf(e) != m.specId)
     val newMatching = m.files.count(e => m.specOf(e) == m.specId &&
       e.partVals.contains(Seq(probeNk.toString)))
-    val sb = new LedgerScanBuilder(root, m.schema)
-    sb.pushFilters(Array(
-      org.apache.spark.sql.sources.EqualTo("nk", probeNk))): Unit
-    val planned = sb.build().toBatch.planInputPartitions().length
-    val plannedExact =
-      if (oldFiles > 0 && newMatching > 0 &&
-        planned == oldFiles + newMatching) 1 else 0
-    val mixedDetected =
-      if (!m.specHomogeneous && newSpecId == 1) 1 else 0
-    val metaDeleteRefused =
-      if (!new LedgerTable(root, m.schema).canDeleteWhere(Array[
-        org.apache.spark.sql.sources.Filter](
-        org.apache.spark.sql.sources.EqualTo("nk", probeNk)))) 1 else 0
-    def digest(df: DataFrame, p: String): DataFrame =
-      df.selectExpr("count(*) AS n", "sum(bal_c) AS b", "sum(ckey) AS k")
-        .selectExpr(s"n AS n_$p", s"b AS bal_$p", s"k AS key_$p")
-    val v1 = digest(spark.read.format(ledger).option("path", dir)
-      .option("versionAsOf", "1").load(), "v1")
+    val nkProbe = Array[org.apache.spark.sql.sources.Filter](EqualTo("nk", probeNk))
+    val planned = plannedFiles(root, nkProbe)
+    val plannedExact = oldFiles > 0 && newMatching > 0 &&
+      planned == oldFiles + newMatching
+    val mixedDetected = !m.specHomogeneous && newSpecId == 1
+    val metaDeleteRefused = !new LedgerTable(root, m.schema).canDeleteWhere(nkProbe)
+    val balKey = Seq("bal_c" -> "bal", "ckey" -> "key")
+    val v1 = digest(t.read("versionAsOf" -> "1"), "v1", balKey: _*)
     val filesBefore = m.files.length
-    LedgerMaintenance.optimize(spark, dir): Unit                      // v4
+    LedgerMaintenance.optimize(spark, t.dir): Unit                    // v4
     val mOpt = LedgerSink.readManifest(root).get
-    val optCompacted = if (mOpt.files.length < filesBefore &&
+    val optCompacted = mOpt.files.length < filesBefore &&
       mOpt.files.forall(e => mOpt.specFields(mOpt.specOf(e)).length ==
-        e.partVals.map(_.length).getOrElse(0))) 1 else 0
-    val full = digest(
-      spark.read.format(ledger).option("path", dir).load(), "all")
-    val probe = digest(spark.read.format(ledger).option("path", dir)
-      .load().where(s"nk = $probeNk"), "probe")
+        e.partVals.map(_.length).getOrElse(0))
+    val full = digest(t.read(), "all", balKey: _*)
+    val probe = digest(t.read().where(s"nk = $probeNk"), "probe", balKey: _*)
     full.crossJoin(broadcast(probe)).crossJoin(broadcast(v1))
       .selectExpr("n_all", "bal_all", "key_all",
         "n_probe", "bal_probe", "key_probe",
-        "n_v1", "bal_v1", "key_v1",
-        s"CAST($plannedExact AS INT) AS planned_exact",
-        s"CAST($mixedDetected AS INT) AS mixed_detected",
-        s"CAST($metaDeleteRefused AS INT) AS metadelete_refused",
-        s"CAST($optCompacted AS INT) AS opt_spec_intact")
+        "n_v1", "bal_v1", "key_v1", flag("planned_exact", plannedExact),
+        flag("mixed_detected", mixedDetected),
+        flag("metadelete_refused", metaDeleteRefused),
+        flag("opt_spec_intact", optCompacted))
   }
 
   val specEvolutionOracle: String =
@@ -2003,10 +1679,8 @@ object LedgerLifecycle {
     * as exact snapshots and drops the log, the expired version fails
     * fast, and vacuum reclaims nothing (appends orphan no file). */
   def metadataLog(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ledger_mlog_${tag(sfDir)}"
-    deleteRecursively(dir)
-    val root = Paths.get(dir)
+    val t = scratch(spark, "mlog", sfDir)
+    val root = t.root
     // one materialization feeds v1 and every append's narrow filter
     // (the commitVolume staging-buffer pattern, r14): before this the
     // ten appends re-scanned and re-shuffled the orders source once
@@ -2016,55 +1690,32 @@ object LedgerLifecycle {
         "CAST(o_orderkey AS BIGINT) AS okey",
         "CAST(round(o_totalprice * 100) AS BIGINT) AS price_c",
         "CAST(o_orderkey AS BIGINT) % 10 AS slice"))
-    staged.drop("slice").repartition(64)
-      .write.format(ledger).option("path", dir)
-      .mode("overwrite").save()                                       // v1
+    t.write(staged.drop("slice").repartition(64), "overwrite")        // v1
     val fullBytes = java.nio.file.Files.size(root.resolve("_MANIFEST"))
     (0 until 10).foreach { i =>                                       // v2..v11
       // coalesce, not repartition: the append is one file either way,
       // and the narrow read of the staged buffer skips a shuffle
-      staged.where(s"slice = $i")
+      t.write(staged.where(s"slice = $i")
         .selectExpr(s"okey + ${(i + 1) * 1000000000L} AS okey", "price_c")
-        .coalesce(1)
-        .write.format(ledger).option("path", dir).mode("append").save()
+        .coalesce(1), "append")
     }
     val logBytes = (2 to 11).map(v =>
       java.nio.file.Files.size(root.resolve(LedgerSink.logName(v))))
-    val logSmall = if (logBytes.max * 4 < fullBytes) 1 else 0
-    val ckptRolled =
-      if (java.nio.file.Files.exists(root.resolve(
-        LedgerSink.checkpointName(1))) &&
-        LedgerSink.currentVersion(root) == 11) 1 else 0
-    def digest(df: DataFrame, p: String): DataFrame =
-      df.selectExpr("count(*) AS n", "sum(price_c) AS pr", "sum(okey) AS k")
-        .selectExpr(s"n AS n_$p", s"pr AS price_$p", s"k AS key_$p")
-    val v5 = digest(spark.read.format(ledger).option("path", dir)
-      .option("versionAsOf", "5").load(), "v5").collect()(0)
-    val expired = LedgerRefs.expireVersions(root, keepLast = 2)
-    val expiredOk = if (expired == (1 to 8)) 1 else 0
-    val vacuumEmpty =
-      if (LedgerSink.vacuum(root, olderThanMillis = 0L).isEmpty) 1 else 0
-    val v5Fails =
-      try {
-        spark.read.format(ledger).option("path", dir)
-          .option("versionAsOf", "5").load(): Unit
-        0
-      } catch { case _: IllegalArgumentException => 1 }
-    val v10 = digest(spark.read.format(ledger).option("path", dir)
-      .option("versionAsOf", "10").load(), "v10")
-    val cur = digest(
-      spark.read.format(ledger).option("path", dir).load(), "all")
-    cur.crossJoin(broadcast(v10))
-      .selectExpr("n_all", "price_all", "key_all",
-        "n_v10", "price_v10", "key_v10",
-        s"CAST(${v5.getLong(0)} AS BIGINT) AS n_v5",
-        s"CAST(${v5.getLong(1)} AS BIGINT) AS price_v5",
-        s"CAST(${v5.getLong(2)} AS BIGINT) AS key_v5",
-        s"CAST($logSmall AS INT) AS log_small",
-        s"CAST($ckptRolled AS INT) AS ckpt_rolled",
-        s"CAST($expiredOk AS INT) AS expired_ok",
-        s"CAST($vacuumEmpty AS INT) AS vacuum_empty",
-        s"CAST($v5Fails AS INT) AS v5_expired_fails")
+    val ckptRolled = java.nio.file.Files.exists(root.resolve(
+      LedgerSink.checkpointName(1))) && LedgerSink.currentVersion(root) == 11
+    val priceKey = Seq("price_c" -> "price", "okey" -> "key")
+    val v5 = digest(t.read("versionAsOf" -> "5"), "v5", priceKey: _*).collect()(0)
+    val expiredOk = LedgerRefs.expireVersions(root, keepLast = 2) == (1 to 8)
+    val vacuumEmpty = LedgerSink.vacuum(root, olderThanMillis = 0L).isEmpty
+    val v5Fails = fails[IllegalArgumentException](t.read("versionAsOf" -> "5"))
+    val v10 = digest(t.read("versionAsOf" -> "10"), "v10", priceKey: _*)
+    digest(t.read(), "all", priceKey: _*).crossJoin(broadcast(v10))
+      .selectExpr(Seq("n_all", "price_all", "key_all",
+        "n_v10", "price_v10", "key_v10") ++
+        longCols(v5, "n_v5", "price_v5", "key_v5") ++ Seq(
+        flag("log_small", logBytes.max * 4 < fullBytes),
+        flag("ckpt_rolled", ckptRolled), flag("expired_ok", expiredOk),
+        flag("vacuum_empty", vacuumEmpty), flag("v5_expired_fails", v5Fails)): _*)
   }
 
   val metadataLogOracle: String =
@@ -2110,77 +1761,53 @@ object LedgerLifecycle {
     * main moved — its drop reclaiming the staged files. DuckDB
     * recomputes every digest from the fixture. */
   def branchFastForward(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ledger_br_${tag(sfDir)}"
-    deleteRecursively(dir)
-    val root = Paths.get(dir)
+    val t = scratch(spark, "br", sfDir)
+    val root = t.root
     val all = graft.io.Tables.orders(spark, sfDir).selectExpr(
       "CAST(o_orderkey AS BIGINT) AS okey",
       "CAST(round(o_totalprice * 100) AS BIGINT) AS price_c")
-    all.where("price_c >= 10000000").write.format(ledger)
-      .option("path", dir).mode("overwrite").save()                   // v1
+    t.write(all.where("price_c >= 10000000"), "overwrite")            // v1
     val fork = LedgerRefs.createBranch(root, "audit")
     val lo = all.where("price_c < 10000000")
-    lo.write.format(ledger).option("path", dir)
-      .option("branch", "audit").mode("append").save()                // b:v2
-    lo.selectExpr("okey + 1000000000 AS okey", "price_c")
-      .write.format(ledger).option("path", dir)
-      .option("branch", "audit").mode("append").save()                // b:v3
-    def digestRow(df: DataFrame): org.apache.spark.sql.Row =
-      df.selectExpr("count(*) AS n", "sum(price_c) AS pr", "sum(okey) AS k")
-        .collect()(0)
-    val mainDuring = digestRow(
-      spark.read.format(ledger).option("path", dir).load())
-    val branchRead = digestRow(spark.read.format(ledger)
-      .option("path", dir).option("branch", "audit").load())
-    val mainUntouched =
-      if (LedgerSink.currentVersion(root) == fork) 1 else 0
-    val headOk = if (LedgerRefs.branchHead(root, "audit") == fork + 2) 1 else 0
+    t.write(lo, "append", "branch" -> "audit")                        // b:v2
+    t.write(lo.selectExpr("okey + 1000000000 AS okey", "price_c"),
+      "append", "branch" -> "audit")                                  // b:v3
+    val priceKey = Seq("price_c" -> "price", "okey" -> "key")
+    val mainDuring = digest(t.read(), "base", priceKey: _*).collect()(0)
+    val branchRead =
+      digest(t.read("branch" -> "audit"), "br", priceKey: _*).collect()(0)
+    val mainUntouched = LedgerSink.currentVersion(root) == fork
+    val headOk = LedgerRefs.branchHead(root, "audit") == fork + 2
     // horizon 0 so this pins REFERENCE protection (staged manifests
     // keep their files live), not the age guard
-    val vacuumKeeps =
-      if (LedgerSink.vacuum(root, olderThanMillis = 0L).isEmpty) 1 else 0
+    val vacuumKeeps = LedgerSink.vacuum(root, olderThanMillis = 0L).isEmpty
     val vFf = LedgerRefs.fastForward(root, "audit")
-    val ffOk = if (vFf == fork + 2 &&
-      LedgerRefs.branches(root).isEmpty) 1 else 0
+    val ffOk = vFf == fork + 2 && LedgerRefs.branches(root).isEmpty
     // a late branch races a main append: fast-forward must refuse,
     // drop must reclaim its staged files
     LedgerRefs.createBranch(root, "late"): Unit
-    all.limit(200).selectExpr("okey + 2000000000 AS okey", "price_c")
-      .write.format(ledger).option("path", dir)
-      .option("branch", "late").mode("append").save()
+    t.write(all.limit(200).selectExpr("okey + 2000000000 AS okey", "price_c"),
+      "append", "branch" -> "late")
     val lateFiles = LedgerSink.readBranchState(root, "late",
       LedgerRefs.branchFork(root, "late")).files.map(_.file).toSet --
       LedgerSink.readManifest(root).get.files.map(_.file).toSet
-    all.limit(50).selectExpr("okey + 3000000000 AS okey", "price_c")
-      .write.format(ledger).option("path", dir).mode("append").save()
-    val ffRefused =
-      try { LedgerRefs.fastForward(root, "late"): Unit; 0 }
-      catch { case _: java.util.ConcurrentModificationException => 1 }
+    t.write(all.limit(50).selectExpr("okey + 3000000000 AS okey", "price_c"),
+      "append")
+    val ffRefused = fails[java.util.ConcurrentModificationException](
+      LedgerRefs.fastForward(root, "late"))
     LedgerRefs.dropBranch(root, "late")
     LedgerSink.vacuum(root, olderThanMillis = 0L): Unit
-    val dropClean = if (lateFiles.nonEmpty && lateFiles.forall(f =>
-      !java.nio.file.Files.exists(root.resolve(f)))) 1 else 0
+    val dropClean = lateFiles.nonEmpty && lateFiles.forall(f =>
+      !java.nio.file.Files.exists(root.resolve(f)))
     // post-ff digest pinned at the fast-forwarded version (the later
     // main append must not leak in)
-    val ff = spark.read.format(ledger).option("path", dir)
-      .option("versionAsOf", vFf.toString).load()
-      .selectExpr("count(*) AS n_ff", "sum(price_c) AS price_ff",
-        "sum(okey) AS key_ff")
-    ff.selectExpr(
-      s"CAST(${mainDuring.getLong(0)} AS BIGINT) AS n_base",
-      s"CAST(${mainDuring.getLong(1)} AS BIGINT) AS price_base",
-      s"CAST(${mainDuring.getLong(2)} AS BIGINT) AS key_base",
-      s"CAST(${branchRead.getLong(0)} AS BIGINT) AS n_br",
-      s"CAST(${branchRead.getLong(1)} AS BIGINT) AS price_br",
-      s"CAST(${branchRead.getLong(2)} AS BIGINT) AS key_br",
-      "n_ff", "price_ff", "key_ff",
-      s"CAST($mainUntouched AS INT) AS main_untouched",
-      s"CAST($headOk AS INT) AS head_ok",
-      s"CAST($vacuumKeeps AS INT) AS vacuum_keeps_branch",
-      s"CAST($ffOk AS INT) AS ff_ok",
-      s"CAST($ffRefused AS INT) AS ff_refused_after_move",
-      s"CAST($dropClean AS INT) AS drop_clean")
+    digest(t.read("versionAsOf" -> vFf.toString), "ff", priceKey: _*)
+      .selectExpr(longCols(mainDuring, "n_base", "price_base", "key_base") ++
+        longCols(branchRead, "n_br", "price_br", "key_br") ++ Seq(
+        "n_ff", "price_ff", "key_ff", flag("main_untouched", mainUntouched),
+        flag("head_ok", headOk), flag("vacuum_keeps_branch", vacuumKeeps),
+        flag("ff_ok", ffOk), flag("ff_refused_after_move", ffRefused),
+        flag("drop_clean", dropClean)): _*)
   }
 
   val branchFastForwardOracle: String =
@@ -2216,14 +1843,10 @@ object LedgerLifecycle {
     * the tag-read, post-rollback and post-publish digests from the
     * fixture. */
   def callProcedures(spark: SparkSession, sfDir: String): DataFrame = {
-    initCatalog(spark)
     val g = tag(sfDir)
-    val t = s"graft_cat.cp.cust_$g"
+    val ct = catalogTable(spark, "cp", "cust", sfDir, "(ckey BIGINT, bal_c BIGINT)") // v1
+    val t = ct.name
     val qual = s"cp.cust_$g"
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.cp")
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    deleteRecursively(s"$catalogRoot/cp/cust_$g")
-    spark.sql(s"CREATE TABLE $t (ckey BIGINT, bal_c BIGINT)")      // v1
     graft.io.Tables.customer(spark, sfDir)
       .createOrReplaceTempView(s"cp_base_$g")
     spark.sql(s"""INSERT INTO $t
@@ -2237,8 +1860,7 @@ object LedgerLifecycle {
     val tagged = call(
       s"CALL graft_cat.sys.create_tag('$qual', 'audit', 3)").getInt(0)
     val opt = call(s"CALL graft_cat.sys.optimize('$qual')")
-    val optOk =
-      if (opt.getInt(0) >= 2 && opt.getInt(1) < opt.getInt(0)) 1 else 0
+    val optOk = opt.getInt(0) >= 2 && opt.getInt(1) < opt.getInt(0)
     val rolledTo = call(
       s"CALL graft_cat.sys.rollback('$qual', 2)").getInt(0)       // v5
     val expired = call(
@@ -2246,42 +1868,28 @@ object LedgerLifecycle {
     val vacuumed = call(s"CALL graft_cat.sys.vacuum('$qual')").getInt(0)
     // everything is still referenced: live = v2's files, the tagged
     // v3 and the newest retained version pin the rest
-    val lifecycleOk = if (tagged == 3 && rolledTo == 5 &&
-      expired == 2 && vacuumed == 0) 1 else 0
-    val tagRead = spark.read.format(ledger)
-      .option("path", s"$catalogRoot/cp/cust_$g")
-      .option("tagAsOf", "audit").load()
-      .selectExpr("count(*) AS n", "sum(bal_c) AS b", "sum(ckey) AS k")
+    val lifecycleOk =
+      tagged == 3 && rolledTo == 5 && expired == 2 && vacuumed == 0
+    val balKey = Seq("bal_c" -> "bal", "ckey" -> "key")
+    val tagRead = digest(ct.read("tagAsOf" -> "audit"), "tag", balKey: _*)
       .collect()(0)
     val checkAdded = call(
       s"CALL graft_cat.sys.add_check('$qual', 'floor', " +
         "'bal_c >= -100000000')").getInt(0)
-    val checkRejected =
-      try { spark.sql(s"INSERT INTO $t VALUES (1, -200000000)"); 0 }
-      catch { case e: Exception =>
-        if (exceptionChainContains(e, "CHECK constraint 'floor'")) 1
-        else throw e
-      }
+    val checkRejected = refuses("CHECK constraint 'floor'")(
+      spark.sql(s"INSERT INTO $t VALUES (1, -200000000)"))
     call(s"CALL graft_cat.sys.create_branch('$qual', 'stage')"): Unit
-    spark.range(0, 5).selectExpr(
-        "id + 20000000 AS ckey", "CAST(id AS BIGINT) AS bal_c")
-      .write.format(ledger).option("path", s"$catalogRoot/cp/cust_$g")
-      .option("branch", "stage").mode("append").save()
-    val ffOk = if (call(
-      s"CALL graft_cat.sys.fast_forward('$qual', 'stage')").getInt(0) > 0)
-      1 else 0
-    spark.table(t)
-      .selectExpr("count(*) AS n_cur", "sum(bal_c) AS bal_cur",
-        "sum(ckey) AS key_cur")
-      .selectExpr("n_cur", "bal_cur", "key_cur",
-        s"CAST(${tagRead.getLong(0)} AS BIGINT) AS n_tag",
-        s"CAST(${tagRead.getLong(1)} AS BIGINT) AS bal_tag",
-        s"CAST(${tagRead.getLong(2)} AS BIGINT) AS key_tag",
-        s"CAST($optOk AS INT) AS opt_ok",
-        s"CAST($lifecycleOk AS INT) AS lifecycle_ok",
-        s"CAST($checkAdded AS INT) AS check_added",
-        s"CAST($checkRejected AS INT) AS check_rejected",
-        s"CAST($ffOk AS INT) AS ff_ok")
+    ct.write(spark.range(0, 5).selectExpr(
+        "id + 20000000 AS ckey", "CAST(id AS BIGINT) AS bal_c"),
+      "append", "branch" -> "stage")
+    val ffOk =
+      call(s"CALL graft_cat.sys.fast_forward('$qual', 'stage')").getInt(0) > 0
+    digest(spark.table(t), "cur", balKey: _*)
+      .selectExpr(Seq("n_cur", "bal_cur", "key_cur") ++
+        longCols(tagRead, "n_tag", "bal_tag", "key_tag") ++ Seq(
+        flag("opt_ok", optOk), flag("lifecycle_ok", lifecycleOk),
+        intCol("check_added", checkAdded), flag("check_rejected", checkRejected),
+        flag("ff_ok", ffOk)): _*)
   }
 
   val callProceduresOracle: String =
@@ -2309,16 +1917,11 @@ object LedgerLifecycle {
          CAST(1 AS INTEGER) AS ff_ok
        FROM cur CROSS JOIN tg"""
 
-  private def exceptionChainContains(e: Throwable, needle: String): Boolean = {
-    var cur: Throwable = e
-    var depth = 0
-    while (cur != null && depth < 20) {
-      if (cur.getMessage != null && cur.getMessage.contains(needle))
-        return true
-      cur = cur.getCause
-      depth += 1
-    }
-    false
+  /** The storage-partitioned-join verdict: `j` plans a SortMergeJoin
+    * with no Exchange on either side. Planning only, no action. */
+  private def shuffleFreeSmj(j: DataFrame): Boolean = {
+    val plan = j.queryExecution.executedPlan.toString
+    !plan.contains("Exchange") && plan.contains("SortMergeJoin")
   }
 
   val checkConstraintsOracle: String =

@@ -3,8 +3,6 @@ package graft.sources
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog._
@@ -327,11 +325,7 @@ object LedgerMaintenance {
               bloom = bloomRel,
               spec = if (m.specId == 0) None else Some(m.specId))
         }
-      } finally {
-        val s = Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
-        try s.iterator().asScala.foreach(Files.deleteIfExists(_))
-        finally s.close()
-      }
+      } finally LedgerSink.deleteRecursively(tmp)
     def cleanup(): Unit = {
       newDvs.values.foreach(d => Files.deleteIfExists(dir.resolve(d)): Unit)
       moved.foreach(e => LedgerSink.deleteStagedEntry(dir, e))
@@ -424,11 +418,7 @@ object LedgerMaintenance {
           rel
       }
       (staged, sm.files.map(_.rows).sum)
-    } finally {
-      val s = Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
-      try s.iterator().asScala.foreach(Files.deleteIfExists(_))
-      finally s.close()
-    }
+    } finally LedgerSink.deleteRecursively(tmp)
   }
 
   /** EQUALITY DELETE (the Iceberg v2 equality-delete design): kill
@@ -550,11 +540,7 @@ object LedgerMaintenance {
             bloom = bloomRel)
         }
         (mv, st, nk)
-      } finally {
-        val s = Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
-        try s.iterator().asScala.foreach(Files.deleteIfExists(_))
-        finally s.close()
-      }
+      } finally LedgerSink.deleteRecursively(tmp)
     val nRows = moved.map(_.rows).sum
     def cleanup(): Unit = {
       staged.foreach(f => Files.deleteIfExists(dir.resolve(f)): Unit)

@@ -1,44 +1,29 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog._
-import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.expressions.{Expression => ConnectorExpression, Expressions, SortOrder => ConnectorSortOrder, Transform}
-import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, CountStar, Max => AggMax, Min => AggMin}
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual}
-import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 /** Oracle gate for the sink: the customer dimension pushed through the
   * full write protocol (stage → message → manifest commit) and read
   * back through the manifest — compared against DuckDB scanning the
   * original parquet directly, which only passes if every codec branch
   * (long, int, DOUBLE-as-hex, string) is bit-exact. */
 object LedgerRoundtrip {
-  import org.apache.spark.sql.{DataFrame, SparkSession}
-
-  private def scratch(sfDir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_ledger_rt_" +
-      sfDir.replaceAll("[^A-Za-z0-9]", "_")
+  import LedgerGate._
 
   def sinkRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = scratch(sfDir)
-    graft.io.Tables.customer(spark, sfDir)
-      .select("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
-      .write.format(classOf[LedgerSink].getName)
-      .option("path", dir).mode("overwrite").save()
-    spark.read.format(classOf[LedgerSink].getName)
-      .option("path", dir).load()
-      .orderBy("c_custkey")
+    val t = scratch(spark, "rt", sfDir)
+    t.write(graft.io.Tables.customer(spark, sfDir)
+      .select("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"),
+      "overwrite")
+    t.read().orderBy("c_custkey")
   }
+
+  /** Snapshot-labelled digest: row count and balance cents. */
+  private def snapshotDigest(df: DataFrame, snapshot: String): DataFrame =
+    df.agg(count(lit(1)).as("n_rows"),
+        sum(expr("CAST(round(c_acctbal * 100) AS BIGINT)")).as("bal_cents"))
+      .selectExpr(s"'$snapshot' AS snapshot", "n_rows", "bal_cents")
 
   val sinkRoundtripOracle: String =
     """SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
@@ -56,26 +41,16 @@ object LedgerRoundtrip {
     * count and sum. Fresh table + checkpoint per run — replay
     * idempotence is the sink spec's job, not this gate's. */
   def streamSinkRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
     import org.apache.spark.sql.streaming.Trigger
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_ledger_stream_$tag"
-    val ckpt = s"$dir/_checkpoint"
-    val root = Paths.get(dir)
-    if (Files.exists(root)) {
-      val s = Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-      try s.iterator().asScala.foreach(Files.deleteIfExists(_))
-      finally s.close()
-    }
+    val t = scratch(spark, "stream", sfDir)
     val stream = spark.readStream.format(classOf[SyntheticSource].getName)
       .option("rows", "100000").option("slices", "16")
       .option("maxRowsPerBatch", "25000").load()
-    val q = stream.writeStream.format(classOf[LedgerSink].getName)
-      .option("path", dir).option("checkpointLocation", ckpt)
+    val q = stream.writeStream.format(ledger)
+      .option("path", t.dir).option("checkpointLocation", s"${t.dir}/_checkpoint")
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-    spark.read.format(classOf[LedgerSink].getName)
-      .option("path", dir).load()
+    t.read()
       .groupBy(col("category"))
       .agg(count(lit(1)).as("n"),
         sum(col("value")).as("sum_value"),
@@ -107,29 +82,13 @@ object LedgerRoundtrip {
     * — an overwrite that leaked into v1, or a version chain that
     * skipped, changes a digest. */
   def timeTravelRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val dir = scratch(sfDir) + "_tt"
-    val root = Paths.get(dir)
-    if (Files.exists(root)) {
-      val s = Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-      try s.iterator().asScala.foreach(Files.deleteIfExists(_))
-      finally s.close()
-    }
+    val t = scratch(spark, "rt", sfDir, "_tt")
     val cust = graft.io.Tables.customer(spark, sfDir)
       .select("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
-    cust.write.format(classOf[LedgerSink].getName)
-      .option("path", dir).mode("overwrite").save()          // version 1
-    cust.filter(col("c_nationkey") < 13)
-      .write.format(classOf[LedgerSink].getName)
-      .option("path", dir).mode("overwrite").save()          // version 2 (live)
-    def digest(df: DataFrame, tag: String): DataFrame =
-      df.agg(count(lit(1)).as("n_rows"),
-          sum(expr("CAST(round(c_acctbal * 100) AS BIGINT)")).as("bal_cents"))
-        .selectExpr(s"'$tag' AS snapshot", "n_rows", "bal_cents")
-    digest(spark.read.format(classOf[LedgerSink].getName)
-        .option("path", dir).option("versionAsOf", "1").load(), "v1")
-      .unionByName(digest(spark.read.format(classOf[LedgerSink].getName)
-        .option("path", dir).load(), "live"))
+    t.write(cust, "overwrite")                               // version 1
+    t.write(cust.filter(col("c_nationkey") < 13), "overwrite") // version 2 (live)
+    snapshotDigest(t.read("versionAsOf" -> "1"), "v1")
+      .unionByName(snapshotDigest(t.read(), "live"))
       .orderBy("snapshot")
   }
 
@@ -141,16 +100,9 @@ object LedgerRoundtrip {
     * non-aligned DELETE first, so the metadata-delete vs COW
     * arbitration is inside the gate too. */
   def mergeUpsertRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    spark.conf.set("spark.sql.catalog.graft_cat",
-      classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_cat.root",
-      s"${System.getProperty("java.io.tmpdir")}/graft_catalog_rt")
-    val t = s"graft_cat.rlo.upsert_$tag"
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.rlo")
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (c_custkey BIGINT, bal_c BIGINT)")
+    val tag = LedgerGate.tag(sfDir)
+    val t = catalogTable(spark, "rlo", "upsert", sfDir,
+      "(c_custkey BIGINT, bal_c BIGINT)").name
     graft.io.Tables.customer(spark, sfDir)
       .selectExpr("CAST(c_custkey AS BIGINT) AS c_custkey",
         "CAST(round(c_acctbal * 100) AS BIGINT) AS bal_c")
@@ -211,16 +163,10 @@ object LedgerRoundtrip {
     * update + insert arms land as exactly one version), and
     * `dv_present` (at least one deletion vector was installed). */
   def mergeMoRRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_rt"
-    spark.conf.set("spark.sql.catalog.graft_cat",
-      classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_cat.root", root)
-    val t = s"graft_cat.rlo.mor_merge_$tag"
-    val dir = Paths.get(root, "rlo", s"mor_merge_$tag")
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.rlo")
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (c_custkey BIGINT, bal_c BIGINT)")
+    val tag = LedgerGate.tag(sfDir)
+    val ct = catalogTable(spark, "rlo", "mor_merge", sfDir,
+      "(c_custkey BIGINT, bal_c BIGINT)")
+    val (t, dir) = (ct.name, ct.root)
     graft.io.Tables.customer(spark, sfDir)
       .selectExpr("CAST(c_custkey AS BIGINT) AS c_custkey",
         "CAST(round(c_acctbal * 100) AS BIGINT) AS bal_c")
@@ -252,15 +198,12 @@ object LedgerRoundtrip {
               VALUES (src.id, src.nv)""")
     } finally spark.conf.set("graft.ledger.rowLevelMode", "cow")
     val post = LedgerSink.readManifest(dir).get
-    val preserved = if (preFiles.subsetOf(post.files.map(_.file).toSet)) 1 else 0
-    val oneCommit =
-      if (LedgerSink.currentVersion(dir) == preVersion + 1) 1 else 0
-    val dvPresent = if (post.files.exists(_.dv.nonEmpty)) 1 else 0
+    val preserved = preFiles.subsetOf(post.files.map(_.file).toSet)
+    val oneCommit = LedgerSink.currentVersion(dir) == preVersion + 1
+    val dvPresent = post.files.exists(_.dv.nonEmpty)
     spark.sql(s"SELECT count(*) AS n_rows, sum(bal_c) AS bal_sum," +
-      s" sum(c_custkey) AS key_sum," +
-      s" CAST($preserved AS INT) AS files_preserved," +
-      s" CAST($oneCommit AS INT) AS one_commit," +
-      s" CAST($dvPresent AS INT) AS dv_present FROM $t")
+      s" sum(c_custkey) AS key_sum, ${flag("files_preserved", preserved)}," +
+      s" ${flag("one_commit", oneCommit)}, ${flag("dv_present", dvPresent)} FROM $t")
   }
 
   val mergeMoRRoundtripOracle: String =
@@ -303,16 +246,9 @@ object LedgerRoundtrip {
     * append that leaked into v2, or a COW delete that rewrote
     * history, changes a digest. */
   def versionHistory(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    spark.conf.set("spark.sql.catalog.graft_cat",
-      classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_cat.root",
-      s"${System.getProperty("java.io.tmpdir")}/graft_catalog_rt")
-    val t = s"graft_cat.rlo.hist_$tag"
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.rlo")
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (c_custkey BIGINT, bal_c BIGINT)")
+    val tag = LedgerGate.tag(sfDir)
+    val t = catalogTable(spark, "rlo", "hist", sfDir,
+      "(c_custkey BIGINT, bal_c BIGINT)").name
     graft.io.Tables.customer(spark, sfDir)
       .selectExpr("CAST(c_custkey AS BIGINT) AS c_custkey",
         "CAST(round(c_acctbal * 100) AS BIGINT) AS bal_c")
@@ -323,7 +259,7 @@ object LedgerRoundtrip {
       " WHERE c_custkey % 2 = 0")
     spark.sql(s"DELETE FROM $t WHERE c_custkey % 5 = 0")
     (1 to 4).map { v =>
-      spark.sql(s"SELECT CAST($v AS INT) AS version," +
+      spark.sql(s"SELECT ${intCol("version", v)}," +
         s" count(*) AS n_rows, coalesce(sum(bal_c), CAST(0 AS BIGINT))" +
         s" AS bal_sum FROM $t VERSION AS OF $v")
     }.reduce(_ unionByName _).orderBy("version")
@@ -364,43 +300,24 @@ object LedgerRoundtrip {
     * recomputes from the fixture — and a timestamp before the first
     * commit must fail loud. */
   def timestampTravel(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val dir = scratch(sfDir) + "_tsas"
-    val root = Paths.get(dir)
-    if (Files.exists(root)) {
-      val s = Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-      try s.iterator().asScala.foreach(Files.deleteIfExists(_))
-      finally s.close()
-    }
+    val t = scratch(spark, "rt", sfDir, "_tsas")
     val cust = graft.io.Tables.customer(spark, sfDir)
       .select("c_custkey", "c_name", "c_nationkey", "c_acctbal")
-    cust.write.format(classOf[LedgerSink].getName)
-      .option("path", dir).mode("overwrite").save()            // v1
-    cust.filter(col("c_nationkey") < 13)
-      .write.format(classOf[LedgerSink].getName)
-      .option("path", dir).mode("overwrite").save()            // v2
-    cust.filter(col("c_nationkey") >= 20)
-      .write.format(classOf[LedgerSink].getName)
-      .option("path", dir).mode("append").save()               // v3 (live)
-    val ts = LedgerSink.commitTimestamps(root).toMap
-    val monotone =
-      if (ts(1) < ts(2) && ts(2) < ts(3)) 1 else 0
+    t.write(cust, "overwrite")                                 // v1
+    t.write(cust.filter(col("c_nationkey") < 13), "overwrite") // v2
+    t.write(cust.filter(col("c_nationkey") >= 20), "append")   // v3 (live)
+    val ts = LedgerSink.commitTimestamps(t.root).toMap
     def readAt(millis: Long): DataFrame =
-      spark.read.format(classOf[LedgerSink].getName)
-        .option("path", dir).option("timestampAsOf", millis.toString).load()
-    def digest(df: DataFrame, tag: String): DataFrame =
-      df.agg(count(lit(1)).as("n_rows"),
-          sum(expr("CAST(round(c_acctbal * 100) AS BIGINT)")).as("bal_cents"))
-        .selectExpr(s"'$tag' AS snapshot", "n_rows", "bal_cents")
+      t.read("timestampAsOf" -> millis.toString)
     val beforeFirstFails =
-      try { readAt(ts(1) - 1).count(); 0 }
-      catch { case _: IllegalArgumentException => 1 }
-    digest(readAt(ts(1)), "t1_v1")
-      .unionByName(digest(readAt(ts(2) - 1), "t2_minus_v1"))
-      .unionByName(digest(readAt(ts(2)), "t2_v2"))
-      .unionByName(digest(readAt(ts(3) + 3600000L), "t9_live"))
-      .withColumn("ts_monotone", lit(monotone))
-      .withColumn("before_first_fails", lit(beforeFirstFails))
+      fails[IllegalArgumentException](readAt(ts(1) - 1).count())
+    snapshotDigest(readAt(ts(1)), "t1_v1")
+      .unionByName(snapshotDigest(readAt(ts(2) - 1), "t2_minus_v1"))
+      .unionByName(snapshotDigest(readAt(ts(2)), "t2_v2"))
+      .unionByName(snapshotDigest(readAt(ts(3) + 3600000L), "t9_live"))
+      .selectExpr("snapshot", "n_rows", "bal_cents",
+        flag("ts_monotone", ts(1) < ts(2) && ts(2) < ts(3)),
+        flag("before_first_fails", beforeFirstFails))
       .orderBy("snapshot")
   }
 
@@ -437,19 +354,12 @@ object LedgerRoundtrip {
     * rows) with the digest unchanged. DuckDB replays the same three
     * batches relationally. */
   def equalityUpsert(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val dir = scratch(sfDir) + "_equ"
-    val root = Paths.get(dir)
-    if (Files.exists(root)) {
-      val s = Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-      try s.iterator().asScala.foreach(Files.deleteIfExists(_))
-      finally s.close()
-    }
+    val t = scratch(spark, "rt", sfDir, "_equ")
+    val (dir, root) = (t.dir, t.root)
     val base = graft.io.Tables.customer(spark, sfDir)
       .selectExpr("CAST(c_custkey AS BIGINT) AS k",
         "CAST(round(c_acctbal * 100) AS BIGINT) AS bal")
-    base.write.format(classOf[LedgerSink].getName)
-      .option("path", dir).mode("overwrite").save()                  // v1
+    t.write(base, "overwrite")                                       // v1
     val baseFiles = LedgerSink.readManifest(root).get.files.map(_.file).toSet
     val b1 = base.filter(col("k") % 7 === 0)
       .select(col("k"), (col("bal") + 100000L).as("bal"))
@@ -462,32 +372,19 @@ object LedgerRoundtrip {
       .select(col("k"), lit(777L).as("bal"))
     LedgerMaintenance.upsertByKeys(spark, dir, Seq("k"), b2): Unit   // v4
     val m = LedgerSink.readManifest(root).get
-    val eqdActive =
-      if (LedgerSink.currentVersion(root) == 4 && m.eqDeletes.nonEmpty) 1
-      else 0
-    val filesPreserved =
-      if (baseFiles.subsetOf(m.files.map(_.file).toSet)) 1 else 0
-    def digest(): org.apache.spark.sql.Row =
-      spark.read.format(classOf[LedgerSink].getName).option("path", dir)
-        .load()
-        .agg(count(lit(1)), sum(col("bal")), sum(col("k")))
-        .collect()(0)
-    val pre = digest()
+    val eqdActive = LedgerSink.currentVersion(root) == 4 && m.eqDeletes.nonEmpty
+    val filesPreserved = baseFiles.subsetOf(m.files.map(_.file).toSet)
+    def liveRow() = digest(t.read(), "live", "bal" -> "bal", "k" -> "key").collect()(0)
+    val pre = liveRow()
     LedgerMaintenance.optimize(spark, dir): Unit                     // v5
-    val post = digest()
+    val post = liveRow()
     val m2 = LedgerSink.readManifest(root).get
-    val afterOptimizeEqual = if (pre == post) 1 else 0
     val morMaterialized =
-      if (m2.eqDeletes.isEmpty && m2.files.map(_.rows).sum == pre.getLong(0)) 1
-      else 0
-    spark.sql(
-      s"""SELECT CAST(${pre.getLong(0)} AS BIGINT) AS n_rows,
-            CAST(${pre.getLong(1)} AS BIGINT) AS bal_sum,
-            CAST(${pre.getLong(2)} AS BIGINT) AS key_sum,
-            CAST($eqdActive AS INT) AS eqd_active,
-            CAST($filesPreserved AS INT) AS files_preserved,
-            CAST($afterOptimizeEqual AS INT) AS after_optimize_equal,
-            CAST($morMaterialized AS INT) AS mor_materialized""")
+      m2.eqDeletes.isEmpty && m2.files.map(_.rows).sum == pre.getLong(0)
+    spark.sql("SELECT " + (longCols(pre, "n_rows", "bal_sum", "key_sum") ++ Seq(
+      flag("eqd_active", eqdActive), flag("files_preserved", filesPreserved),
+      flag("after_optimize_equal", pre == post),
+      flag("mor_materialized", morMaterialized))).mkString(", "))
   }
 
   val equalityUpsertOracle: String =

@@ -619,6 +619,16 @@ object LedgerSink {
     e.bloom.foreach(b => Files.deleteIfExists(dir.resolve(b)): Unit)
   }
 
+  /** Delete `root` and everything under it, children first; a missing
+    * `root` is a no-op. The walk stream is closed (it holds an open
+    * directory fd until then). */
+  private[graft] def deleteRecursively(root: Path): Unit =
+    if (Files.exists(root)) {
+      val s = Files.walk(root).sorted(java.util.Comparator.reverseOrder())
+      try s.iterator().asScala.foreach(Files.deleteIfExists(_))
+      finally s.close()
+    }
+
   /** Sidecar codec: line 1 = `m k fieldId`, line 2 = base64 bits. */
   private[sources] def writeBloomSidecar(path: Path, m: Int,
       fieldId: Int, bits: Array[Byte]): Unit =

@@ -150,19 +150,12 @@ object MetadataTables {
     * MoR delete while the live read shrinks — the gate pins both. */
   def metadataTables(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): org.apache.spark.sql.DataFrame = {
-    // one catalog bootstrap for all gates (Spark caches catalog
-    // instances by name with their first-seen root)
-    LedgerLifecycle.initCatalog(spark)
-    val tag = LedgerLifecycle.tag(sfDir)
-    val t = s"graft_cat.meta.insp_$tag"
-    val dir = java.nio.file.Paths.get(
-      LedgerLifecycle.catalogRoot, "meta", s"insp_$tag")
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.meta")
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(
-      s"""CREATE TABLE $t (c_custkey BIGINT, nat BIGINT, bal_c BIGINT)
+    val tag = LedgerGate.tag(sfDir)
+    val ct = LedgerGate.catalogTable(spark, "meta", "insp", sfDir,
+      """(c_custkey BIGINT, nat BIGINT, bal_c BIGINT)
           PARTITIONED BY (nat)
           TBLPROPERTIES ('graft.ledger.rowLevelMode'='mor')""")       // v1
+    val (t, dir) = (ct.name, ct.root)
     graft.io.Tables.customer(spark, sfDir)
       .selectExpr("CAST(c_custkey AS BIGINT) AS c_custkey",
         "CAST(c_nationkey AS BIGINT) AS nat",
@@ -172,15 +165,12 @@ object MetadataTables {
     spark.sql(s"DELETE FROM $t WHERE c_custkey % 5 = 0")             // v3 (DVs)
     LedgerRefs.createTag(dir, "audit"): Unit                         // at v3
     LedgerRefs.createBranch(dir, "dev"): Unit                        // fork v3
-    spark.sql(s"SELECT * FROM insp_base_$tag WHERE c_custkey <= 3")
-      .write.format(classOf[LedgerSink].getName)
-      .option("path", dir.toString).option("branch", "dev")
-      .mode("append").save()                                         // head v4
+    ct.write(spark.sql(s"SELECT * FROM insp_base_$tag WHERE c_custkey <= 3"),
+      "append", "branch" -> "dev")                                   // head v4
     val hist = spark.sql(s"SELECT version, ts_millis, is_current " +
       s"FROM $t.history ORDER BY version").collect()
-    val tsOk = if (hist.forall(!_.isNullAt(1)) &&
-      hist.sliding(2).forall(w =>
-        w.length < 2 || w(0).getLong(1) < w(1).getLong(1))) 1 else 0
+    val tsOk = hist.forall(!_.isNullAt(1)) && hist.sliding(2).forall(w =>
+      w.length < 2 || w(0).getLong(1) < w(1).getLong(1))
     val curV = hist.filter(_.getInt(2) == 1).map(_.getInt(0)).max
     val refs = spark.sql(s"SELECT name, kind, version, head FROM $t.refs " +
       "ORDER BY name").collect()
@@ -189,12 +179,12 @@ object MetadataTables {
     spark.sql(
       s"""SELECT p.n_parts, p.phys_rows, p.fpp_ok,
             f.n_files, f.dv_files, f.key_min, f.key_max,
-            CAST(${hist.length} AS INT) AS n_versions,
-            CAST($curV AS INT) AS cur_version,
-            CAST($tsOk AS INT) AS ts_ok,
-            CAST($tagV AS INT) AS tag_version,
-            CAST($forkV AS INT) AS branch_fork,
-            CAST($headV AS INT) AS branch_head,
+            ${LedgerGate.intCol("n_versions", hist.length)},
+            ${LedgerGate.intCol("cur_version", curV)},
+            ${LedgerGate.flag("ts_ok", tsOk)},
+            ${LedgerGate.intCol("tag_version", tagV)},
+            ${LedgerGate.intCol("branch_fork", forkV)},
+            ${LedgerGate.intCol("branch_head", headV)},
             l.live_rows, l.live_bal
           FROM
             (SELECT count(*) AS n_parts,

@@ -1,7 +1,8 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType}
 import graft.io.{Readers, Writers}
 import graft.orchestrate.{EndToEnd, Orchestrator}
 import graft.pipelines.InventoryReconciliation
@@ -62,5 +63,26 @@ class CsvEndToEndSpec extends SparkSpec {
     val out = EndToEnd.concurrentSummaryUnion(spark, Seq(a, b))
     assert(out.schema == union.schema)
     assert(out.orderBy("zone").collect().toSeq == union.orderBy("zone").collect().toSeq)
+  }
+
+  test("entity schemas follow a fixture rewritten at the same path") {
+    val fx = Files.createTempDirectory("graft_fixture_rewrite")
+    graft.io.Tables.names.foreach(n =>
+      Files.copy(Paths.get(sfTiny, s"$n.parquet"), fx.resolve(s"$n.parquet")))
+    val dir = fx.toString
+    def customerId() =
+      EndToEnd.entitySchema(spark, dir, "customers")("customer_id").dataType
+    assert(customerId() == LongType)
+    // regenerate customer.parquet in place with c_custkey as a string
+    val out = fx.resolve("customer_rewrite")
+    spark.read.parquet(s"$dir/customer.parquet")
+      .withColumn("c_custkey", col("c_custkey").cast("string"))
+      .coalesce(1).write.parquet(out.toString)
+    val part = Files.list(out).filter(_.getFileName.toString.endsWith(".parquet"))
+      .findFirst().get()
+    Files.move(part, fx.resolve("customer.parquet"),
+      StandardCopyOption.REPLACE_EXISTING)
+    graft.sources.LedgerSink.deleteRecursively(out)
+    assert(customerId() == StringType)
   }
 }

@@ -96,10 +96,7 @@ class LedgerTimeTravelSpec extends graft.SparkSpec {
   }
 
   test("SQL VERSION AS OF resolves through the catalog plugin") {
-    spark.conf.set("spark.sql.catalog.graft_cat",
-      classOf[GraftCatalog].getName)
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_rt"
-    spark.conf.set("spark.sql.catalog.graft_cat.root", root)
+    LedgerGate.initCatalog(spark)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.ttns")
     spark.sql("DROP TABLE IF EXISTS graft_cat.ttns.t")
     spark.sql("CREATE TABLE graft_cat.ttns.t (id BIGINT)")

@@ -9,11 +9,8 @@ package graft.sources
 class RowLevelOpsSpec extends graft.SparkSpec {
 
   private def installed(): String = {
-    spark.conf.set("spark.sql.catalog.graft_cat",
-      classOf[GraftCatalog].getName)
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_rt"
-    spark.conf.set("spark.sql.catalog.graft_cat.root", root)
-    root
+    LedgerGate.initCatalog(spark)
+    LedgerGate.catalogRoot
   }
 
   private def freshTable(name: String, n: Long): String = {
@@ -67,8 +64,7 @@ class RowLevelOpsSpec extends graft.SparkSpec {
     // two distinct id ranges in two separate commits -> distinct files
     spark.sql(s"INSERT INTO $t SELECT id, id FROM range(0, 100)")
     spark.sql(s"INSERT INTO $t SELECT id, id FROM range(1000, 1100)")
-    val root = java.nio.file.Paths.get(
-      s"${System.getProperty("java.io.tmpdir")}/graft_catalog_rt/rlo/pruned")
+    val root = java.nio.file.Paths.get(LedgerGate.catalogRoot, "rlo", "pruned")
     val before = LedgerSink.readManifest(root).get.files.map(_.file).toSet
     // range predicate prunes to the low file but is NOT file-aligned
     // (id < 50 splits the first file), so COW rewrites only that file

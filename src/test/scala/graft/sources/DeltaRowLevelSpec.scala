@@ -20,11 +20,8 @@ import java.nio.file.Paths
 class DeltaRowLevelSpec extends graft.SparkSpec {
 
   private val root = {
-    spark.conf.set("spark.sql.catalog.graft_cat",
-      classOf[GraftCatalog].getName)
-    val r = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_rt"
-    spark.conf.set("spark.sql.catalog.graft_cat.root", r)
-    r
+    LedgerGate.initCatalog(spark)
+    LedgerGate.catalogRoot
   }
 
   private def freshTable(name: String, n: Long,

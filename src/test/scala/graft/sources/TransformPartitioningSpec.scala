@@ -21,20 +21,6 @@ class TransformPartitioningSpec extends graft.SparkSpec {
     root
   }
 
-  // planned FILES, not partitions — SPJ groups files by tuple
-  private def plannedFiles(dirStr: String,
-      filters: Array[org.apache.spark.sql.sources.Filter]): Int = {
-    val dir = Paths.get(dirStr)
-    val m = LedgerSink.readManifest(dir).get
-    val b = new LedgerScanBuilder(dir, m.schema)
-    b.pushFilters(filters)
-    b.build().asInstanceOf[org.apache.spark.sql.connector.read.Batch]
-      .planInputPartitions().map {
-        case g: LedgerFileGroupPartition => g.files.length
-        case _ => 1
-      }.sum
-  }
-
   test("bucket spec round-trips the manifest and prunes equality probes") {
     val root = initCatalog()
     spark.sql("DROP TABLE IF EXISTS txp.s.bkt")
@@ -55,7 +41,7 @@ class TransformPartitioningSpec extends graft.SparkSpec {
     // a k-equality prunes to exactly bucket(k)'s files
     val all = m1.files.length
     val b7 = m1.files.count(_.partVals.exists(_.head == "3")) // 7 % 4 = 3
-    val planned = plannedFiles(dir,
+    val planned = LedgerGate.plannedFiles(Paths.get(dir),
       Array(org.apache.spark.sql.sources.EqualTo("k", 7L)))
     assert(planned == b7 && planned < all,
       s"expected the $b7 bucket-3 files of $all, planned $planned")
@@ -98,11 +84,11 @@ class TransformPartitioningSpec extends graft.SparkSpec {
     val dayTuples = m.files.flatMap(_.partVals).map(_.head).toSet
     assert(dayTuples == Set("0", "1", "2", "3", "4", "5"))
     // point probe: ts equality plans only day(ts)'s files
-    val eq = plannedFiles(dir, Array(
+    val eq = LedgerGate.plannedFiles(Paths.get(dir), Array(
       org.apache.spark.sql.sources.EqualTo("ts", 2 * dayMs + 7000L)))
     assert(eq == m.files.count(_.partVals.exists(_.head == "2")))
     // range probe: [day2 start, day3 end] plans exactly days 2..3
-    val rng = plannedFiles(dir, Array(
+    val rng = LedgerGate.plannedFiles(Paths.get(dir), Array(
       org.apache.spark.sql.sources.GreaterThanOrEqual("ts", 2 * dayMs),
       org.apache.spark.sql.sources.LessThan("ts", 4 * dayMs)))
     assert(rng == m.files.count(_.partVals.exists(v =>
