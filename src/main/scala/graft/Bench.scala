@@ -81,7 +81,7 @@ object Bench {
       val err = try { fn(spark, sfDir).count(); None }
         catch {
           case e: Throwable =>
-            if (sys.env.contains("SPARK_GRAFT_DEBUG")) e.printStackTrace()
+            e.printStackTrace()
             Some(e.getClass.getSimpleName)
         }
       val dt = (System.nanoTime() - t0) / 1e9

@@ -67,13 +67,9 @@ object PlanCache {
           // Path is keyed by the session id too: two concurrent
           // sessions sharing featureTableDir must not overwrite each
           // other's files while the other holds a reader over the old
-          // listing. A digest of the RAW dir string disambiguates
-          // distinct fixture dirs the [^A-Za-z0-9.] sanitization would
-          // otherwise collide onto one path.
-          val dirTag = dir.replaceAll("[^A-Za-z0-9.]", "_") + "_" +
-            java.lang.Integer.toHexString(
-              java.util.Arrays.hashCode(dir.getBytes("UTF-8")))
-          val path = s"$root/${sessionId(spark)}/${key}_$dirTag"
+          // listing.
+          val path =
+            s"$root/${sessionId(spark)}/${key}_${graft.io.Tables.dirTag(dir)}"
           try {
             build.write.mode("overwrite")
               .option("compression", "snappy").parquet(path)

@@ -40,6 +40,18 @@ object Tables {
     }
   }
 
+  /** Path-safe tag for a fixture dir: the dir with every character
+    * outside [A-Za-z0-9.] replaced by `_`, plus a hash of the raw
+    * string, so distinct dirs the replacement would collide onto one
+    * name keep distinct paths. Every derived zone and side-table path
+    * (raw zone, e2e zones, rollup and feature side-tables) is named by
+    * it, and its bytes must stay stable so warm machines keep finding
+    * their staged data. */
+  private[graft] def dirTag(dir: String): String =
+    dir.replaceAll("[^A-Za-z0-9.]", "_") + "_" +
+      java.lang.Integer.toHexString(
+        java.util.Arrays.hashCode(dir.getBytes("UTF-8")))
+
   /** Raw scan (keeps the `_metadata` hidden column resolvable). */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")

@@ -1016,12 +1016,8 @@ object Dedup {
         .head.getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
     var converged = false
     var rounds = 0
-    val t0 = System.nanoTime()
     var prevSum = checksum(labels)
-    if (sys.env.contains("SPARK_GRAFT_DEBUG"))
-      println(s"dedupClusters init checksum took ${(System.nanoTime() - t0) / 1000000} ms")
     while (!converged && rounds < maxRounds) {
-      val tr = System.nanoTime()
       val propagated = propagateOnce(edgesCold, edgesHot, hotKeys, labels)
       // The min-agg after the union is skew-immune by itself: partial
       // (map-side) aggregation collapses a hot src key per partition
@@ -1049,9 +1045,6 @@ object Dedup {
       prevSum = nextSum
       labels = next
       rounds += 1
-      if (sys.env.contains("SPARK_GRAFT_DEBUG"))
-        println(s"dedupClusters round=$rounds checksum=$prevSum converged=$converged " +
-          s"took ${(System.nanoTime() - tr) / 1000000} ms")
     }
     if (!converged) {
       throw new IllegalStateException(

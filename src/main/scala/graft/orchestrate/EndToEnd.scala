@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.curated.Aggregations
 import graft.etl.Entities
-import graft.io.{Catalog, Readers, Writers}
+import graft.io.{Catalog, Readers, Tables, Writers}
 import graft.pipelines.{CustomerFeedback, DeliveryPerformance,
   InventoryReconciliation, MarketingRoi, SalesRevenue}
 import graft.sql.{AthenaQueries, OracleSql}
@@ -13,7 +13,7 @@ import graft.sql.{AthenaQueries, OracleSql}
   * as one registered query (VERDICT r7 #4): a raw CSV batch lands →
   * lambda-style routing fans out to the five Glue-job pipelines (each
   * under its own budget with per-job failure isolation,
-  * [[Orchestrator.runAndCrawlRecorded]]) → pipelines READ THE RAW CSVs
+  * [[Orchestrator.runAndCrawl]]) → pipelines READ THE RAW CSVs
   * with declared schemas → write the processed + curated parquet zones
   * → the crawler step registers every zone in the catalog → the six
   * Athena queries run over the crawled tables → one summary row per
@@ -38,11 +38,6 @@ object EndToEnd {
 
   private def tmp = System.getProperty("java.io.tmpdir")
 
-  private def dirTag(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9.]", "_") + "_" +
-      java.lang.Integer.toHexString(
-        java.util.Arrays.hashCode(dir.getBytes("UTF-8")))
-
   /** Entity name → (builder, raw-zone subpath). The inventory
     * generations land in sibling dirs so the generation split runs on
     * file provenance, the reference's own mechanism (05:39-45). */
@@ -63,13 +58,13 @@ object EndToEnd {
     // v2: layout version in the path — the marker-file idempotency
     // would otherwise pin a zone staged by older code (64 shards per
     // entity) forever on a warm machine.
-    val root = s"$tmp/graft_raw_zone_v2/${dirTag(dir)}"
+    val root = s"$tmp/graft_raw_zone_v2/${Tables.dirTag(dir)}"
     val marker = java.nio.file.Paths.get(root, "_STAGED")
     if (!java.nio.file.Files.exists(marker)) {
       // reclaim the pre-v2 zone on warm machines — the layout bump
       // must not leave a full orphaned CSV copy of every entity behind
       graft.sources.LedgerSink.deleteRecursively(
-        java.nio.file.Paths.get(s"$tmp/graft_raw_zone/${dirTag(dir)}"))
+        java.nio.file.Paths.get(s"$tmp/graft_raw_zone/${Tables.dirTag(dir)}"))
       entities(spark, dir).foreach { case (name, df) =>
         // A handful of CSV files per entity, not one-per-task: the raw
         // zone models the producer's batch drop (the reference ingests
@@ -102,7 +97,7 @@ object EndToEnd {
   // stale one
   private[graft] def entitySchema(spark: SparkSession, dir: String,
       name: String): org.apache.spark.sql.types.StructType = {
-    val fp = graft.io.Tables.fingerprint(dir)
+    val fp = Tables.fingerprint(dir)
     entitySchemas.compute(dir, (_, cached) =>
       if (cached != null && cached._1 == fp) cached
       else fp -> entities(spark, dir).map { case (n, df) => n -> df.schema }.toMap
@@ -151,21 +146,54 @@ object EndToEnd {
       Seq(orders, items, products, customers, feedback, marketing, invAll))
   }
 
-  /** Zone/query summary digests — every one an exact integer so the
-    * composition is hash-checkable end to end. */
-  private val zoneDigests: Seq[(String, String)] = Seq(
-    "processed_sales_transactions" ->
-      "sum(CAST(round(line_total * 100) AS BIGINT))",
-    "curated_revenue_by_category" ->
-      "sum(CAST(round(total_revenue * 100) AS BIGINT))",
-    "curated_campaign_performance_summary" ->
-      "sum(CAST(round(total_spend * 100) AS BIGINT))",
-    "curated_delivery_partner_performance" -> "sum(delayed_deliveries)",
-    "curated_area_feedback_metrics" -> "sum(total_feedback)",
-    "curated_category_inventory_impact" ->
-      "sum(CAST(round(total_impact * 100) AS BIGINT))",
-    "curated_product_inventory_discrepancies" ->
-      "sum(discrepancy_occurrences)")
+  /** One output zone of a job: the aggregate that fills it from the
+    * job's transform, its summary digest (an exact integer, so the
+    * composition is hash-checkable end to end) and the oracle relation
+    * it must match. */
+  private final case class Zone(name: String, fill: DataFrame => DataFrame,
+      digest: String, oracle: String)
+
+  private def zone(name: String, fill: DataFrame => DataFrame,
+      digest: String): Zone = Zone(name, fill, digest, name)
+
+  /** One routed job: its transform over the raw relations (the Glue
+    * jobs read ONLY these CSV relations) and the zones it writes. */
+  private final case class JobSpec(transform: RawRelations => DataFrame,
+      zones: Zone*)
+
+  private val jobs: Map[Orchestrator.Job, JobSpec] =
+    Orchestrator.allJobs.map(j => j -> (j match {
+      case Orchestrator.SalesRevenue =>
+        JobSpec(r => SalesRevenue.run(r.orders, r.items, r.products),
+          Zone("processed_sales_transactions", identity,
+            "sum(CAST(round(line_total * 100) AS BIGINT))", "sales_tx"),
+          zone("curated_revenue_by_category", Aggregations.revenueByCategory,
+            "sum(CAST(round(total_revenue * 100) AS BIGINT))"))
+      case Orchestrator.DeliveryPerformance =>
+        JobSpec(r => DeliveryPerformance.run(r.orders),
+          zone("curated_delivery_partner_performance",
+            Aggregations.deliveryPartnerPerformance, "sum(delayed_deliveries)"))
+      case Orchestrator.CustomerFeedback =>
+        JobSpec(r => CustomerFeedback.enrich(r.feedback, r.customers, r.orders,
+            CustomerFeedback.ratingIcons(r.orders.sparkSession)),
+          zone("curated_area_feedback_metrics", CustomerFeedback.areaMetrics,
+            "sum(total_feedback)"))
+      case Orchestrator.MarketingRoi =>
+        JobSpec(r => MarketingRoi.run(r.marketing),
+          zone("curated_campaign_performance_summary",
+            Aggregations.campaignPerformanceSummary,
+            "sum(CAST(round(total_spend * 100) AS BIGINT))"))
+      case Orchestrator.InventoryReconciliation =>
+        JobSpec(r => InventoryReconciliation.run(r.invOld, r.invNew, r.products),
+          zone("curated_category_inventory_impact",
+            Aggregations.categoryInventoryImpact,
+            "sum(CAST(round(total_impact * 100) AS BIGINT))"),
+          zone("curated_product_inventory_discrepancies",
+            Aggregations.productInventoryDiscrepancies,
+            "sum(discrepancy_occurrences)"))
+    })).toMap
+
+  private val zones: Seq[Zone] = Orchestrator.allJobs.flatMap(jobs(_).zones)
 
   private val queryDigests: Seq[(String, String)] = Seq(
     "q_campaign_roi" -> "sum(total_conversions)",
@@ -181,25 +209,14 @@ object EndToEnd {
   private def e2eSql(sql: String): String =
     sql.replaceAll("\\bcurated_", "e2e_curated_")
 
-  private def summarize(zone: String, df: DataFrame, digest: String): DataFrame =
-    df.agg(expr("CAST(count(*) AS BIGINT)").as("n_rows"),
-        expr(s"CAST($digest AS BIGINT)").as("digest"))
-      .selectExpr(s"'$zone' AS zone", "n_rows", "digest")
-
-  /** Run independent driver actions concurrently (guide §2.6): each
-    * thunk submits its own Spark job; the scheduler back-fills one
-    * job's straggler tail with the next job's tasks. Exceptions
-    * propagate (Await rethrows the first failure). */
-  private def inParallel[A](tasks: Seq[() => A], width: Int = 6): Seq[A] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(width, math.max(1, tasks.size)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try Await.result(
-      Future.sequence(tasks.map(t => Future(t()))),
-      scala.concurrent.duration.Duration(600, "s"))
-    finally pool.shutdown()
-  }
+  /** Run independent driver actions concurrently, at most 6 at once:
+    * each thunk submits its own Spark job; the scheduler back-fills one
+    * job's straggler tail with the next job's tasks. No deadline of its
+    * own — the enclosing job's budget bounds it. A failure is rethrown
+    * (the first in task order) only once every sibling has ended, so
+    * nothing the caller releases afterwards is still in use. */
+  private[graft] def inParallel[A](tasks: Seq[() => A]): Seq[A] =
+    Orchestrator.fanOut(tasks, 6, i => s"graft-fanout-$i").map(_.get.get)
 
   /** Materialize the union of independent ONE-ROW summary branches by
     * running each branch as its own concurrent job (r14): the lazy
@@ -223,93 +240,91 @@ object EndToEnd {
       spark.sparkContext.parallelize(rows, 1), schema)
   }
 
+  /** The drop itself: stage the raw zone, then route a generic
+    * daily-batch basename — it matches no routing substring, so it
+    * routes to ALL five jobs (lambda:44-53 default branch), each under
+    * its own 600 s budget with failures recorded, and the crawl runs
+    * once at least one job succeeded (lambda:31-33 / 55-97). Each job
+    * hands every output zone in `written` to `sink`. A job with more
+    * than one output persists its transform, fills it with one
+    * `count()` and writes the outputs concurrently, so the
+    * joins/derivations run once, not once per output. A run where any
+    * job or the crawl did not succeed is an error, not a result. */
+  private def runDrop(spark: SparkSession, dir: String, written: Seq[Zone])(
+      sink: (Zone, DataFrame) => Unit)(crawl: => Unit): Unit = {
+    val rels = rawRelations(spark, dir, stageRawZone(spark, dir))
+    val (results, crawled) = Orchestrator.runAndCrawl(
+      "incoming/daily_batch_2024_08.csv") { j =>
+      val spec = jobs(j)
+      spec.zones.filter(written.contains) match {
+        case Seq(z) => sink(z, z.fill(spec.transform(rels)))
+        case zs =>
+          val t = spec.transform(rels).persist()
+          try {
+            t.count(): Unit
+            inParallel(zs.map(z => () => sink(z, z.fill(t)))): Unit
+          } finally t.unpersist(blocking = false): Unit
+      }
+    }(_ => crawl)
+    rels.release() // the zones are written; the raw parses are done with
+    if (results.exists(!_.succeeded) || !crawled.contains("succeeded"))
+      throw new IllegalStateException(
+        s"end-to-end run degraded: jobs=$results crawl=$crawled")
+  }
+
+  /** One summary row per zone in `shown` (read through `table`) and
+    * per Athena query (its SQL rewritten by `sql`), plus `extra` rows,
+    * ordered by zone. */
+  private def summaries(spark: SparkSession, shown: Seq[Zone],
+      table: Zone => DataFrame, sql: String => String,
+      extra: Seq[DataFrame] = Nil): DataFrame = {
+    def summarize(name: String, df: DataFrame, digest: String): DataFrame =
+      df.agg(expr("CAST(count(*) AS BIGINT)").as("n_rows"),
+          expr(s"CAST($digest AS BIGINT)").as("digest"))
+        .selectExpr(s"'$name' AS zone", "n_rows", "digest")
+    concurrentSummaryUnion(spark,
+      shown.map(z => summarize(z.name, table(z), z.digest)) ++
+        queryDigests.map { case (q, digest) =>
+          summarize(q, spark.sql(sql(AthenaQueries.all(q))), digest) } ++
+        extra).orderBy("zone")
+  }
+
+  /** Oracle twin of [[summaries]]: the same rows from the shared CTE
+    * registry (the DuckDB-side derivation of the same entities →
+    * pipelines → curated aggregates → Athena queries). */
+  private def summariesOracle(shown: Seq[Zone], extra: Seq[String] = Nil): String = {
+    def row(name: String, digest: String, src: String): String =
+      s"""SELECT '$name' AS zone, CAST(count(*) AS BIGINT) AS n_rows,
+            CAST($digest AS BIGINT) AS digest FROM ($src)"""
+    val rows = shown.map(z => row(z.name, z.digest, s"SELECT * FROM ${z.oracle}")) ++
+      queryDigests.map { case (q, digest) => row(q, digest, AthenaQueries.all(q)) } ++
+      extra
+    OracleSql.withCtes(rows.mkString(" UNION ALL ") + " ORDER BY zone")
+  }
+
   def pipelineEndToEnd(spark: SparkSession, dir: String): DataFrame = {
-    val raw = stageRawZone(spark, dir)
-    val out = s"$tmp/graft_e2e_zones/${dirTag(dir)}"
-    def zonePath(z: String): String = s"$out/$z"
-
-    // Raw reads with declared schemas (S1) — the five jobs below
-    // consume ONLY these CSV relations, exactly like the Glue jobs.
-    val rels = rawRelations(spark, dir, raw)
-    import rels.{orders, items, products, customers, feedback, marketing,
-      invOld, invNew}
-
-    // A generic daily-batch basename matches no routing substring, so
-    // it routes to ALL five jobs (lambda:44-53 default branch); each
-    // runs under its own 600 s budget, failures recorded and skipped,
-    // and the crawl runs because at least one job succeeded
-    // (lambda:31-33 / 55-97 semantics). The five jobs run as
-    // CONCURRENT Spark jobs — they write disjoint zones, so the only
-    // thing the reference's sequential loop adds is idle executors
-    // (see [[Orchestrator.runRecordedConcurrent]]'s deviation note).
-    val (results, crawl) = Orchestrator.runAndCrawlRecordedConcurrent(
-      "incoming/daily_batch_2024_08.csv") {
-      case Orchestrator.SalesRevenue =>
-        // two sinks consume the same transform — persist so the
-        // joins/derivations run once, not once per write. r14:
-        // materialize the cache FIRST (one count over the persisted
-        // plan fills it), then run the two independent sink writes
-        // concurrently — the tiny curated agg hides under the
-        // 80-partition processed write instead of following it
-        val sales = SalesRevenue.run(orders, items, products).persist()
-        try {
-          sales.count(): Unit
-          inParallel(Seq(
-            () => Writers.processed(sales,
-              zonePath("processed_sales_transactions"), Seq("year", "month")),
-            () => Writers.curated(Aggregations.revenueByCategory(sales),
-              zonePath("curated_revenue_by_category")))): Unit
-        } finally sales.unpersist(blocking = false): Unit
-      case Orchestrator.DeliveryPerformance =>
-        Writers.curated(
-          Aggregations.deliveryPartnerPerformance(
-            DeliveryPerformance.run(orders)),
-          zonePath("curated_delivery_partner_performance"))
-      case Orchestrator.CustomerFeedback =>
-        Writers.curated(
-          CustomerFeedback.areaMetrics(CustomerFeedback.enrich(
-            feedback, customers, orders, CustomerFeedback.ratingIcons(spark))),
-          zonePath("curated_area_feedback_metrics"))
-      case Orchestrator.MarketingRoi =>
-        Writers.curated(
-          Aggregations.campaignPerformanceSummary(MarketingRoi.run(marketing)),
-          zonePath("curated_campaign_performance_summary"))
-      case Orchestrator.InventoryReconciliation =>
-        val recon = InventoryReconciliation.run(invOld, invNew, products)
-          .persist()
-        try {
-          recon.count(): Unit // fill the cache once, then fan out
-          inParallel(Seq(
-            () => Writers.curated(Aggregations.categoryInventoryImpact(recon),
-              zonePath("curated_category_inventory_impact")),
-            () => Writers.curated(
-              Aggregations.productInventoryDiscrepancies(recon),
-              zonePath("curated_product_inventory_discrepancies")))): Unit
-        } finally recon.unpersist(blocking = false): Unit
-    } { _ =>
+    val out = s"$tmp/graft_e2e_zones/${Tables.dirTag(dir)}"
+    def zonePath(z: Zone): String = s"$out/${z.name}"
+    def processed(z: Zone): Boolean = z.name.startsWith("processed_")
+    runDrop(spark, dir, zones) { (z, df) =>
+      if (processed(z)) Writers.processed(df, zonePath(z), Seq("year", "month"))
+      else Writers.curated(df, zonePath(z))
+    } {
       // Crawler step: register every curated zone + the partitioned
       // processed zone in the catalog, e2e_-prefixed (see e2eSql).
-      zoneDigests.map(_._1).foreach { z =>
-        if (z.startsWith("processed_"))
-          Catalog.registerExternal(spark, s"e2e_$z", zonePath(z))
-        else
-          Catalog.registerExternalUnpartitioned(spark, s"e2e_$z", zonePath(z))
+      zones.foreach { z =>
+        if (processed(z)) Catalog.registerExternal(spark, s"e2e_${z.name}", zonePath(z))
+        else Catalog.registerExternalUnpartitioned(spark, s"e2e_${z.name}", zonePath(z))
       }
     }
-    rels.release() // zones are written; the raw parses are done with
-    val failed = results.filterNot(_.succeeded)
-    if (failed.nonEmpty || !crawl.contains("succeeded"))
-      throw new IllegalStateException(
-        s"end-to-end run degraded: jobs=$results crawl=$crawl")
-
-    // Athena tier over the crawled tables, then one summary row per
-    // zone and per query.
-    val zoneRows = zoneDigests.map { case (z, digest) =>
-      summarize(z, spark.table(s"e2e_$z"), digest) }
-    val queryRows = queryDigests.map { case (q, digest) =>
-      summarize(q, spark.sql(e2eSql(AthenaQueries.all(q))), digest) }
-    concurrentSummaryUnion(spark, zoneRows ++ queryRows).orderBy("zone")
+    // Athena tier over the crawled tables
+    summaries(spark, zones, z => spark.table(s"e2e_${z.name}"), e2eSql)
   }
+
+  val pipelineEndToEndOracle: String = summariesOracle(zones)
+
+  /** The ledger composite writes the curated zones only. */
+  private val curatedZones = zones.filterNot(_.name.startsWith("processed_"))
 
   /** `pipeline_end_to_end_ledger`: the reference's unit of work with
     * the curated zone landing in LEDGER TABLES through
@@ -326,81 +341,45 @@ object EndToEnd {
     * checks, so the oracle hash fails if any protocol step regresses. */
   def pipelineEndToEndLedger(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.{LedgerGate, LedgerRefs, LedgerSink}
-    val raw = stageRawZone(spark, dir)
     // identifier-safe tag (dirTag keeps dots, which a SQL table name
     // cannot carry unquoted) — the ledger gates' own sanitizer
     val g = LedgerGate.tag(dir)
-    val zones = zoneDigests.filterNot(_._1.startsWith("processed_")).map(_._1)
+    val names = curatedZones.map(_.name)
     // fresh tables per run: the protocol verdicts assert version
     // arithmetic from v1, which a previous run's published tables on a
     // warm machine would break
-    val t = zones.map(z => z -> LedgerGate.catalogPath(spark, "e2el", z, dir)).toMap
-
-    val rels = rawRelations(spark, dir, raw)
-    import rels.{orders, items, products, customers, feedback, marketing,
-      invOld, invNew}
+    val t = names.map(z => z -> LedgerGate.catalogPath(spark, "e2el", z, dir)).toMap
 
     // each job CREATES its empty curated table (v1) then STAGES the
-    // rows under wapId w1 — no version advances until publish
-    def stageWap(zone: String, df: DataFrame): Unit = {
-      t(zone).write(df.limit(0), "overwrite")
-      t(zone).write(df, "append", "wapId" -> "w1")
-    }
-    val (results, crawl) = Orchestrator.runAndCrawlRecordedConcurrent(
-      "incoming/daily_batch_2024_08.csv") {
-      case Orchestrator.SalesRevenue =>
-        stageWap("curated_revenue_by_category",
-          Aggregations.revenueByCategory(
-            SalesRevenue.run(orders, items, products)))
-      case Orchestrator.DeliveryPerformance =>
-        stageWap("curated_delivery_partner_performance",
-          Aggregations.deliveryPartnerPerformance(
-            DeliveryPerformance.run(orders)))
-      case Orchestrator.CustomerFeedback =>
-        stageWap("curated_area_feedback_metrics",
-          CustomerFeedback.areaMetrics(CustomerFeedback.enrich(
-            feedback, customers, orders, CustomerFeedback.ratingIcons(spark))))
-      case Orchestrator.MarketingRoi =>
-        stageWap("curated_campaign_performance_summary",
-          Aggregations.campaignPerformanceSummary(MarketingRoi.run(marketing)))
-      case Orchestrator.InventoryReconciliation =>
-        val recon = InventoryReconciliation.run(invOld, invNew, products)
-          .persist()
-        try {
-          stageWap("curated_category_inventory_impact",
-            Aggregations.categoryInventoryImpact(recon))
-          stageWap("curated_product_inventory_discrepancies",
-            Aggregations.productInventoryDiscrepancies(recon))
-        } finally recon.unpersist(blocking = false): Unit
-    } { _ => () } // the catalog IS the crawler here: path-convention tables
-    rels.release() // staged; the raw parses are done with
-    val failed = results.filterNot(_.succeeded)
-    if (failed.nonEmpty || !crawl.contains("succeeded"))
-      throw new IllegalStateException(
-        s"ledger end-to-end degraded: jobs=$results crawl=$crawl")
+    // rows under wapId w1 — no version advances until publish; the
+    // catalog IS the crawler here: path-convention tables
+    runDrop(spark, dir, curatedZones) { (z, df) =>
+      t(z.name).write(df.limit(0), "overwrite")
+      t(z.name).write(df, "append", "wapId" -> "w1")
+    }(())
 
     // AUDIT → PUBLISH. Audit reads the staged (base ∪ wap) state and
     // demands rows; staging must not have advanced any version.
-    val stageIsolated = if (zones.forall(z =>
+    val stageIsolated = if (names.forall(z =>
       LedgerSink.currentVersion(t(z).root) == 1)) 1 else 0
     // the six audits read disjoint staged zones — independent jobs,
     // run concurrently (r14); every audit still completes before any
     // publish below, so the protocol ordering is untouched
-    val audited = inParallel(zones.map(z => () =>
+    val audited = inParallel(names.map(z => () =>
       z -> t(z).read("wapId" -> "w1").count())).toMap
     if (audited.values.exists(_ == 0L))
       throw new IllegalStateException(s"audit found an empty zone: $audited")
-    zones.foreach(z => LedgerRefs.publishWap(t(z).root, "w1"): Unit)
+    names.foreach(z => LedgerRefs.publishWap(t(z).root, "w1"): Unit)
     // post-publish verification: the version/wap checks are driver
     // file reads, the recounts are independent scans — concurrent (r14)
-    val publishOk = if (inParallel(zones.map(z => () =>
+    val publishOk = if (inParallel(names.map(z => () =>
       LedgerSink.currentVersion(t(z).root) == 2 &&
         spark.table(t(z).name).count() == audited(z) &&
         LedgerSink.listWaps(t(z).root).isEmpty)).forall(identity)) 1 else 0
 
     // a deliberately FAILING audit: stage an empty second batch where
     // the audit demands rows — abort must leave live state untouched
-    val probe = zones.head
+    val probe = names.head
     val pt = t(probe)
     pt.write(spark.table(pt.name).limit(0), "append", "wapId" -> "w2")
     val auditFails =
@@ -410,64 +389,20 @@ object EndToEnd {
       spark.table(pt.name).count() == audited(probe) &&
       LedgerSink.listWaps(pt.root).isEmpty) 1 else 0
 
-    // the six queries over the PUBLISHED catalog state
-    def ledgerSql(sql: String): String =
-      sql.replaceAll("\\bcurated_(\\w+)", s"graft_cat.e2el.curated_$$1_$g")
-    val zoneRows = zoneDigests.filterNot(_._1.startsWith("processed_"))
-      .map { case (z, digest) => summarize(z, spark.table(t(z).name), digest) }
-    val queryRows = queryDigests.map { case (q, digest) =>
-      summarize(q, spark.sql(ledgerSql(AthenaQueries.all(q))), digest) }
     val verdict = spark.range(1).selectExpr(
       "'wap_protocol' AS zone",
       "CAST(4 AS BIGINT) AS n_rows",
       s"CAST($stageIsolated * 1000 + $publishOk * 100 + " +
         s"$auditFails * 10 + $abortClean AS BIGINT) AS digest")
-    concurrentSummaryUnion(spark, zoneRows ++ queryRows :+ verdict)
-      .orderBy("zone")
+    // the six queries over the PUBLISHED catalog state
+    summaries(spark, curatedZones, z => spark.table(t(z.name).name),
+      _.replaceAll("\\bcurated_(\\w+)", s"graft_cat.e2el.curated_$$1_$g"),
+      Seq(verdict))
   }
 
-  /** Oracle twin: the curated/query summaries from the shared CTE
-    * registry plus the all-green protocol verdict row. */
-  val pipelineEndToEndLedgerOracle: String = {
-    val rows =
-      zoneDigests.filterNot(_._1.startsWith("processed_"))
-        .map { case (z, digest) =>
-          s"""SELECT '$z' AS zone, CAST(count(*) AS BIGINT) AS n_rows,
-                CAST($digest AS BIGINT) AS digest FROM $z""" } ++
-      queryDigests.map { case (q, digest) =>
-        s"""SELECT '$q' AS zone, CAST(count(*) AS BIGINT) AS n_rows,
-              CAST($digest AS BIGINT) AS digest
-            FROM (${AthenaQueries.all(q)})""" } :+
-      "SELECT 'wap_protocol' AS zone, CAST(4 AS BIGINT) AS n_rows, " +
-        "CAST(1111 AS BIGINT) AS digest"
-    OracleSql.withCtes(rows.mkString(" UNION ALL ") + " ORDER BY zone")
-  }
-
-  /** Oracle: identical summaries from the shared CTE registry (the
-    * DuckDB-side derivation of the same entities → pipelines →
-    * curated aggregates → Athena queries). */
-  val pipelineEndToEndOracle: String = {
-    val zoneSrc = Map(
-      "processed_sales_transactions" -> "SELECT * FROM sales_tx",
-      "curated_revenue_by_category" -> "SELECT * FROM curated_revenue_by_category",
-      "curated_campaign_performance_summary" ->
-        "SELECT * FROM curated_campaign_performance_summary",
-      "curated_delivery_partner_performance" ->
-        "SELECT * FROM curated_delivery_partner_performance",
-      "curated_area_feedback_metrics" ->
-        "SELECT * FROM curated_area_feedback_metrics",
-      "curated_category_inventory_impact" ->
-        "SELECT * FROM curated_category_inventory_impact",
-      "curated_product_inventory_discrepancies" ->
-        "SELECT * FROM curated_product_inventory_discrepancies")
-    val rows =
-      zoneDigests.map { case (z, digest) =>
-        s"""SELECT '$z' AS zone, CAST(count(*) AS BIGINT) AS n_rows,
-              CAST($digest AS BIGINT) AS digest FROM (${zoneSrc(z)})""" } ++
-      queryDigests.map { case (q, digest) =>
-        s"""SELECT '$q' AS zone, CAST(count(*) AS BIGINT) AS n_rows,
-              CAST($digest AS BIGINT) AS digest
-            FROM (${AthenaQueries.all(q)})""" }
-    OracleSql.withCtes(rows.mkString(" UNION ALL ") + " ORDER BY zone")
-  }
+  /** Oracle twin: the curated/query summaries plus the all-green
+    * protocol verdict row. */
+  val pipelineEndToEndLedgerOracle: String = summariesOracle(curatedZones,
+    Seq("SELECT 'wap_protocol' AS zone, CAST(4 AS BIGINT) AS n_rows, " +
+      "CAST(1111 AS BIGINT) AS digest"))
 }

@@ -1,5 +1,7 @@
 package graft.orchestrate
 
+import scala.util.{Failure, Success, Try}
+
 /** In-process replacement for the reference's event-driven
   * orchestration (S3 ObjectCreated → Lambda → sequential Glue jobs →
   * crawler refresh; `lambda/blinkit-etl-orchestrator.py`).
@@ -78,106 +80,67 @@ object Orchestrator {
     def succeeded: Boolean = status == "succeeded"
   }
 
-  /** Record-and-continue sequential run — the reference's isolation
-    * semantics: each job runs under its own try/except AND the 600 s
-    * budget (lambda:67); a failure or timeout is recorded and the NEXT
-    * job still runs. Timeout parity note: the lambda stops *polling* a
-    * Glue job at 600 s and moves on — the remote job may still be
-    * running. The in-process equivalent is the same contract: the job
-    * thread is abandoned (never killed — interrupting a mid-shuffle
-    * Spark action would poison the shared session) and the result map
-    * records `timeout`. Jobs run strictly sequentially (lambda:58-61),
-    * so at most one abandoned thread per timeout, and `runJob` must be
-    * idempotent on re-run like the reference's jobs. */
-  def runRecorded(objectKey: String,
-      timeoutSeconds: Long = jobTimeoutSeconds)(
-      runJob: Job => Unit): Seq[JobResult] =
-    route(objectKey).map(job =>
-      toResult(job, withBudget(timeoutSeconds, s"job $job")(runJob(job))))
-
-  /** One outcome classification for both runners. */
-  private def toResult(job: Job, outcome: Option[String]): JobResult =
-    outcome match {
-      case None => JobResult(job, "succeeded", None)
-      case Some(err) if err.startsWith("timeout") =>
-        JobResult(job, "timeout", Some(err))
-      case Some(err) => JobResult(job, "failed", Some(err))
-    }
-
-  /** One crawl-gating rule for both runners: crawl once, iff any job
-    * succeeded, under the crawler's own budget. */
-  private def crawlAfter(results: Seq[JobResult])(
+  /** Run the routed jobs and then the crawl — the reference's unit of
+    * work, with its isolation semantics: each job runs under its own
+    * try/except AND the 600 s budget (lambda:55-81); a failure or
+    * timeout is recorded and never stops a sibling. Timeout parity
+    * note: the lambda stops *polling* a Glue job at 600 s and moves on
+    * — the remote job may still be running. The in-process equivalent
+    * is the same contract: the job thread is abandoned (never killed —
+    * interrupting a mid-shuffle Spark action would poison the shared
+    * session) and its result records `timeout`, so `runJob` must be
+    * idempotent on re-run like the reference's jobs.
+    *
+    * The routed jobs run CONCURRENTLY, each on its own thread
+    * `graft-orchestrator-<Job>` — a documented semantics-preserving
+    * deviation from the reference's sequential loop (lambda:58-61;
+    * SURVEY §4.3): the five jobs are independent by construction (each
+    * reads only the raw zone and writes its OWN processed/curated
+    * prefix, exactly like the Glue jobs), and on a cluster they are
+    * five Glue jobs running at once, which is how five simultaneous S3
+    * events would launch them. Spark's scheduler interleaves their
+    * actions across the executor pool. Each budget starts at fan-out,
+    * and results come back in ROUTING order.
+    *
+    * Then the catalog-refresh step (`crawl` is typically
+    * `graft.io.Catalog` registration over the zones the jobs wrote):
+    * the lambda starts the crawler ONLY when at least one job succeeded
+    * (`if len(successful) > 0`, lambda:31-33) — an all-failed run
+    * leaves the catalog untouched, because there is no fresh zone to
+    * refresh. `crawl` receives only the SUCCEEDED jobs, runs on
+    * `graft-orchestrator-crawler` under its own 300 s budget, and its
+    * outcome is recorded, never thrown (`start_and_wait_crawler`,
+    * lambda:84-97). */
+  def runAndCrawl(objectKey: String, timeoutSeconds: Long = jobTimeoutSeconds)(
+      runJob: Job => Unit)(
       crawl: Seq[Job] => Unit): (Seq[JobResult], Option[String]) = {
+    val jobs = route(objectKey)
+    val results = jobs.zip(fanOut(jobs.map(j => () => runJob(j)), jobs.size,
+        i => s"graft-orchestrator-${jobs(i)}", Some(timeoutSeconds)))
+      .map { case (job, outcome) =>
+        JobResult(job, outcome match {
+            case None => "timeout"
+            case Some(Success(_)) => "succeeded"
+            case Some(Failure(_)) => "failed"
+          }, describe(outcome, s"job $job", timeoutSeconds))
+      }
     val succeeded = results.filter(_.succeeded).map(_.job)
     val crawlStatus =
       if (succeeded.isEmpty) None
-      else Some(withBudget(crawlTimeoutSeconds, "crawler")(
-        crawl(succeeded)).fold("succeeded")(identity))
+      else Some(describe(fanOut(Seq(() => crawl(succeeded)), 1,
+          _ => "graft-orchestrator-crawler", Some(crawlTimeoutSeconds)).head,
+        "crawler", crawlTimeoutSeconds).getOrElse("succeeded"))
     (results, crawlStatus)
   }
 
-  /** [[runRecorded]] with the routed jobs running as CONCURRENT Spark
-    * jobs — a documented semantics-preserving deviation from the
-    * reference's sequential loop (lambda:58-61; SURVEY §4.3): the five
-    * jobs are independent by construction (each reads only the raw
-    * zone and writes its OWN processed/curated prefix, exactly like
-    * the Glue jobs), so a multi-tenant scheduler can overlap them.
-    * Spark's scheduler interleaves the concurrent actions across the
-    * executor pool — on a cluster this is five Glue jobs running in
-    * parallel, which is how the reference's jobs would actually be
-    * launched by five simultaneous S3 events. Everything OBSERVABLE is
-    * preserved: per-job wall-clock budget (each [[withBudget]] thread
-    * starts at fan-out), per-job failure isolation, and results in
-    * ROUTING order. [[runRecorded]] stays the faithful sequential
-    * replica for routing-parity tests. */
-  def runRecordedConcurrent(objectKey: String,
-      timeoutSeconds: Long = jobTimeoutSeconds)(
-      runJob: Job => Unit): Seq[JobResult] = {
-    val jobs = route(objectKey)
-    val results = new Array[JobResult](jobs.length)
-    val threads = jobs.zipWithIndex.map { case (job, i) =>
-      val t = new Thread(() => {
-        results(i) =
-          toResult(job, withBudget(timeoutSeconds, s"job $job")(runJob(job)))
-      }, s"graft-orchestrator-fanout-$job")
-      t.setDaemon(true)
-      t.start()
-      t
-    }
-    threads.foreach(_.join())
-    results.toSeq
+  /** None on success, else the failure or timeout message. */
+  private def describe(outcome: Option[Try[Unit]], what: String,
+      timeoutSeconds: Long): Option[String] = outcome match {
+    case Some(Success(_)) => None
+    case Some(Failure(e)) =>
+      Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage)}")
+    case None => Some(s"timeout: $what exceeded ${timeoutSeconds}s budget")
   }
-
-  /** [[runAndCrawlRecorded]] over the concurrent fan-out: jobs overlap,
-    * the crawl still runs once afterwards iff any job succeeded. */
-  def runAndCrawlRecordedConcurrent(objectKey: String)(runJob: Job => Unit)(
-      crawl: Seq[Job] => Unit): (Seq[JobResult], Option[String]) =
-    crawlAfter(runRecordedConcurrent(objectKey)(runJob))(crawl)
-
-  /** Sequential run; failures/timeouts are recorded-and-skipped per
-    * job ([[runRecorded]] has the statuses). Returns jobs in execution
-    * order — every routed job is ATTEMPTED, matching the reference
-    * loop, not the first-failure prefix. */
-  def run(objectKey: String)(runJob: Job => Unit): Seq[Job] =
-    runRecorded(objectKey)(runJob).map(_.job)
-
-  /** Full reference sequence: jobs, then the catalog-refresh step
-    * (here `crawl` is typically `graft.io.Catalog` registration over
-    * the zones the jobs wrote). The lambda starts the crawler ONLY
-    * when at least one job succeeded (`if len(successful) > 0`,
-    * lambda:31-33) — an all-failed run leaves the catalog untouched,
-    * because there is no fresh zone to refresh. The crawl gets its own
-    * 300 s budget and records (never throws) its outcome
-    * (`start_and_wait_crawler`, lambda:84-97). `crawl` receives only
-    * the SUCCEEDED jobs — those are the zones that actually changed. */
-  def runAndCrawl(objectKey: String)(runJob: Job => Unit)(
-      crawl: Seq[Job] => Unit): Seq[Job] =
-    runAndCrawlRecorded(objectKey)(runJob)(crawl)._1.map(_.job)
-
-  /** [[runAndCrawl]] with the per-job and crawl outcomes exposed. */
-  def runAndCrawlRecorded(objectKey: String)(runJob: Job => Unit)(
-      crawl: Seq[Job] => Unit): (Seq[JobResult], Option[String]) =
-    crawlAfter(runRecorded(objectKey)(runJob))(crawl)
 
   /** One S3 ObjectCreated record inside an event envelope
     * (`event['Records'][i]['s3']`, lambda:20-22). */
@@ -209,34 +172,47 @@ object Orchestrator {
       .nextOption() match {
       case Some(rec) =>
         val (results, crawlStatus) =
-          runAndCrawlRecorded(rec.objectKey)(runJob)(crawl)
+          runAndCrawl(rec.objectKey)(runJob)(crawl)
         val code = if (results.forall(_.succeeded)) 200 else 207
         EventOutcome(code, Some(rec), results, crawlStatus)
       case None => EventOutcome(200, None, Nil, None)
     }
   }
 
-  /** Run `body` on a dedicated thread with a wall-clock budget.
-    * Returns None on success, Some(message) on failure or timeout.
-    * The thread is a daemon and is NOT interrupted on timeout (see
-    * [[runRecorded]] — abandoning the poll is the reference's
-    * semantics, and a killed Spark action would corrupt shared
-    * session state far worse than a stray thread). */
-  private def withBudget(timeoutSeconds: Long, what: String)(
-      body: => Unit): Option[String] = {
-    val outcome = new java.util.concurrent.atomic.AtomicReference[Option[String]](null)
-    val t = new Thread(() =>
-      outcome.set(
-        try { body; None }
-        catch { case e: Throwable =>
-          Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage)}")
-        }), s"graft-orchestrator-$what")
-    t.setDaemon(true)
-    t.start()
-    t.join(timeoutSeconds * 1000L)
-    Option(outcome.get()) match {
-      case Some(result) => result
-      case None => Some(s"timeout: $what exceeded ${timeoutSeconds}s budget")
+  /** The one way graft.orchestrate runs work on other threads: each
+    * task gets a fresh daemon thread `name(i)` that ends with its task,
+    * started by the calling thread (so it inherits the caller's Spark
+    * local properties), with at most `width` running at once. Waits
+    * until every task has ended, or, under a `budgetSeconds`, until
+    * that budget has passed since the task started, and returns the
+    * outcomes in task order: `None` for a task still running at its
+    * budget — abandoned, never interrupted (see [[runAndCrawl]]).
+    * Without a budget the enclosing job's budget bounds the wait, and
+    * a failed task never leaves a sibling running behind it. */
+  private[graft] def fanOut[A](tasks: Seq[() => A], width: Int,
+      name: Int => String,
+      budgetSeconds: Option[Long] = None): Seq[Option[Try[A]]] = {
+    val slots = new java.util.concurrent.Semaphore(math.max(1, width))
+    val outcomes =
+      new java.util.concurrent.atomic.AtomicReferenceArray[Try[A]](tasks.size)
+    val started = tasks.zipWithIndex.map { case (task, i) =>
+      slots.acquire()
+      val t = new Thread(() =>
+        try outcomes.set(i,
+          try Success(task()) catch { case e: Throwable => Failure(e) })
+        finally slots.release(), name(i))
+      t.setDaemon(true)
+      t.start()
+      t -> System.nanoTime()
+    }
+    started.zipWithIndex.map { case ((t, t0), i) =>
+      budgetSeconds match {
+        case None => t.join()
+        case Some(b) =>
+          val leftMs = (t0 + b * 1000000000L - System.nanoTime()) / 1000000L
+          if (leftMs > 0) t.join(leftMs)
+      }
+      Option(outcomes.get(i))
     }
   }
 }

@@ -77,11 +77,6 @@ object RollupRewrite {
   private val qtyExpr = "CAST(round(l_quantity * 100) AS BIGINT)"
   private val priceExpr = "CAST(round(l_extendedprice * 100) AS BIGINT)"
 
-  private def dirTag(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9.]", "_") + "_" +
-      java.lang.Integer.toHexString(
-        java.util.Arrays.hashCode(dir.getBytes("UTF-8")))
-
   /** Build (once) the rollup side-table for `dir`'s lineitem, register
     * its spec, and inject the rewrite rule into the session. */
   def ensure(spark: SparkSession, dir: String): Spec = {
@@ -93,7 +88,7 @@ object RollupRewrite {
       // rebuild — conservative in the right direction
       val fp = Tables.fingerprint(basePath)
       val rollupPath = s"${System.getProperty("java.io.tmpdir")}" +
-        s"/graft_rollup_${dirTag(dir)}"
+        s"/graft_rollup_${Tables.dirTag(dir)}"
       import org.apache.spark.sql.functions._
       val base = spark.read.parquet(basePath)
       base.groupBy("l_returnflag", "l_linestatus")

@@ -52,11 +52,13 @@ class CatalogSpec extends SparkSpec {
 
   test("orchestrator runs crawl after jobs, and only when jobs ran") {
     var crawled = Vector.empty[Seq[Orchestrator.Job]]
-    var ran = Vector.empty[Orchestrator.Job]
-    val jobs = Orchestrator.runAndCrawl("s3/orders_2024.csv")(j => ran :+= j)(
-      js => crawled :+= js)
-    assert(jobs == ran && crawled == Vector(jobs))
-    Orchestrator.runAndCrawl("ignore.txt")(j => ran :+= j)(js => crawled :+= js)
+    // the routed jobs run concurrently: record them thread-safely
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[Orchestrator.Job]()
+    val jobs = Orchestrator.runAndCrawl("s3/orders_2024.csv")(j => ran.add(j): Unit)(
+      js => crawled :+= js)._1.map(_.job)
+    import scala.jdk.CollectionConverters._
+    assert(jobs.toSet == ran.asScala.toSet && crawled == Vector(jobs))
+    Orchestrator.runAndCrawl("ignore.txt")(j => ran.add(j): Unit)(js => crawled :+= js)
     assert(crawled.size == 1) // non-csv: no jobs, no crawl
   }
 }

@@ -51,9 +51,39 @@ class CsvEndToEndSpec extends SparkSpec {
   }
 
   test("orchestrator routes an inventory drop to the reconciliation pipeline only") {
-    val ran = scala.collection.mutable.ArrayBuffer.empty[Orchestrator.Job]
-    Orchestrator.run("raw/inventory/inventoryNew_batch1.csv")(ran += _)
-    assert(ran.toSeq == Seq(Orchestrator.InventoryReconciliation))
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[Orchestrator.Job]()
+    Orchestrator.runAndCrawl("raw/inventory/inventoryNew_batch1.csv")(
+      j => ran.add(j): Unit)(_ => ())
+    import scala.jdk.CollectionConverters._
+    assert(ran.asScala.toSeq == Seq(Orchestrator.InventoryReconciliation))
+  }
+
+  test("in-job fan-out rethrows a failure only after every sibling has ended") {
+    val siblingDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException](EndToEnd.inParallel(Seq(
+      () => throw new IllegalStateException("task 0"),
+      () => { Thread.sleep(500); siblingDone.set(true) })))
+    assert(e.getMessage == "task 0")
+    assert(siblingDone.get,
+      "a sibling was still running when the fan-out threw")
+  }
+
+  test("in-job fan-out runs at most 6 at once, one fresh non-orchestrator thread per task") {
+    val live = new java.util.concurrent.atomic.AtomicInteger()
+    val peak = new java.util.concurrent.atomic.AtomicInteger()
+    // the first six tasks hold until all six are in flight
+    val firstSix = new java.util.concurrent.CountDownLatch(6)
+    val threads = EndToEnd.inParallel((0 until 13).map(_ => () => {
+      peak.accumulateAndGet(live.incrementAndGet(), math.max)
+      firstSix.countDown()
+      firstSix.await(10, java.util.concurrent.TimeUnit.SECONDS)
+      Thread.sleep(20)
+      live.decrementAndGet()
+      Thread.currentThread()
+    }))
+    assert(peak.get == 6)
+    assert(threads.distinct.size == 13 && threads.forall(!_.isAlive))
+    assert(threads.forall(t => !t.getName.startsWith("graft-orchestrator-")))
   }
 
   test("summary union collects each branch in the union's column order") {

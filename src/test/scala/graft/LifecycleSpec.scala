@@ -26,18 +26,19 @@ class LifecycleSpec extends SparkSpec {
     val processedEvents = s"$root/processed/events"
 
     // ---- 1. object drop + routing (lambda:17-53 semantics) ----
-    var ran = Vector.empty[Orchestrator.Job]
+    // the routed jobs run concurrently: record them thread-safely
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[Orchestrator.Job]()
     var crawled = Vector.empty[Seq[Orchestrator.Job]]
-    val jobs = Orchestrator.runAndCrawl("incoming/orders_2024_08.csv") {
+    val (results, _) = Orchestrator.runAndCrawl("incoming/orders_2024_08.csv") {
       case Orchestrator.SalesRevenue =>
-        ran :+= Orchestrator.SalesRevenue
+        ran.add(Orchestrator.SalesRevenue)
         val sales = SalesRevenue.run(
           Entities.orders(spark, sfTiny), Entities.orderItems(spark, sfTiny),
           Entities.products(spark, sfTiny))
         graft.io.Writers.curated(
           Aggregations.revenueByCategory(sales), curatedRevenue)
       case Orchestrator.DeliveryPerformance =>
-        ran :+= Orchestrator.DeliveryPerformance
+        ran.add(Orchestrator.DeliveryPerformance)
         graft.io.Writers.curated(
           Aggregations.deliveryPartnerPerformance(
             DeliveryPerformance.run(Entities.orders(spark, sfTiny))),
@@ -51,12 +52,16 @@ class LifecycleSpec extends SparkSpec {
       Catalog.registerExternalUnpartitioned(
         spark, "lifecycle_delivery_partner", curatedDelivery)
     }
-    // an orders object fans out to exactly the two sales jobs, in order
+    // an orders object fans out to exactly the two sales jobs, results
+    // in routing order
+    val jobs = results.map(_.job)
+    assert(results.forall(_.succeeded), results)
     assert(jobs == Seq(Orchestrator.SalesRevenue, Orchestrator.DeliveryPerformance))
-    assert(ran == jobs && crawled == Vector(jobs))
+    import scala.jdk.CollectionConverters._
+    assert(ran.asScala.toSet == jobs.toSet && crawled == Vector(jobs))
     // and a non-csv drop triggers nothing (lambda:23 early return)
     assert(Orchestrator.runAndCrawl("incoming/orders.parquet")(
-      _ => fail("routed a non-csv object"))(_ => fail("crawled with no jobs")).isEmpty)
+      _ => fail("routed a non-csv object"))(_ => fail("crawled with no jobs"))._1.isEmpty)
 
     // ---- 2. streaming leg: AvailableNow ingest → partitioned zone ----
     // y/m/d partitioning — the reference's processed-zone layout

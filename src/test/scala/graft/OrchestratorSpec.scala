@@ -49,54 +49,54 @@ class OrchestratorSpec extends AnyFunSuite {
       Seq(SalesRevenue, DeliveryPerformance))
   }
 
-  test("run executes routed jobs sequentially in order") {
-    val ran = scala.collection.mutable.ArrayBuffer.empty[Job]
-    val jobs = Orchestrator.run("orders_x.csv")(ran += _)
-    assert(jobs == Seq(SalesRevenue, DeliveryPerformance))
-    assert(ran.toSeq == jobs)
+  /** Jobs run concurrently, so they record into a thread-safe queue. */
+  private def recorder() = new java.util.concurrent.ConcurrentLinkedQueue[Job]()
+  private def ranSet(q: java.util.concurrent.ConcurrentLinkedQueue[Job]) = {
+    import scala.jdk.CollectionConverters._
+    q.asScala.toSet
   }
 
   test("a failing job is recorded and the remaining jobs still run (lambda:55-81)") {
-    val ran = scala.collection.mutable.ArrayBuffer.empty[Job]
+    val ran = recorder()
     // default route → all five jobs; fail the middle one
-    val results = Orchestrator.runRecorded("raw/customers/c.csv") { j =>
+    val (results, _) = Orchestrator.runAndCrawl("raw/customers/c.csv") { j =>
       if (j == CustomerFeedback) sys.error("bad feedback csv")
-      ran += j
-    }
+      ran.add(j): Unit
+    }(_ => ())
     assert(results.map(_.job) == allJobs)
-    assert(ran.toSeq == allJobs.filterNot(_ == CustomerFeedback),
-      "jobs after the failure must still execute")
+    assert(ranSet(ran) == allJobs.filterNot(_ == CustomerFeedback).toSet,
+      "jobs beside the failure must still execute")
     val byJob = results.map(r => r.job -> r).toMap
     assert(byJob(CustomerFeedback).status == "failed")
     assert(byJob(CustomerFeedback).error.exists(_.contains("bad feedback csv")))
     assert(allJobs.filterNot(_ == CustomerFeedback)
       .forall(byJob(_).succeeded))
-    // the run/runAndCrawl convenience forms attempt every routed job too
-    val attempted = Orchestrator.run("raw/customers/c.csv") { j =>
-      if (j == SalesRevenue) sys.error("boom") }
-    assert(attempted == allJobs)
+    // a failure of the FIRST routed job still leaves every job attempted
+    val (attempted, _) = Orchestrator.runAndCrawl("raw/customers/c.csv") { j =>
+      if (j == SalesRevenue) sys.error("boom") }(_ => ())
+    assert(attempted.map(_.job) == allJobs)
   }
 
   test("a job exceeding its budget is recorded as timeout; later jobs run (lambda:67)") {
-    val ran = scala.collection.mutable.ArrayBuffer.empty[Job]
+    val ran = recorder()
     val gate = new java.util.concurrent.CountDownLatch(1)
-    val results = Orchestrator.runRecorded("orders_x.csv",
+    val (results, _) = Orchestrator.runAndCrawl("orders_x.csv",
         timeoutSeconds = 1) { j =>
       if (j == SalesRevenue) gate.await() // never released within budget
-      else ran += j
-    }
+      else ran.add(j): Unit
+    }(_ => ())
     gate.countDown() // unblock the abandoned thread before asserting
     val byJob = results.map(r => r.job -> r).toMap
     assert(byJob(SalesRevenue).status == "timeout")
     assert(byJob(SalesRevenue).error.exists(_.contains("exceeded 1s")))
     assert(byJob(DeliveryPerformance).succeeded)
-    assert(ran.toSeq == Seq(DeliveryPerformance))
+    assert(ranSet(ran) == Set(DeliveryPerformance))
   }
 
   test("crawl runs only when at least one job SUCCEEDED (lambda:31-33)") {
     // all jobs fail → no crawl (no zone changed; nothing to refresh)
     val (allFailed, noCrawlAllFailed) =
-      Orchestrator.runAndCrawlRecorded("marketing_m.csv") { _ =>
+      Orchestrator.runAndCrawl("marketing_m.csv") { _ =>
         sys.error("etl failed")
       } { _ => fail("crawler must not start after an all-failed run") }
     assert(allFailed.map(_.status) == Seq("failed"))
@@ -104,7 +104,7 @@ class OrchestratorSpec extends AnyFunSuite {
     // partial success → crawl runs, and sees ONLY the succeeded jobs
     var crawled: Seq[Job] = Nil
     val (partial, crawlStatus) =
-      Orchestrator.runAndCrawlRecorded("raw/customers/c.csv") { j =>
+      Orchestrator.runAndCrawl("raw/customers/c.csv") { j =>
         if (j == CustomerFeedback) sys.error("bad feedback csv")
       } { jobs => crawled = jobs }
     assert(partial.count(_.succeeded) == 4)
@@ -112,11 +112,11 @@ class OrchestratorSpec extends AnyFunSuite {
     assert(crawled == allJobs.filterNot(_ == CustomerFeedback))
     // non-matching key: no jobs, no crawl (lambda's early return)
     val (none, noCrawl) =
-      Orchestrator.runAndCrawlRecorded("x.json")(_ => ())(_ => fail("crawled"))
+      Orchestrator.runAndCrawl("x.json")(_ => ())(_ => fail("crawled"))
     assert(none.isEmpty && noCrawl.isEmpty)
     // a crawler failure is reported, not thrown
     val (_, failedCrawl) =
-      Orchestrator.runAndCrawlRecorded("marketing_m.csv")(_ => ()) {
+      Orchestrator.runAndCrawl("marketing_m.csv")(_ => ()) {
         _ => sys.error("crawler down") }
     assert(failedCrawl.exists(_.contains("crawler down")))
   }
@@ -126,27 +126,41 @@ class OrchestratorSpec extends AnyFunSuite {
     // that only opens when every job has arrived — a sequential runner
     // would deadlock here (and the budget would record timeouts)
     val gate = new java.util.concurrent.CyclicBarrier(5)
-    val rs = Orchestrator.runRecordedConcurrent(
+    val (rs, _) = Orchestrator.runAndCrawl(
       "incoming/daily_batch.csv", timeoutSeconds = 60) { j =>
       gate.await(30, java.util.concurrent.TimeUnit.SECONDS): Unit
       if (j == MarketingRoi) sys.error("boom")
-    }
+    }(_ => ())
     assert(rs.map(_.job) == Orchestrator.route("incoming/daily_batch.csv"),
       "results must come back in routing order")
     assert(rs.count(_.succeeded) == 4)
     assert(rs.find(_.job == MarketingRoi).exists(_.status == "failed"))
   }
 
+  test("each job runs on graft-orchestrator-<Job>, the crawl on graft-orchestrator-crawler") {
+    val names = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val (rs, crawl) = Orchestrator.runAndCrawl("order_feedback.csv") { j =>
+      names.put(j.toString, Thread.currentThread().getName): Unit
+    } { _ => names.put("crawl", Thread.currentThread().getName): Unit }
+    assert(rs.forall(_.succeeded) && crawl.contains("succeeded"))
+    import scala.jdk.CollectionConverters._
+    assert(names.asScala.toMap == Map(
+      "SalesRevenue" -> "graft-orchestrator-SalesRevenue",
+      "DeliveryPerformance" -> "graft-orchestrator-DeliveryPerformance",
+      "CustomerFeedback" -> "graft-orchestrator-CustomerFeedback",
+      "crawl" -> "graft-orchestrator-crawler"))
+  }
+
   test("multi-record event: first runnable CSV wins, rest dropped (lambda:17-38)") {
-    val ran = scala.collection.mutable.ArrayBuffer.empty[Job]
+    val ran = recorder()
     val out = Orchestrator.handleEvent(Seq(
       S3Record("b", "notes.txt"),              // not csv → skipped
       S3Record("b", "feedback_day1.csv"),      // first runnable → runs
       S3Record("b", "marketing_day1.csv")))(   // DROPPED (lambda's in-loop return)
-      ran += _)(_ => ())
+      j => ran.add(j): Unit)(_ => ())
     assert(out.statusCode == 200)
     assert(out.processed.map(_.objectKey).contains("feedback_day1.csv"))
-    assert(ran.toSeq == Seq(CustomerFeedback),
+    assert(ranSet(ran) == Set(CustomerFeedback),
       "later records in the envelope must not run")
     // partial failure → 207 (lambda:34)
     val out207 = Orchestrator.handleEvent(Seq(
