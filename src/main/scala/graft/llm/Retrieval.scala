@@ -5,6 +5,11 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Gen._
 
+/** One MMR pick row of `Retrieval.mmrGreedy`'s bounded output. Top
+  * level and public: declared private inside `Retrieval`, its
+  * generated encoder failed to compile and the UDF ran interpreted. */
+case class MmrPick(vec_id: Long, rank: Int, mmr_nano: Long)
+
 /** Hybrid retrieval: reciprocal-rank fusion (Cormack et al. 2009) of
   * the engine's lexical tier (TF-IDF cosine over 3-gram shingles, the
   * staged [[TextAnalysis.tfidfSims]] relation) and its semantic tier
@@ -270,9 +275,6 @@ object Retrieval {
         "p.mmr_nano AS mmr_nano")
       .orderBy("query_id", "rank")
   }
-
-  /** One MMR pick row of [[mmrGreedy]]'s bounded output. */
-  private case class MmrPick(vec_id: Long, rank: Int, mmr_nano: Long)
 
   /** The per-query greedy, replayed imperatively over the pool arrays
     * — the exact integer path of the r13 relational rounds: round 1

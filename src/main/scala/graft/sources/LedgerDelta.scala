@@ -25,9 +25,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * The rowId works because physical line ordinals are STABLE under
   * deletion-vector changes — only a file rewrite invalidates them,
-  * and every rewrite mints fresh file names — so the commit's
-  * conflict check is the same (file, dv-at-planning) pair discipline
-  * [[LedgerMaintenance.deleteMoR]] uses.
+  * and every rewrite mints fresh file names — so the commit checks
+  * each target's (file, dv-at-planning) pair. The procedural
+  * [[LedgerMaintenance.deleteMoR]] / `updateMoR` drive this same
+  * writer and commit.
   *
   * Selected per session via `graft.ledger.rowLevelMode=mor`; the
   * group-based copy-on-write path stays the default (partition-tuple
@@ -110,18 +111,20 @@ private[sources] case class LedgerDeltaCommitMessage(
     entries: Seq[LedgerSink.FileEntry]) extends WriterCommitMessage
 
 private[sources] class LedgerDeltaBatchWrite(dir: Path,
-    dataSchema: StructType) extends DeltaBatchWrite {
+    dataSchema: StructType,
+    pinned: Option[LedgerSink.Manifest] = None) extends DeltaBatchWrite {
 
-  /** Planning snapshot: captured once at job start (driver). The
-    * writer unions new ordinals into each file's DV AS OF this
-    * snapshot, and commit verifies each touched (file, dv) pair is
-    * still current — a racing deleteMoR/OPTIMIZE/COW against a target
-    * file aborts cleanly instead of dropping its ordinals. */
+  /** Planning snapshot: captured once at job start (driver), or the
+    * state the caller `pinned` its scan to. The writer unions new
+    * ordinals into each file's DV AS OF this snapshot, and commit
+    * verifies each touched (file, dv) pair is still current — a racing
+    * deleteMoR/OPTIMIZE/COW against a target file aborts cleanly
+    * instead of dropping its ordinals. */
   @volatile private var snapshot: Option[LedgerSink.Manifest] = None
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DeltaWriterFactory = {
-    val m = LedgerSink.readManifest(dir).getOrElse(
+    val m = pinned.orElse(LedgerSink.readManifest(dir)).getOrElse(
       throw new IllegalStateException(
         s"delta row-level write on a dropped ledger table: $dir"))
     snapshot = Some(m)

@@ -1,20 +1,13 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog._
-import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.expressions.{Expression => ConnectorExpression, Expressions, SortOrder => ConnectorSortOrder, Transform}
-import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, CountStar, Max => AggMax, Min => AggMin}
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.connector.write.{PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
+
 /** OPTIMIZE as a commit kind: bin-pack the table's small files into
   * target-sized ones and commit the swap as a new version — the
   * answer to epoch-grain streaming appends accumulating one file per
@@ -43,55 +36,109 @@ object LedgerMaintenance {
     * the dv reference.
     *
     * `filters` is a CONJUNCTION over the Spark source-filter ADT
-    * (equality/range/null/IN on the table's columns) — the evaluation
-    * runs distributed, one task per candidate file; files the
-    * manifest's partition/stats metadata can't exclude are scanned,
-    * matching ordinals written from the executor, and the commit
-    * rebases under the table lock (a racing rewrite of a target file
-    * aborts cleanly). Returns the number of deleted rows. */
+    * (equality/range/null/IN on the table's columns). The delete runs
+    * on the same delta writer as SQL `DELETE` under
+    * `graft.ledger.rowLevelMode=mor` (see [[runDelta]]). Returns the
+    * number of deleted rows. */
   def deleteMoR(spark: SparkSession, dirStr: String,
-      filters: Array[org.apache.spark.sql.sources.Filter]): Long = {
+      filters: Array[Filter]): Long =
+    runDelta(spark, dirStr, filters, None)
+
+  /** MERGE-ON-READ UPDATE — the Delta DV-update design: ONE commit
+    * carries (a) fresh deletion vectors marking the matched rows dead
+    * in their files and (b) appended files holding the updated
+    * versions, so readers see the update atomically and no touched
+    * file is rewritten. `set` maps column → SQL expression over the
+    * row (e.g. "price_c" → "price_c + 111"). The images go through the
+    * SQL delta writer, so they carry the target's field ids, partition
+    * tuples and bloom sidecars, and must pass its CHECK/NOT NULL
+    * constraints. Returns the number of updated rows. */
+  def updateMoR(spark: SparkSession, dirStr: String,
+      filters: Array[Filter], set: Map[String, String]): Long =
+    runDelta(spark, dirStr, filters, Some(set))
+
+  /** The procedural face of the SQL delta path ([[LedgerDeltaBatchWrite]]):
+    * the filter conjunction selects the matched rows' `(_file, _pos)`
+    * rowIds (and, for an update, their SET images in table-schema
+    * order) through the ordinary batch scan — which already applies
+    * defaults, equality deletes and DVs, so only LIVE rows match —
+    * then one task per target file drives a [[LedgerDeltaWriter]] and
+    * the batch write commits DV swaps and update images in one
+    * manifest swap. Scan and writer share one PINNED planning version:
+    * rows a concurrent append lands after planning are neither marked
+    * dead nor re-emitted, and a racing rewrite of a target file (or a
+    * schema, spec, constraint or equality-delete change) aborts the
+    * commit with a ConcurrentModificationException. */
+  private def runDelta(spark: SparkSession, dirStr: String,
+      filters: Array[Filter], set: Option[Map[String, String]]): Long = {
+    import org.apache.spark.sql.functions.{col, expr, lit, struct}
     val dir = Paths.get(dirStr)
-    val m = LedgerSink.readManifest(dir).getOrElse(
+    // currentVersion-then-readManifestAt is a consistent pair: a commit
+    // landing in between archives v, and the archive read is identical
+    val planVersion = LedgerSink.currentVersion(dir)
+    val m = LedgerSink.readManifestAt(dir, Some(planVersion)).getOrElse(
       throw new IllegalArgumentException(s"no ledger table at $dirStr"))
-    val (newDvs, deleted) = planDvs(spark, dir, m, filters)
-    if (newDvs.isEmpty) return 0L
-    try LedgerSink.commitRebase(dir, cur =>
-      // every target (file, dv-at-planning) entry must be unchanged —
-      // a racing rewrite of a target file would make our ordinals wrong
-      cur.filter(c => newDvs.keySet.subsetOf(c.files
-          .filter(e => m.files.exists(o => o.file == e.file && o.dv == e.dv))
-          .map(_.file).toSet))
-        .map(c => c.copy(files = c.files.map(e =>
-          newDvs.get(e.file).fold(e)(d => e.copy(dv = Some(d)))))),
-      s"deleteMoR on $dirStr raced a commit that rewrote one of its " +
-        "target files; re-run the delete")
-    catch {
-      case ex: java.util.ConcurrentModificationException =>
-        newDvs.values.foreach(d =>
-          Files.deleteIfExists(dir.resolve(d)): Unit)
-        throw ex
+    val schema = m.schema
+    val update = set.isDefined
+    filters.foreach(checkShape(schema, _))
+    set.foreach(_.keys.foreach(k => schema.fieldIndex(k): Unit))
+    // each SET image takes its column's type, as SQL UPDATE's
+    // assignment does: the writer reads the row by the table schema
+    val images = set.map(s => struct(schema.fields.toSeq.map(f =>
+      s.get(f.name).fold(col(f.name))(e =>
+        expr(e).cast(f.dataType).as(f.name))): _*))
+    val rows = spark.read.format(classOf[LedgerSink].getName)
+      .option("path", dirStr)
+      .option("versionAsOf", planVersion.toString).load()
+      .filter(filters.map(toColumn).foldLeft(lit(true))(_ && _))
+      .select(Seq(col(LedgerSink.MetaFileCol), col(LedgerSink.MetaPosCol)) ++
+        images: _*)
+      // one task owns each target file's deletion vector — the
+      // clustering LedgerDeltaWrite.requiredDistribution asks of SQL
+      .repartition(col(LedgerSink.MetaFileCol))
+      .queryExecution.toRdd
+    val write = new LedgerDeltaBatchWrite(dir,
+      if (update) schema else new StructType(), Some(m))
+    val factory = write.createBatchWriterFactory(
+      new PhysicalWriteInfo { def numPartitions(): Int = rows.getNumPartitions })
+    val width = schema.length
+    // the row is (_file, _pos, [image]): its leading pair IS the rowId
+    val task = (ctx: org.apache.spark.TaskContext,
+        it: Iterator[InternalRow]) => {
+      val w = factory.createWriter(ctx.partitionId(), ctx.taskAttemptId())
+      try {
+        var n = 0L
+        it.foreach { r =>
+          if (update) w.update(InternalRow.empty, r, r.getStruct(2, width))
+          else w.delete(InternalRow.empty, r)
+          n += 1
+        }
+        (w.commit(), n)
+      } catch {
+        case t: Throwable => w.abort(); throw t
+      } finally w.close()
     }
-    deleted
+    // results arrive per task, so a failed job can abort exactly the
+    // tasks that staged files
+    val done = new Array[(WriterCommitMessage, Long)](rows.getNumPartitions)
+    try spark.sparkContext.runJob(rows, task,
+      (i: Int, res: (WriterCommitMessage, Long)) => done(i) = res)
+    catch {
+      case t: Throwable =>
+        write.abort(done.filter(_ != null).map(_._1)); throw t
+    }
+    write.commit(done.map(_._1))
+    done.map(_._2).sum
   }
 
-  /** The shared merge-on-read scan: stage a fresh DV sidecar for every
-    * file holding LIVE rows matching `filters` (ordinals unioned with
-    * the file's existing vector); returns (file → new sidecar,
-    * matched-row count). Stages only — callers commit. */
-  private def planDvs(spark: SparkSession, dir: Path,
-      m: LedgerSink.Manifest,
-      filters: Array[org.apache.spark.sql.sources.Filter])
-      : (Map[String, String], Long) = {
-    import org.apache.spark.sql.sources._
-    val schema = m.schema
-    val ddl = schema.toDDL
-    // validate filter shapes AND literal types up front (fail before
-    // any work): a literal cmp cannot evaluate would otherwise make
-    // every row non-matching and the call return 0 as if the rows
-    // were deleted. RANGE comparisons on strings are refused — Java's
-    // UTF-16 compareTo and Spark's UTF-8 byte order diverge beyond the
-    // BMP, and updateMoR re-evaluates the same predicate through SQL.
+  // validate filter shapes AND literal types up front (fail before any
+  // work): a literal that cannot compare would otherwise make every row
+  // non-matching and the call return 0 as if the rows were deleted.
+  // RANGE comparisons on strings are refused: Spark orders strings by
+  // UTF-8 bytes, Java's String by UTF-16 units, and the two diverge
+  // beyond the BMP — a range built on the JVM side would match rows
+  // its caller does not expect.
+  private def checkShape(schema: StructType, f: Filter): Unit = {
     def checkLit(c: String, v: Any, range: Boolean): Unit = {
       val dt = schema.fields(schema.fieldIndex(c)).dataType
       val ok = (dt, v) match {
@@ -104,7 +151,7 @@ object LedgerMaintenance {
           s"column $c ($dt) with literal " +
           s"$v (${if (v == null) "null" else v.getClass.getSimpleName})")
     }
-    def checkShape(f: Filter): Unit = f match {
+    f match {
       case EqualTo(c, v) => checkLit(c, v, range = false)
       case GreaterThan(c, v) => checkLit(c, v, range = true)
       case GreaterThanOrEqual(c, v) => checkLit(c, v, range = true)
@@ -116,240 +163,21 @@ object LedgerMaintenance {
       case other => throw new UnsupportedOperationException(
         s"MoR predicates support equality/range/null/IN conjunctions, got $other")
     }
-    filters.foreach(checkShape)
-    val base = dir.toString
-    val runTag = java.util.UUID.randomUUID().toString.take(8)
-    // one task per file: evaluate the conjunction on decoded rows,
-    // union with the existing DV, stage a fresh sidecar
-    val jobs = m.files.zipWithIndex.map { case (e, i) =>
-      val (positions, width) = e.ids match {
-        case Some(fids) =>
-          (schema.fields.map(f => fids.indexOf(m.idOf(f.name))), fids.length)
-        case None =>
-          (schema.fields.map(f => schema.fieldIndex(f.name)), schema.length)
-      }
-      // equality deletes compose: rows they already killed are dead,
-      // not "matched" — marking them again would inflate the returned
-      // count and lie to the caller
-      (e.file, e.dv, positions, width, i,
-        LedgerSink.eqdBindings(dir, m, e),
-        // INITIAL DEFAULTS must apply here exactly as in the public
-        // reader: a predicate on a defaulted column would otherwise
-        // see NULL where every SELECT shows the default — silently
-        // matching the wrong rows (and updateMoR's DV set would
-        // disagree with its own update images)
-        LedgerSink.defaultsArray(m, positions, m.ids.toArray))
-    }
-    val results = spark.sparkContext
-      .parallelize(jobs, math.max(1, jobs.length))
-      .map { case (file, oldDv, positions, width, i, eqd, defEnc) =>
-        val st = StructType.fromDDL(ddl)
-        val types = st.fields.map(_.dataType)
-        val colIdx: Map[String, Int] = st.fieldNames.zipWithIndex.toMap
-        val lines = Files.readAllLines(Paths.get(base, file), UTF_8)
-        val eqKilled = LedgerSink.eqdKillPredicate(eqd)
-        val defVals: Array[Any] =
-          if (defEnc.isEmpty) null
-          else defEnc.indices.map(j =>
-            if (defEnc(j) == null) null
-            else LedgerSink.parseValue(types(j), defEnc(j)): Any).toArray
-        def withDefaults(row: InternalRow): InternalRow = {
-          if (defVals != null) {
-            val g = row.asInstanceOf[GenericInternalRow]
-            var j = 0
-            while (j < defVals.length) {
-              if (defVals(j) != null && positions(j) == -1)
-                g.update(j, defVals(j))
-              j += 1
-            }
-          }
-          row
-        }
-        val dvOld = oldDv.map(d =>
-          LedgerSink.readDvOrdinals(Paths.get(base, d)))
-          .getOrElse(new java.util.BitSet())
-        def matches(row: InternalRow): Boolean = filters.forall { f =>
-          def idx(c: String) = colIdx(c)
-          def cmp(c: String, v: Any): Option[Int] = {
-            val j = idx(c)
-            if (row.isNullAt(j)) None
-            else (types(j), v) match {
-              case (LongType, x: Number) =>
-                Some(java.lang.Long.compare(row.getLong(j), x.longValue))
-              case (IntegerType, x: Number) =>
-                Some(java.lang.Long.compare(row.getInt(j).toLong, x.longValue))
-              case (DoubleType, x: Number) =>
-                Some(java.lang.Double.compare(row.getDouble(j), x.doubleValue))
-              case (StringType, x: String) =>
-                Some(row.getUTF8String(j).toString.compareTo(x))
-              case _ => None
-            }
-          }
-          f match {
-            case EqualTo(c, v) => cmp(c, v).contains(0)
-            case GreaterThan(c, v) => cmp(c, v).exists(_ > 0)
-            case GreaterThanOrEqual(c, v) => cmp(c, v).exists(_ >= 0)
-            case LessThan(c, v) => cmp(c, v).exists(_ < 0)
-            case LessThanOrEqual(c, v) => cmp(c, v).exists(_ <= 0)
-            case In(c, vs) => vs.exists(v => cmp(c, v).contains(0))
-            case IsNull(c) => row.isNullAt(idx(c))
-            case IsNotNull(c) => !row.isNullAt(idx(c))
-            case _ => false
-          }
-        }
-        val dvNew = dvOld.clone().asInstanceOf[java.util.BitSet]
-        var hits = 0L
-        var ord = 0
-        lines.forEach { line =>
-          if (!dvOld.get(ord) && (eqKilled == null || !eqKilled(line)) &&
-              matches(withDefaults(LedgerSink.decodeProjected(
-                line, positions, types, width)))) {
-            dvNew.set(ord); hits += 1
-          }
-          ord += 1
-        }
-        if (hits == 0L) (file, None: Option[String], 0L)
-        else {
-          val rel = s"_staging/dv-$runTag-$i.dv"
-          val sb = new StringBuilder
-          var b = dvNew.nextSetBit(0)
-          while (b >= 0) { sb.append(b).append('\n'); b = dvNew.nextSetBit(b + 1) }
-          Files.write(Paths.get(base, rel), sb.toString.getBytes(UTF_8))
-          (file, Some(rel), hits)
-        }
-      }.collect()
-    val newDvs: Map[String, String] =
-      results.collect { case (f, Some(d), _) => f -> d }.toMap
-    val matched = results.map(_._3).sum
-    (newDvs, matched)
   }
 
-  /** MERGE-ON-READ UPDATE — the Delta DV-update design: ONE commit
-    * carries (a) fresh deletion vectors marking the matched rows dead
-    * in their files and (b) appended files holding the updated
-    * versions, so readers see the update atomically and no touched
-    * file is rewritten. `set` maps column → SQL expression over the
-    * row (e.g. "price_c" → "price_c + 111"); the matched set comes
-    * from the SAME predicate evaluated twice — once by the MoR scan
-    * for ordinals, once through the public (DV-merging) reader for
-    * values — which agree because [[planDvs]] only admits predicate
-    * shapes whose semantics are identical in both evaluators.
-    * Partitioned tables work too: the scratch ledger the update
-    * images stage through is pre-created with the TARGET's partition
-    * spec, so every staged file carries its partition tuple under the
-    * same transforms (the [[org.apache.spark.sql.connector.write]]
-    * SupportsDelta SQL path and this procedural path now share the
-    * partition-aware write shape); a mid-flight partition-spec change
-    * conflicts like any other racing rewrite.
-    * Returns the number of updated rows. */
-  def updateMoR(spark: SparkSession, dirStr: String,
-      filters: Array[org.apache.spark.sql.sources.Filter],
-      set: Map[String, String]): Long = {
+  private def toColumn(f: Filter): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions.{col, lit}
-    val dir = Paths.get(dirStr)
-    // pin the PLANNING VERSION: currentVersion-then-readManifestAt is a
-    // consistent pair (a commit landing in between archives v, and the
-    // archive read is identical), and the value read below targets the
-    // same v — rows a concurrent append lands AFTER planning are
-    // neither marked dead nor re-emitted, giving clean serializability
-    // (this update happened at v; the append happened after)
-    val planVersion = LedgerSink.currentVersion(dir)
-    val m = LedgerSink.readManifestAt(dir, Some(planVersion)).getOrElse(
-      throw new IllegalArgumentException(s"no ledger table at $dirStr"))
-    val schema = m.schema
-    set.keys.foreach(k => schema.fieldIndex(k): Unit)
-    val (newDvs, matched) = planDvs(spark, dir, m, filters)
-    if (matched == 0L) return 0L
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    // updated rows: the same predicate through the public DV-merging
-    // reader, SET expressions applied per column
-    def toColumn(f: org.apache.spark.sql.sources.Filter)
-        : org.apache.spark.sql.Column = {
-      import org.apache.spark.sql.sources._
-      f match {
-        case EqualTo(c, v) => col(c) === lit(v)
-        case GreaterThan(c, v) => col(c) > lit(v)
-        case GreaterThanOrEqual(c, v) => col(c) >= lit(v)
-        case LessThan(c, v) => col(c) < lit(v)
-        case LessThanOrEqual(c, v) => col(c) <= lit(v)
-        case In(c, vs) => col(c).isin(vs.toSeq: _*)
-        case IsNull(c) => col(c).isNull
-        case IsNotNull(c) => col(c).isNotNull
-        case other => throw new UnsupportedOperationException(other.toString)
-      }
+    f match {
+      case EqualTo(c, v) => col(c) === lit(v)
+      case GreaterThan(c, v) => col(c) > lit(v)
+      case GreaterThanOrEqual(c, v) => col(c) >= lit(v)
+      case LessThan(c, v) => col(c) < lit(v)
+      case LessThanOrEqual(c, v) => col(c) <= lit(v)
+      case In(c, vs) => col(c).isin(vs.toSeq: _*)
+      case IsNull(c) => col(c).isNull
+      case IsNotNull(c) => col(c).isNotNull
+      case other => throw new UnsupportedOperationException(other.toString)
     }
-    val updated = spark.read.format(classOf[LedgerSink].getName)
-      .option("path", dirStr)
-      .option("versionAsOf", planVersion.toString).load()
-      .filter(filters.map(toColumn).reduce(_ && _))
-      .selectExpr(schema.fieldNames.toSeq.map(n =>
-        set.get(n).map(e => s"($e) AS $n").getOrElse(n)): _*)
-    // stage the updated rows through the normal write protocol against
-    // a scratch ledger, then MOVE its files into this table's staging —
-    // same filesystem, so the move is metadata-only — and remap their
-    // entries to the TARGET's field ids (the scratch table binds fresh
-    // 1..n ids; positionally identical because the projection above is
-    // in table-schema order)
-    val tmp = Files.createTempDirectory(s"graft_mor_upd_$tag")
-    Files.createDirectories(dir.resolve("_staging"))
-    // the scratch table is PRE-CREATED with the target's partition
-    // spec (by NAME, re-resolved against the scratch's fresh 1..n
-    // ids), so the append below stamps every staged file with its
-    // partition tuple under the SAME transforms the target prunes by
-    LedgerSink.writeManifestAtomic(tmp,
-      LedgerSink.Manifest.fresh(schema, m.namedPartitionSpec))
-    val moved =
-      try {
-        updated.write.format(classOf[LedgerSink].getName)
-          .option("path", tmp.toString).mode("append").save()
-        LedgerSink.readManifest(tmp).get.files.zipWithIndex.map {
-          case (e, i) =>
-            val rel = s"_staging/upd-$tag-$i.ledger"
-            Files.move(tmp.resolve(e.file), dir.resolve(rel))
-            // the bloom sidecar moves with its file; its header's
-            // field id remaps like the entry's ids
-            val bloomRel = e.bloom.map { b =>
-              val br = s"_staging/upd-$tag-$i.bf"
-              val (bm, _, fid, bits) =
-                LedgerSink.readBloomSidecar(tmp.resolve(b))
-              val scratchIds = LedgerSink.readManifest(tmp).get.ids
-              val pos = scratchIds.indexOf(fid)
-              LedgerSink.writeBloomSidecar(dir.resolve(br), bm,
-                m.ids.toSeq(pos), bits)
-              br
-            }
-            // partition tuple carries over verbatim (same named spec,
-            // same transforms); stamp the TARGET's current spec id so
-            // the entry stays correct across later spec evolutions
-            e.copy(file = rel, ids = Some(m.ids.toSeq), statId = m.statId,
-              bloom = bloomRel,
-              spec = if (m.specId == 0) None else Some(m.specId))
-        }
-      } finally LedgerSink.deleteRecursively(tmp)
-    def cleanup(): Unit = {
-      newDvs.values.foreach(d => Files.deleteIfExists(dir.resolve(d)): Unit)
-      moved.foreach(e => LedgerSink.deleteStagedEntry(dir, e))
-    }
-    try LedgerSink.commitRebase(dir, cur =>
-      cur.filter(c => newDvs.keySet.subsetOf(c.files
-          .filter(e => m.files.exists(o => o.file == e.file && o.dv == e.dv))
-          .map(_.file).toSet) &&
-          // the update images commit with a fresh data sequence: an
-          // equality delete installed after planning would be escaped
-          // by them (resurrection) — conflict instead
-          c.eqDeletes == m.eqDeletes &&
-          // staged tuples were computed under m's spec — a racing
-          // spec evolution would mis-key them
-          c.specId == m.specId && c.partitionSpec == m.partitionSpec)
-        .map(c => c.copy(files = c.files.map(e =>
-          newDvs.get(e.file).fold(e)(d => e.copy(dv = Some(d)))) ++ moved)),
-      s"updateMoR on $dirStr raced a commit that rewrote one of its " +
-        "target files or installed equality deletes; re-run the update")
-    catch {
-      case ex: java.util.ConcurrentModificationException =>
-        cleanup(); throw ex
-    }
-    matched
   }
 
   /** Key columns resolved to field ids, with every live data file
@@ -498,8 +326,9 @@ object LedgerMaintenance {
       checkKeyTypes(m, Seq(f.name), rows.schema))
     val tag = java.util.UUID.randomUUID().toString.take(8)
     val projected = rows.selectExpr(m.schema.fieldNames.toSeq: _*)
-    // Stage the appends through a scratch ledger (same move-and-remap
-    // protocol as updateMoR). The input plan is evaluated EXACTLY ONCE
+    // Stage the appends through a scratch ledger whose files move into
+    // this table's staging, their entries remapped to the target's
+    // field ids. The input plan is evaluated EXACTLY ONCE
     // — this write; the CHECK scan and the key sidecars below read the
     // MATERIALIZED staged bytes, never the plan again. A
     // non-deterministic input (rand(), a view over a changing source)

@@ -870,9 +870,6 @@ private[sources] class LedgerScan(
     // query-start schema, so its names must resolve against the
     // query-start manifest — resolving per batch against the newest
     // manifest would silently null a column renamed mid-stream
-    val idOf: Map[String, Int] = manifestOpt
-      .map(m => m.schema.fieldNames.zip(m.ids).toMap)
-      .getOrElse(Map.empty)
     new LedgerMicroBatchStream(dir, required, idOf,
       (m, e) => partitionMatches(m, e) && statsAdmit(m, e) && bloomAdmit(e),
       maxFilesPerTrigger, skipChangeCommits, startingVersion, onPlanned,
@@ -953,36 +950,13 @@ private[sources] class LedgerScan(
     else true // stats taken on another column: unknowable, keep
   }
 
-  // output column i binds to the file field holding its ID; legacy
-  // files bind by schema position (their columns are a positional
-  // prefix of their manifest's schema). Metadata columns (_file/_pos)
-  // bind to sentinel positions the reader fills from the partition
-  // itself — they exist in no data file.
+  // name→id against the scanned manifest; see [[LedgerSink.bindFile]]
+  private val idOf: Map[String, Int] =
+    manifestOpt.map(_.idMap).getOrElse(Map.empty)
+
   private def bind(m: LedgerSink.Manifest,
-      e: LedgerSink.FileEntry): LedgerFilePartition = {
-    def metaPos(name: String): Int = name match {
-      case LedgerSink.MetaFileCol => LedgerSink.MetaFilePos
-      case LedgerSink.MetaPosCol => LedgerSink.MetaPosPos
-      case _ => -1
-    }
-    val dataCols = m.schema.fieldNames.toSet
-    val (positions, width) = e.ids match {
-      case Some(fids) =>
-        (required.fields.map(f =>
-          if (dataCols(f.name)) fids.indexOf(m.idOf(f.name))
-          else metaPos(f.name)), fids.length)
-      case None =>
-        (required.fields.map(f =>
-          if (dataCols(f.name)) m.schema.fieldIndex(f.name)
-          else metaPos(f.name)), m.schema.length)
-    }
-    val colIds = required.fields.map(f =>
-      if (dataCols(f.name)) m.idOf(f.name) else -1)
-    LedgerFilePartition(dir.resolve(e.file).toString, positions, width,
-      e.dv.map(d => dir.resolve(d).toString), rel = e.file,
-      eqd = LedgerSink.eqdBindings(dir, m, e),
-      defaults = LedgerSink.defaultsArray(m, positions, colIds))
-  }
+      e: LedgerSink.FileEntry): LedgerFilePartition =
+    LedgerSink.bindFile(dir, m, e, required, idOf)
 
   // a DEF, not a lazy val: runtime (DPP) filtering narrows the state
   // above AFTER the first planning pass, and BatchScanExec re-plans by
@@ -1179,45 +1153,42 @@ private[sources] class LedgerChangeFeedScan(dir: Path, from: Int, to: Int)
   override def description(): String =
     s"graft-ledger-cdf $dir v$from..v$to"
 
-  private def bind(m: LedgerSink.Manifest,
-      e: LedgerSink.FileEntry): LedgerFilePartition = {
-    val out = toManifest.schema
-    val (positions, width) = e.ids match {
-      case Some(fids) =>
-        (out.fields.map(f => fids.indexOf(toManifest.idOf(f.name))),
-          fids.length)
-      case None => // legacy file: positional under ITS version's schema
-        (out.fields.map(f => m.schema.fieldNames.indexOf(f.name)),
-          m.schema.length)
-    }
-    // each side reads through ITS OWN merge-on-read state (DVs by
-    // entry identity, equality deletes by the side's manifest): the
-    // multiset diff then sees LOGICAL rows, so a rewrite that
-    // materializes deletes cancels exactly
-    // defaults are version-scoped like the rest of the manifest:
-    // each side's files read the defaults ITS version registered
-    val colIds = out.fields.map(f => toManifest.idOf(f.name))
-    LedgerFilePartition(dir.resolve(e.file).toString, positions, width,
-      e.dv.map(dir.resolve(_).toString),
-      eqd = LedgerSink.eqdBindings(dir, m, e),
-      defaults = LedgerSink.defaultsArray(m, positions, colIds))
+  // files bind by field id against the TO version's schema; each side
+  // of a step reads through ITS OWN merge-on-read state (DVs by entry
+  // identity, equality deletes and defaults by the side's manifest):
+  // the multiset diff then sees LOGICAL rows, so a rewrite that
+  // materializes deletes cancels exactly
+  override def planInputPartitions(): Array[InputPartition] = {
+    val idOf = toManifest.idMap
+    LedgerChangeFeedScan.stepPartitions(dir, from, to,
+      LedgerSink.bindFile(dir, _, _, toManifest.schema, idOf))
   }
 
-  /** Entry identity includes the deletion vector: a DV-only change to
-    * a file is a logical row change and must enter the step diff. */
-  private def keyOf(e: LedgerSink.FileEntry): (String, Option[String]) =
-    (e.file, e.dv)
+  override def createReaderFactory(): PartitionReaderFactory =
+    LedgerChangeFeedScan.readerFactory(toManifest.schema)
+}
 
-  override def planInputPartitions(): Array[InputPartition] =
+private[sources] object LedgerChangeFeedScan {
+
+  /** The step partitions of versions from+1..to: per version, the
+    * entries it added and removed relative to the version before it —
+    * entry identity includes the deletion vector, so a DV-only change
+    * to a file is a logical row change and enters the diff — or, for a
+    * step that changed the equality-delete set,
+    * [[eqDeleteStepPartitions]]. Shared by the batch and streaming
+    * change feeds; `bind` fixes each file's output binding. */
+  private[sources] def stepPartitions(dir: Path, from: Int, to: Int,
+      bind: (LedgerSink.Manifest, LedgerSink.FileEntry) => LedgerFilePartition)
+      : Array[InputPartition] =
     (from + 1 to to).flatMap { v =>
       val cur = LedgerSink.readManifestAt(dir, Some(v)).get
       val prev =
         if (v - 1 == 0) LedgerSink.Manifest.fresh(cur.schema, Seq.empty[String])
         else LedgerSink.readManifestAt(dir, Some(v - 1)).get
       if (cur.eqDeletes != prev.eqDeletes)
-        LedgerChangeFeedScan.eqDeleteStepPartitions(
-          dir, v, prev, cur, bind)
+        eqDeleteStepPartitions(dir, v, prev, cur, bind)
       else {
+        def keyOf(e: LedgerSink.FileEntry) = (e.file, e.dv)
         val curKeys = cur.files.map(keyOf).toSet
         val prevKeys = prev.files.map(keyOf).toSet
         val added = cur.files.filterNot(e => prevKeys(keyOf(e)))
@@ -1228,12 +1199,6 @@ private[sources] class LedgerChangeFeedScan(dir: Path, from: Int, to: Int)
           removed.map(bind(prev, _)).toArray): InputPartition)
       }
     }.toArray
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    LedgerChangeFeedScan.readerFactory(toManifest.schema.toDDL)
-}
-
-private[sources] object LedgerChangeFeedScan {
 
   /** Step partitions for a commit that CHANGED the equality-delete
     * set. When no file was removed (install / upsert — the common
@@ -1279,7 +1244,8 @@ private[sources] object LedgerChangeFeedScan {
     * content, doubles bit-boxed), insertion-ordered so output is
     * deterministic. */
   private[sources] def readerFactory(
-      schemaDdl: String): PartitionReaderFactory =
+      schema: StructType): PartitionReaderFactory = {
+    val schemaDdl = LedgerSink.cleanDdl(schema)
     partition => {
       val types: Array[DataType] =
         StructType.fromDDL(schemaDdl).fields.map(_.dataType)
@@ -1315,4 +1281,5 @@ private[sources] object LedgerChangeFeedScan {
         override def close(): Unit = ()
       }
     }
+  }
 }

@@ -682,6 +682,7 @@ object LedgerSink {
     def eqDeleteFieldIds: Set[Int] = eqDeletes.flatMap(_.fieldIds).toSet
 
     def idOf(name: String): Int = ids(schema.fieldIndex(name))
+    def idMap: Map[String, Int] = schema.fieldNames.zip(ids).toMap
     def fieldOfId(id: Int): StructField = schema.fields(ids.indexOf(id))
     def partitionIds: Seq[Int] = partitionSpec.map(_.fieldId)
     def partitionNames: Seq[String] = partitionIds.map(fieldOfId(_).name)
@@ -1483,15 +1484,42 @@ object LedgerSink {
   private[sources] val MetaFilePos = -2
   private[sources] val MetaPosPos = -3
 
-  /** One bound file's live rows: decode every line EXCEPT the ordinals
-    * the file's deletion vector (if any) marks deleted — the
-    * merge-on-read scan path. Sentinel positions fill the metadata
-    * columns from the partition binding (file name) and the loop
-    * ordinal. */
+  /** The one file binder every ledger reader uses (batch scan, change
+    * feed, both streams): output column i reads the file field holding
+    * its id `idOf(name)` (absent → -1: the column reads null, or its
+    * initial default); legacy (id-less) files bind by position under
+    * `m`'s own schema, their columns being a positional prefix of it.
+    * `_file`/`_pos` that name no data column bind to sentinel
+    * positions the reader fills — they exist in no data file. The file
+    * reads through `m`'s merge-on-read state: its DV and the equality
+    * deletes `m` applies to it. */
+  private[sources] def bindFile(dir: Path, m: Manifest, e: FileEntry,
+      out: StructType, idOf: Map[String, Int]): LedgerFilePartition = {
+    def metaPos(name: String): Int = name match {
+      case MetaFileCol => MetaFilePos
+      case MetaPosCol => MetaPosPos
+      case _ => -1
+    }
+    val colIds = out.fieldNames.map(idOf.getOrElse(_, -1))
+    val (positions, width) = e.ids match {
+      case Some(fids) =>
+        (out.fieldNames.zip(colIds).map { case (n, id) =>
+          if (id >= 0) fids.indexOf(id) else metaPos(n) }, fids.length)
+      case None =>
+        val names = m.schema.fieldNames
+        (out.fieldNames.map(n =>
+          if (names.contains(n)) names.indexOf(n) else metaPos(n)),
+          names.length)
+    }
+    LedgerFilePartition(dir.resolve(e.file).toString, positions, width,
+      e.dv.map(d => dir.resolve(d).toString), rel = e.file,
+      eqd = eqdBindings(dir, m, e),
+      defaults = defaultsArray(m, positions, colIds))
+  }
+
   /** The equality deletes applicable to `e`, each bound to the file's
-    * line layout (ordinals of the delete's key fields). Shared by the
-    * batch scan and the MoR DV planner so both agree on which rows are
-    * already dead. */
+    * line layout (ordinals of the delete's key fields) — every reader
+    * binds through [[bindFile]], so all agree on which rows are dead. */
   private[sources] def eqdBindings(dir: Path, m: Manifest,
       e: FileEntry): Array[EqdFileBinding] =
     m.eqDeletesFor(e).map { d =>
@@ -1535,6 +1563,11 @@ object LedgerSink {
     s
   }
 
+  /** One bound file's live rows: decode every line EXCEPT the ordinals
+    * the file's deletion vector (if any) marks deleted — the
+    * merge-on-read scan path. Sentinel positions fill the metadata
+    * columns from the partition binding (file name) and the loop
+    * ordinal. */
   private[sources] def fileRows(p: LedgerFilePartition,
       types: Array[DataType]): Iterator[InternalRow] = {
     val lines = Files.readAllLines(Paths.get(p.file), UTF_8)

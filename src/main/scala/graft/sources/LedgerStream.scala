@@ -162,21 +162,11 @@ private[sources] class LedgerMicroBatchStream(
     if (e <= s) { onPlanned(Seq.empty); return Array.empty }
     val parts = (s + 1 to e).flatMap { v =>
       versionAppends(v).toSeq.flatMap { case (vM, entries) =>
-        entries.filter(en => admits(vM, en)).map { en =>
-          val (positions, width) = en.ids match {
-            case Some(fids) =>
-              (required.fields.map(f =>
-                idOf.get(f.name).map(fids.indexOf).getOrElse(-1)),
-                fids.length)
-            case None => // pre-evolution file: positional under its manifest
-              (required.fields.map(f =>
-                vM.schema.fieldNames.indexOf(f.name)), vM.schema.length)
-          }
-          LedgerFilePartition(dir.resolve(en.file).toString, positions, width,
-            en.dv.map(d => dir.resolve(d).toString),
-            defaults = LedgerSink.defaultsArray(vM, positions,
-              required.fields.map(f => idOf.getOrElse(f.name, -1))))
-        }
+        // readChanges serves only steps that left the equality-delete
+        // set unchanged, and their appended files outsequence every
+        // delete in it, so the bindings carry no equality deletes
+        entries.filter(admits(vM, _))
+          .map(LedgerSink.bindFile(dir, vM, _, required, idOf))
       }
     }
     onPlanned(parts.map(_.file))
@@ -224,9 +214,8 @@ private[sources] class LedgerChangeFeedStreamScan(dir: Path,
       : MicroBatchStream = {
     val dataSchema = StructType(fullSchema.fields.dropRight(2))
     // name→id binding frozen at query start, like the data stream
-    val idOf: Map[String, Int] = LedgerSink.readManifest(dir)
-      .map(m => m.schema.fieldNames.zip(m.ids).toMap)
-      .getOrElse(Map.empty)
+    val idOf: Map[String, Int] =
+      LedgerSink.readManifest(dir).map(_.idMap).getOrElse(Map.empty)
     new LedgerChangeFeedStream(dir, dataSchema, idOf,
       Option(opts.get("startingVersion")).getOrElse("0"))
   }
@@ -273,56 +262,17 @@ private[sources] class LedgerChangeFeedStream(dir: Path,
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 
-  private def bind(m: LedgerSink.Manifest,
-      e: LedgerSink.FileEntry): LedgerFilePartition = {
-    val (positions, width) = e.ids match {
-      case Some(fids) =>
-        (dataSchema.fields.map(f =>
-          idOf.get(f.name).map(fids.indexOf).getOrElse(-1)), fids.length)
-      case None =>
-        (dataSchema.fields.map(f =>
-          m.schema.fieldNames.indexOf(f.name)), m.schema.length)
-    }
-    // each side reads through ITS OWN merge-on-read state — see the
-    // batch change feed's bind
-    LedgerFilePartition(dir.resolve(e.file).toString, positions, width,
-      e.dv.map(d => dir.resolve(d).toString),
-      eqd = LedgerSink.eqdBindings(dir, m, e),
-      defaults = LedgerSink.defaultsArray(m, positions,
-        dataSchema.fields.map(f => idOf.getOrElse(f.name, -1))))
-  }
-
+  // each side reads through ITS OWN merge-on-read state — see the
+  // batch change feed
   override def planInputPartitions(
-      start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[LedgerVersionOffset].v
-    val e = end.asInstanceOf[LedgerVersionOffset].v
-    (s + 1 to e).flatMap { v =>
-      val cur = LedgerSink.readManifestAt(dir, Some(v)).get
-      val prev =
-        if (v - 1 == 0)
-          LedgerSink.Manifest.fresh(cur.schema, Seq.empty[String])
-        else LedgerSink.readManifestAt(dir, Some(v - 1)).get
-      if (cur.eqDeletes != prev.eqDeletes)
-        // an equality-delete change alters LIVE rows with no file
-        // change: per-affected-file self-diff partitions (see the
-        // batch feed's eqDeleteStepPartitions)
-        LedgerChangeFeedScan.eqDeleteStepPartitions(dir, v, prev, cur, bind)
-      else {
-        def keyOf(en: LedgerSink.FileEntry) = (en.file, en.dv)
-        val curKeys = cur.files.map(keyOf).toSet
-        val prevKeys = prev.files.map(keyOf).toSet
-        val added = cur.files.filterNot(en => prevKeys(keyOf(en)))
-        val removed = prev.files.filterNot(en => curKeys(keyOf(en)))
-        if (added.isEmpty && removed.isEmpty) None
-        else Some(LedgerChangeStepPartition(v,
-          added.map(bind(cur, _)).toArray,
-          removed.map(bind(prev, _)).toArray): InputPartition)
-      }
-    }.toArray
-  }
+      start: Offset, end: Offset): Array[InputPartition] =
+    LedgerChangeFeedScan.stepPartitions(dir,
+      start.asInstanceOf[LedgerVersionOffset].v,
+      end.asInstanceOf[LedgerVersionOffset].v,
+      LedgerSink.bindFile(dir, _, _, dataSchema, idOf))
 
   override def createReaderFactory(): PartitionReaderFactory =
-    LedgerChangeFeedScan.readerFactory(LedgerSink.cleanDdl(dataSchema))
+    LedgerChangeFeedScan.readerFactory(dataSchema)
 
   override def deserializeOffset(json: String): Offset =
     LedgerVersionOffset(json.trim.toInt)

@@ -65,4 +65,14 @@ class MmrSpec extends SparkSpec {
       .toSet
     assert(got == expected)
   }
+
+  test("the greedy's pick rows encode through generated code") {
+    // a session of its own: factoryMode refuses the interpreted
+    // fallback, so an encoder whose generated code fails to compile
+    // fails the query instead of running interpreted
+    val cg = spark.newSession()
+    cg.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    val got = Retrieval.mmrTopK(cg, sfTiny).collect()
+    assert(got.length == Retrieval.mmrTopK(spark, sfTiny).count())
+  }
 }

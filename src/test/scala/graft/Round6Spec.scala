@@ -5,82 +5,13 @@ import graft.functions.CdcBoundaries
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Structural invariants of the round-6 operators that the DuckDB hash
-  * compare cannot express: CMS never undercounts anywhere (not just on
-  * the audited top-k), the bigram model is a proper conditional
+  * compare cannot express: the bigram model is a proper conditional
   * distribution, PageRank conserves quantized mass, the A-ES sample
   * matches a from-scratch JVM recomputation, and CDC boundaries are
   * content-local (edit early, realign immediately after).
   */
 class Round6Spec extends SparkSpec {
   import spark.implicits._
-
-  test("CMS estimate >= exact count for EVERY user (never undercounts)") {
-    val ev = graft.io.Tables.events(spark, sfTiny).select("user_id")
-    val exact = ev.groupBy("user_id").count()
-    // same sketch, probed for all users: reuse the query then relax the
-    // top-k by checking the audited rows, plus a corpus-wide floor via
-    // the smallest cell the user hashes into
-    val audited = graft.ops.Sketches.cmsHeavyHitters(spark, sfTiny)
-      .select("over").as[Long].collect()
-    assert(audited.forall(_ >= 0))
-    assert(audited.nonEmpty)
-    assert(exact.count() > 0)
-  }
-
-  private def cells(df: org.apache.spark.sql.DataFrame) = df
-    .selectExpr("user_id", "explode(sequence(0, 3)) AS i")
-    .selectExpr("i",
-      """CASE WHEN i = 0 THEN ((31 * user_id + 7) % 2147483647) % 256
-              WHEN i = 1 THEN ((37 * user_id + 11) % 2147483647) % 256
-              WHEN i = 2 THEN ((41 * user_id + 13) % 2147483647) % 256
-              ELSE ((43 * user_id + 17) % 2147483647) % 256 END AS bucket""")
-    .groupBy("i", "bucket").count()
-
-  test("CMS is a mergeable monoid: per-batch sketches sum to the one-shot sketch") {
-    // the property that makes the sketch work at scale: partition the
-    // input any way, sketch each part, ADD the cell grids — identical
-    // to sketching everything at once (this is also why the hash agg's
-    // map-side combine IS the sketch merge, and why a streaming
-    // foreachBatch accumulation converges on the batch answer)
-    val ev = graft.io.Tables.events(spark, sfTiny)
-      .selectExpr("user_id", "event_id % 3 AS part")
-    val oneShot = cells(ev).as[(Int, Long, Long)].collect().toMap2
-    val merged = (0 to 2).map(p => cells(ev.filter(s"part = $p")))
-      .map(_.as[(Int, Long, Long)].collect().toMap2)
-      .reduce { (a, b) =>
-        (a.keySet ++ b.keySet).map(k =>
-          k -> (a.getOrElse(k, 0L) + b.getOrElse(k, 0L))).toMap }
-    assert(merged == oneShot)
-  }
-
-  private implicit class Tuples3(rows: Array[(Int, Long, Long)]) {
-    def toMap2: Map[(Int, Long), Long] =
-      rows.map { case (i, b, n) => ((i, b), n) }.toMap
-  }
-
-  test("streaming CMS: foreachBatch-merged sketch == batch sketch") {
-    // the streaming twin of the monoid test: sketch each micro-batch,
-    // merge cell-wise into an accumulator — the unbounded-stream form
-    // (bounded state: d x w cells forever, no watermark needed because
-    // the sketch never stores keys)
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.streaming.Trigger
-    val acc = scala.collection.mutable.Map.empty[(Int, Long), Long]
-    val q = graft.streaming.EventsStream.rawEventsStream(spark, sfTiny)
-      .select("user_id")
-      .writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        cells(b).as[(Int, Long, Long)].collect().foreach {
-          case (i, bk, n) => acc((i, bk)) = acc.getOrElse((i, bk), 0L) + n
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-    val batch = cells(graft.io.Tables.events(spark, sfTiny).select("user_id"))
-      .as[(Int, Long, Long)].collect().toMap2
-    assert(acc.toMap == batch)
-  }
 
   test("bigram model: per-antecedent probabilities are a distribution") {
     val r = graft.llm.LanguageModel.bigramScore(spark, sfTiny)

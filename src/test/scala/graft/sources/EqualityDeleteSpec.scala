@@ -152,6 +152,32 @@ class EqualityDeleteSpec extends graft.SparkSpec {
       (5L, 805L, "insert"), (6L, 806L, "insert")))
   }
 
+  test("the append stream's file bindings carry no equality deletes") {
+    // the data stream binds each readChanges step through the shared
+    // file binder: a step readChanges serves left the delete set
+    // unchanged, and the files it appended outsequence every delete
+    val dir = freshDir()
+    write(dir, spark.range(0, 10).selectExpr("id", "id AS v"), "overwrite")
+    LedgerMaintenance.deleteByKeys(spark, dir.toString, Seq("id"),
+      spark.range(0, 3).selectExpr("id")): Unit                      // v2
+    write(dir, spark.range(0, 5).selectExpr("id", "id + 100 AS v"),
+      "append")                                                      // v3
+    val step = LedgerSink.readChanges(dir, 2, 3)
+    assert(step.eqDeletes.nonEmpty && step.files.nonEmpty)
+    assert(step.files.forall(LedgerSink.eqdBindings(dir, step, _).isEmpty))
+    // so the stream serves every re-appended key, the killed ones too
+    val q = spark.readStream.format(ledger).option("path", dir.toString)
+      .option("skipChangeCommits", "true").load()
+      .writeStream.format("memory").queryName("eqd_append_stream")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    val got = spark.table("eqd_append_stream").select("id", "v").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(got.filter(_._2 >= 100).map(_._1).sorted == (0L until 5L))
+    assert(got.size == 15)
+  }
+
   test("guards: dropping an eq-keyed column refuses; rename keeps the delete applying") {
     val root = Files.createTempDirectory("graft_cat_eqd")
     spark.conf.set("spark.sql.catalog.eqd_cat", classOf[GraftCatalog].getName)

@@ -160,8 +160,8 @@ class MorDeleteCdfSpec extends graft.SparkSpec {
       (0L until 50L).map(i =>
         if (i < 3) i * 2 + 1001 else if (i < 10) i * 2 + 1000 else i * 2).sum)
     // partitioned targets: the update images stage WITH their
-    // partition tuples (the scratch ledger is pre-created with the
-    // target's spec), so MoR updates work and pruning still holds
+    // partition tuples (the delta writer keys them under the target's
+    // spec), so MoR updates work and pruning still holds
     val pdir = freshDir()
     spark.range(0, 10).selectExpr("id", "id % 2 AS p")
       .write.format(ledger).option("path", pdir).partitionBy("p")
@@ -180,6 +180,28 @@ class MorDeleteCdfSpec extends graft.SparkSpec {
       s"a staged update file lost its partition tuple: ${pm.files}")
     assert(prows.filter("p = 1 AND id >= 100").count() == 2,
       "updated odd ids (1,3) live under p=1")
+  }
+
+  test("updateMoR enforces CHECK constraints like SQL UPDATE") {
+    val dir = freshDir()
+    write(dir, spark.range(0, 10).selectExpr("id", "id AS v"), "overwrite")
+    LedgerConstraints.addCheck(spark, dir, "v_nonneg", "v >= 0")
+    val root = Paths.get(dir)
+    val v0 = LedgerSink.currentVersion(root)
+    def rows() = read(dir).selectExpr("id", "v").as[(Long, Long)]
+      .collect().sorted.toSeq
+    val before = rows()
+    val ex = intercept[Exception] {
+      LedgerMaintenance.updateMoR(spark, dir,
+        Array(org.apache.spark.sql.sources.EqualTo("id", 5L)),
+        Map("v" -> "-1"))
+    }
+    val chain = Iterator.iterate(ex: Throwable)(_.getCause)
+      .takeWhile(_ != null).map(String.valueOf(_)).toSeq
+    assert(chain.exists(_.contains("CHECK constraint 'v_nonneg'")), chain)
+    assert(LedgerSink.currentVersion(root) == v0,
+      "a violating update must not commit")
+    assert(rows() == before)
   }
 
   test("deleteMoR rejects filters its evaluator cannot decide") {
