@@ -1,8 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateFunction, BloomFilterAggregate}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
@@ -63,42 +66,46 @@ case class ArrayDotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration of the native functions into a session's function
-  * registry (idempotent; `expr("graft_dot(a, b)")` then resolves). */
+/** The engine's native SQL functions, declared once:
+  * [[GraftExtensions]] injects them at session build time, and
+  * [[register]] installs the ones a session lacks (`expr("graft_dot(a,
+  * b)")` then resolves). */
 object Native {
+  private def aggregate(f: AggregateFunction): Expression =
+    f.toAggregateExpression()
+
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] =
+    Seq[(String, Class[_], FunctionBuilder)](
+      ("graft_dot", classOf[ArrayDotProduct],
+        e => ArrayDotProduct(e(0), e(1))),
+      ("graft_nfc", classOf[NfcNormalize], e => NfcNormalize(e(0))),
+      ("graft_topk", classOf[TopKAgg], e => aggregate(TopKAgg(e(0), e(1)))),
+      ("graft_heavyhitters", classOf[SpaceSavingAgg],
+        e => aggregate(SpaceSavingAgg(e(0), e(1)))),
+      ("graft_cdc_boundaries", classOf[CdcBoundariesExpr],
+        e => CdcBoundariesExpr(e(0))),
+      ("graft_sorted_inter", classOf[SortedIntersectSize],
+        e => SortedIntersectSize(e(0), e(1))),
+      ("graft_hist_l1", classOf[HistL1], e => HistL1(e(0), e(1))),
+      // Spark ships BloomFilterAggregate / BloomFilterMightContain for
+      // its runtime-filter rewrite but does not register them as SQL
+      // functions; surfacing them lets a pipeline build a bloom filter
+      // as DATA (build once over a dim's keys, broadcast, pre-filter
+      // any number of fact scans) instead of relying on the per-query
+      // rewrite.
+      ("graft_bloom_agg", classOf[BloomFilterAggregate],
+        e => aggregate(new BloomFilterAggregate(e(0), e(1), e(2)))),
+      ("graft_might_contain", classOf[BloomFilterMightContain],
+        e => BloomFilterMightContain(e(0), e(1)))
+    ).map { case (name, cls, builder) =>
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
+    }
+
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => ArrayDotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc", exprs => NfcNormalize(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_topk",
-      exprs => TopKAgg(exprs(0), exprs(1)).toAggregateExpression(), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_heavyhitters",
-      exprs => SpaceSavingAgg(exprs(0), exprs(1)).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cdc_boundaries", exprs => CdcBoundariesExpr(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sorted_inter",
-      exprs => SortedIntersectSize(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hist_l1",
-      exprs => HistL1(exprs(0), exprs(1)), "built-in")
-    // Spark ships BloomFilterAggregate / BloomFilterMightContain for its
-    // runtime-filter rewrite but does not register them as SQL
-    // functions; surfacing them lets a pipeline build a bloom filter as
-    // DATA (build once over a dim's keys, broadcast, pre-filter any
-    // number of fact scans) instead of relying on the per-query rewrite.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_agg",
-      exprs => new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-        .toAggregateExpression(), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_might_contain",
-      exprs => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs(0), exprs(1)), "built-in")
+    val registry = spark.sessionState.functionRegistry
+    functions.foreach { case (id, info, builder) =>
+      if (!registry.functionExists(id))
+        registry.registerFunction(id, info, builder)
+    }
   }
 }

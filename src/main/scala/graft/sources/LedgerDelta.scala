@@ -163,8 +163,9 @@ private[sources] class LedgerDeltaBatchWrite(dir: Path,
     * vector, appended files union in. Conflict discipline matches the
     * other rewriting commits — each target (file, dv-at-planning)
     * pair must be unchanged (ordinals were computed against that
-    * vector), and the field-id binding must match (appended files
-    * encoded under the snapshot's ids). */
+    * vector), and the snapshot's binding must still be current
+    * (appended files encoded under its ids and spec, and passed its
+    * constraints). */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val msgs = messages.toSeq.collect {
       case m: LedgerDeltaCommitMessage => m
@@ -181,20 +182,9 @@ private[sources] class LedgerDeltaBatchWrite(dir: Path,
       throw new IllegalStateException(s"no ledger table at $dir")))
     val snapDv: Map[String, Option[String]] =
       snap.files.map(e => e.file -> e.dv).toMap
-    def cleanup(): Unit = {
-      newDvs.values.foreach(d => Files.deleteIfExists(dir.resolve(d)): Unit)
-      fresh.foreach(e => LedgerSink.deleteStagedEntry(dir, e))
-    }
     try LedgerSink.commitRebase(dir, {
       case Some(cur)
-          if cur.schema == snap.schema && cur.ids == snap.ids &&
-            // a spec change since planning invalidates the appended
-            // files' tuple bindings; a constraint change invalidates
-            // the rows' validation (conflict, like a redefinition)
-            cur.partitionSpec == snap.partitionSpec &&
-            cur.specId == snap.specId &&
-            LedgerConstraints.constraintsOf(cur.props) ==
-              LedgerConstraints.constraintsOf(snap.props) &&
+          if cur.binding == snap.binding &&
             // update images / inserts commit with a fresh data
             // sequence: an equality delete installed after planning
             // would be escaped by them — conflict instead
@@ -208,18 +198,12 @@ private[sources] class LedgerDeltaBatchWrite(dir: Path,
       "target file or redefined the table; re-run the operation")
     catch {
       case ex: java.util.ConcurrentModificationException =>
-        cleanup(); throw ex
+        abort(messages); throw ex
     }
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case LedgerDeltaCommitMessage(dvs, entries) =>
-        dvs.foreach { case (_, d) =>
-          Files.deleteIfExists(dir.resolve(d)): Unit }
-        entries.foreach(e => LedgerSink.deleteStagedEntry(dir, e))
-      case _ => ()
-    }
+    LedgerWriteSupport.dropStaged(dir, messages)
 }
 
 /** Executor side: deletes/updates mark ordinals in per-file bitsets

@@ -3,7 +3,12 @@ package graft.sources
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 
+import scala.reflect.ClassTag
+
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.connector.write.{PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
@@ -103,8 +108,9 @@ object LedgerMaintenance {
       new PhysicalWriteInfo { def numPartitions(): Int = rows.getNumPartitions })
     val width = schema.length
     // the row is (_file, _pos, [image]): its leading pair IS the rowId
-    val task = (ctx: org.apache.spark.TaskContext,
-        it: Iterator[InternalRow]) => {
+    val done = runWriters(spark, rows,
+        (ms: Seq[(WriterCommitMessage, Long)]) =>
+          write.abort(ms.map(_._1).toArray)) { (ctx, it) =>
       val w = factory.createWriter(ctx.partitionId(), ctx.taskAttemptId())
       try {
         var n = 0L
@@ -118,17 +124,25 @@ object LedgerMaintenance {
         case t: Throwable => w.abort(); throw t
       } finally w.close()
     }
-    // results arrive per task, so a failed job can abort exactly the
-    // tasks that staged files
-    val done = new Array[(WriterCommitMessage, Long)](rows.getNumPartitions)
-    try spark.sparkContext.runJob(rows, task,
-      (i: Int, res: (WriterCommitMessage, Long)) => done(i) = res)
-    catch {
-      case t: Throwable =>
-        write.abort(done.filter(_ != null).map(_._1)); throw t
-    }
-    write.commit(done.map(_._1))
+    write.commit(done.map(_._1).toArray)
     done.map(_._2).sum
+  }
+
+  /** Drive ledger writers from a procedural API: run `task` once per
+    * partition of `rows`, one result per task. Results arrive per
+    * task, so when the job fails `abort` gets exactly the results of
+    * the tasks that finished (and staged files); the failure then
+    * rethrows. */
+  private def runWriters[R: ClassTag](spark: SparkSession,
+      rows: RDD[InternalRow], abort: Seq[R] => Unit)(
+      task: (TaskContext, Iterator[InternalRow]) => R): Seq[R] = {
+    val done = Array.fill[Option[R]](rows.getNumPartitions)(None)
+    try spark.sparkContext.runJob(rows, task,
+      (i: Int, res: R) => done(i) = Some(res))
+    catch {
+      case t: Throwable => abort(done.toSeq.flatten); throw t
+    }
+    done.toSeq.flatten
   }
 
   // validate filter shapes AND literal types up front (fail before any
@@ -226,27 +240,64 @@ object LedgerMaintenance {
           "matching needs identical types (CAST the keys first)")
     }
 
-  /** Stage `tuples` (already projected to the key columns, in order)
-    * as equality-delete sidecars via a scratch-ledger write — the
-    * ledger row codec IS the sidecar codec, one encoded tuple per
-    * line. Returns (staged relative paths, tuple count). */
-  private def stageEqdSidecars(spark: SparkSession, dir: Path,
-      tuples: org.apache.spark.sql.DataFrame, tag: String)
-      : (Seq[String], Long) = {
-    val tmp = Files.createTempDirectory(s"graft_eqd_$tag")
+  /** Stage an upsert's or a kill list's key tuples as equality-delete
+    * sidecars — the ledger row codec IS the sidecar codec, one encoded
+    * tuple per line — and, when `append`, `input`'s rows as data files
+    * bound to `m`'s ids and checked against its CHECK/NOT NULL
+    * constraints. `input` is projected to the table's columns
+    * (`append`) or to `keyCols`. Clustering and sorting by key puts
+    * every copy of a key in one task, next to each other, so each task
+    * writes its DISTINCT tuples by skipping adjacent repeats (the sort
+    * spills; no per-task key set); a task writes each row and that
+    * row's key tuple from the same iterator, so the input plan is
+    * evaluated once and a non-deterministic input (rand(), a view over
+    * a changing source) can never append one evaluation's rows under
+    * another's keys. Returns (data entries, sidecar entries, distinct
+    * key count). */
+  private def stageByKeys(spark: SparkSession, dir: Path,
+      m: LedgerSink.Manifest, keyCols: Seq[String],
+      input: org.apache.spark.sql.DataFrame, append: Boolean)
+      : (Seq[LedgerSink.FileEntry], Seq[LedgerSink.FileEntry], Long) = {
+    import org.apache.spark.sql.functions.col
+    val base = dir.toString
+    val tag = java.util.UUID.randomUUID().toString.take(8)
+    val schema = m.schema
+    val ids = m.ids
+    val keySchema = StructType(keyCols.map(schema(_)))
+    val keyIds = keyCols.map(m.idOf)
+    val keyRefs = keyCols.map(c => BoundReference(input.schema.fieldIndex(c),
+      schema(c).dataType, nullable = true))
+    val checks =
+      if (append) LedgerConstraints.writeChecks(Some(m), schema, truncate = false)
+      else LedgerConstraints.WriteChecks.empty
     Files.createDirectories(dir.resolve("_staging"))
-    try {
-      tuples.write.format(classOf[LedgerSink].getName)
-        .option("path", tmp.toString).mode("overwrite").save()
-      val sm = LedgerSink.readManifest(tmp).get
-      val staged = sm.files.filter(_.rows > 0).zipWithIndex.map {
-        case (e, i) =>
-          val rel = s"_staging/eqd-$tag-$i.eqdel"
-          Files.move(tmp.resolve(e.file), dir.resolve(rel))
-          rel
-      }
-      (staged, sm.files.map(_.rows).sum)
-    } finally LedgerSink.deleteRecursively(tmp)
+    val rows = input.repartition(keyCols.map(col): _*)
+      .sortWithinPartitions(keyCols.map(col): _*).queryExecution.toRdd
+    type Staged = (Seq[LedgerSink.FileEntry], Seq[LedgerSink.FileEntry], Long)
+    val done = runWriters(spark, rows, (rs: Seq[Staged]) =>
+        rs.foreach(r => (r._1 ++ r._2).foreach(
+          LedgerSink.deleteStagedEntry(dir, _)))) { (ctx, it) =>
+      val (p, t) = (ctx.partitionId(), ctx.taskAttemptId())
+      val data = Option.when(append)(new LedgerDataWriter(base, schema, ids,
+        Seq.empty, p, t, s"equ-$tag-", checks))
+      val keys = new LedgerDataWriter(base, keySchema, keyIds, Seq.empty,
+        p, t, s"eqd-$tag-", bloom = false)
+      try {
+        val keyOf = UnsafeProjection.create(keyRefs)
+        var prev: UnsafeRow = null
+        var n = 0L
+        it.foreach { r =>
+          data.foreach(_.write(r))
+          val k = keyOf(r)
+          if (k != prev) { keys.write(k); prev = k.copy(); n += 1 }
+        }
+        (data.toSeq.flatMap(_.commit().asInstanceOf[LedgerCommitMessage].entries),
+          keys.commit().asInstanceOf[LedgerCommitMessage].entries, n): Staged
+      } catch {
+        case x: Throwable => data.foreach(_.abort()); keys.abort(); throw x
+      } finally { data.foreach(_.close()); keys.close() }
+    }
+    (done.flatMap(_._1), done.flatMap(_._2), done.map(_._3).sum)
   }
 
   /** EQUALITY DELETE (the Iceberg v2 equality-delete design): kill
@@ -273,13 +324,9 @@ object LedgerMaintenance {
       throw new IllegalArgumentException(s"no ledger table at $dirStr"))
     val fieldIds = eqKeyIds(m, keyCols)
     checkKeyTypes(m, keyCols, keys.schema)
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val (staged, nKeys) = stageEqdSidecars(spark, dir,
-      keys.selectExpr(keyCols: _*).distinct(), tag)
-    if (nKeys == 0L) {
-      staged.foreach(f => Files.deleteIfExists(dir.resolve(f)): Unit)
-      return 0L
-    }
+    val (_, staged, nKeys) = stageByKeys(spark, dir, m, keyCols,
+      keys.selectExpr(keyCols: _*), append = false)
+    if (nKeys == 0L) return 0L // empty tasks stage nothing
     try LedgerSink.commitRebase(dir, cur =>
       cur.filter(c =>
           // re-validate against the commit-time state: a racing schema
@@ -288,12 +335,12 @@ object LedgerMaintenance {
           scala.util.Try(eqKeyIds(c, keyCols) == fieldIds)
             .getOrElse(false))
         .map(c => c.copy(eqDeletes = c.eqDeletes ++
-          staged.map(LedgerSink.EqDelete(_, 0, fieldIds)))),
+          staged.map(e => LedgerSink.EqDelete(e.file, 0, fieldIds)))),
       s"equality delete on $dirStr raced a schema change affecting its " +
         "key columns; re-run against the new schema")
     catch {
       case ex: java.util.ConcurrentModificationException =>
-        staged.foreach(f => Files.deleteIfExists(dir.resolve(f)): Unit)
+        staged.foreach(LedgerSink.deleteStagedEntry(dir, _))
         throw ex
     }
     nKeys
@@ -307,9 +354,11 @@ object LedgerMaintenance {
     * streaming-CDC apply shape at 100 TB: per batch, cost is
     * O(batch), not O(files touched) (MoR MERGE) or O(files rewritten)
     * (COW). `rows` must be key-unique (dedupe a CDC batch to its last
-    * image first). Unpartitioned tables only, same as [[updateMoR]]
-    * (the staged appends carry no partition tuple). CHECK constraints
-    * are enforced on the incoming rows. Returns (keys, rows). */
+    * image first). Unpartitioned tables only: the appends are clustered
+    * by key, not by partition tuple. The rows go through the ledger
+    * writer bound to the table's ids and CHECK/NOT NULL constraints,
+    * and the commit conflicts when that binding changed since. Returns
+    * (distinct keys, rows). */
   def upsertByKeys(spark: SparkSession, dirStr: String,
       keyCols: Seq[String],
       rows: org.apache.spark.sql.DataFrame): (Long, Long) = {
@@ -321,73 +370,28 @@ object LedgerMaintenance {
         "tables take the MoR MERGE path")
     val fieldIds = eqKeyIds(m, keyCols)
     // the whole row schema must match by type, not just the keys: the
-    // staged files' entries remap POSITIONALLY to the target's ids
+    // writer encodes every value under its table column's type
     m.schema.fields.foreach(f =>
       checkKeyTypes(m, Seq(f.name), rows.schema))
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val projected = rows.selectExpr(m.schema.fieldNames.toSeq: _*)
-    // Stage the appends through a scratch ledger whose files move into
-    // this table's staging, their entries remapped to the target's
-    // field ids. The input plan is evaluated EXACTLY ONCE
-    // — this write; the CHECK scan and the key sidecars below read the
-    // MATERIALIZED staged bytes, never the plan again. A
-    // non-deterministic input (rand(), a view over a changing source)
-    // would otherwise append one evaluation's rows while installing
-    // another evaluation's delete keys, making the "single atomic
-    // upsert" internally inconsistent (ADVICE r11).
-    val tmp = Files.createTempDirectory(s"graft_equ_$tag")
-    Files.createDirectories(dir.resolve("_staging"))
-    val (moved, staged, nKeys) =
-      try {
-        projected.write.format(classOf[LedgerSink].getName)
-          .option("path", tmp.toString).mode("overwrite").save()
-        val stagedRows = spark.read.format(classOf[LedgerSink].getName)
-          .option("path", tmp.toString).load()
-        LedgerConstraints.constraintsOf(m.props).foreach { case (n, sql) =>
-          val bad = stagedRows.filter(s"($sql) <=> false").count()
-          if (bad > 0) throw new IllegalArgumentException(
-            s"upsert into $dirStr violates CHECK constraint $n " +
-              s"($sql) on $bad row(s)")
-        }
-        // key sidecars from the staged data — the appended rows and
-        // the keys deleting their predecessors are the same rows by
-        // construction
-        val (st, nk) = stageEqdSidecars(spark, dir,
-          stagedRows.selectExpr(keyCols: _*).distinct(), tag)
-        val sm = LedgerSink.readManifest(tmp).get
-        val mv = sm.files.zipWithIndex.map { case (e, i) =>
-          val rel = s"_staging/equ-$tag-$i.ledger"
-          Files.move(tmp.resolve(e.file), dir.resolve(rel))
-          val bloomRel = e.bloom.map { b =>
-            val br = s"_staging/equ-$tag-$i.bf"
-            val (bm, _, fid, bits) = LedgerSink.readBloomSidecar(tmp.resolve(b))
-            LedgerSink.writeBloomSidecar(dir.resolve(br), bm,
-              m.ids.toSeq(sm.ids.indexOf(fid)), bits)
-            br
-          }
-          e.copy(file = rel, ids = Some(m.ids.toSeq), statId = m.statId,
-            bloom = bloomRel)
-        }
-        (mv, st, nk)
-      } finally LedgerSink.deleteRecursively(tmp)
-    val nRows = moved.map(_.rows).sum
-    def cleanup(): Unit = {
-      staged.foreach(f => Files.deleteIfExists(dir.resolve(f)): Unit)
-      moved.foreach(e => LedgerSink.deleteStagedEntry(dir, e))
-    }
-    if (nRows == 0L && nKeys == 0L) { cleanup(); return (0L, 0L) }
+    val (fresh, staged, nKeys) = stageByKeys(spark, dir, m, keyCols,
+      rows.selectExpr(m.schema.fieldNames.toSeq: _*), append = true)
+    val nRows = fresh.map(_.rows).sum
+    if (nRows == 0L) return (0L, 0L) // empty tasks stage nothing
     try LedgerSink.commitRebase(dir, cur =>
-      cur.filter(c => c.partitionSpec.isEmpty &&
-          scala.util.Try(eqKeyIds(c, keyCols) == fieldIds).getOrElse(false))
+      cur.filter(c => c.binding == m.binding &&
+          // an append since planning may have added a file without the
+          // key columns
+          scala.util.Try(eqKeyIds(c, keyCols)).isSuccess)
         .map(c => c.copy(
-          files = c.files ++ moved,
+          files = c.files ++ fresh,
           eqDeletes = c.eqDeletes ++
-            staged.map(LedgerSink.EqDelete(_, 0, fieldIds)))),
-      s"upsertByKeys on $dirStr raced a schema or partition-spec " +
-        "change; re-run against the new table state")
+            staged.map(e => LedgerSink.EqDelete(e.file, 0, fieldIds)))),
+      s"upsertByKeys on $dirStr raced a schema-, spec- or constraint-" +
+        "changing commit; re-run against the new table state")
     catch {
       case ex: java.util.ConcurrentModificationException =>
-        cleanup(); throw ex
+        (fresh ++ staged).foreach(LedgerSink.deleteStagedEntry(dir, _))
+        throw ex
     }
     (nKeys, nRows)
   }

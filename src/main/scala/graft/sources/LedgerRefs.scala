@@ -299,11 +299,13 @@ object LedgerRefs {
     * the optimistic-commit protocol — commits that landed between
     * stage and publish are composed with, not clobbered (the staged
     * files are an append; disjoint file sets commute). The one
-    * conflict is a schema-changing commit since the stage: the staged
-    * files' field-id binding would alias under the new definition, so
-    * the publish aborts (staged data intact — re-stage against the new
-    * definition). Deletes the staged manifest on success. Returns the
-    * published version. */
+    * conflict is a definition change since the stage: the staged files
+    * encode under the stage's ids and spec and passed its constraints
+    * (the staged manifest carries the binding they were written
+    * under), so when the current binding differs the publish aborts
+    * (staged data intact — re-stage against the new definition).
+    * Deletes the staged manifest on success. Returns the published
+    * version. */
   def publishWap(dir: Path, id: String): Int =
     // the whole publish — read stage, fold, delete stage — runs under
     // ONE hold of the table lock: a concurrent publish/abort of the
@@ -316,8 +318,7 @@ object LedgerRefs {
         .map(_.split(",", -1).toSet.filter(_.nonEmpty)).getOrElse(Set.empty)
       val next = LedgerSink.readManifest(dir) match {
         case Some(cur) =>
-          if (cur.schema == w.schema && cur.ids == w.ids &&
-            cur.partitionSpec == w.partitionSpec) {
+          if (cur.binding == w.binding) {
             val present = cur.files.map(_.file).toSet
             // folded entries take the PUBLISH commit's data sequence
             // (seq cleared → stamped at commit): the staged rows were
@@ -327,8 +328,9 @@ object LedgerRefs {
               .map(_.copy(seq = None))
             if (adds.isEmpty) None else Some(cur.copy(files = cur.files ++ adds))
           } else throw new java.util.ConcurrentModificationException(
-            s"publish of wapId=$id on $dir raced a schema-changing " +
-              "commit; re-stage against the table's new definition")
+            s"publish of wapId=$id on $dir raced a schema-, spec- or " +
+              "constraint-changing commit; re-stage against the table's " +
+              "new definition")
         case None =>
           // stage against an empty table, still empty: the staged
           // state minus the wap bookkeeping props IS the table

@@ -534,6 +534,12 @@ object LedgerSink {
     }
   }
 
+  /** [[Manifest.binding]]: schema, field ids, partition spec, spec id
+    * and the (name, sql) constraint set. */
+  private[sources] case class Binding(schema: StructType, ids: Seq[Int],
+      partitionSpec: Seq[PartField], specId: Int,
+      constraints: Seq[(String, String)])
+
   // ---- bloom-filter file skipping (the Delta bloom-index / Iceberg
   // puffin idea at this format's scale) ----
 
@@ -720,6 +726,13 @@ object LedgerSink {
     def namedPartitionSpec: Seq[NamedPartField] = partitionSpec.map(p =>
       NamedPartField(fieldOfId(p.fieldId).name, p.kind, p.param))
     def statId: Option[Int] = statColIndex(schema).map(ids(_))
+
+    /** The definition a writer binds against: staged files encode
+      * under these ids, carry tuples of this spec and passed these
+      * constraints. A commit whose current binding differs from the
+      * one its writer captured is stale. */
+    def binding: Binding = Binding(schema, ids, partitionSpec, specId,
+      LedgerConstraints.constraintsOf(props))
 
     def render: Seq[String] =
       (schema.toDDL +:

@@ -112,6 +112,33 @@ private[sources] object LedgerWriteSupport {
             s"${schema.fieldNames.mkString(",")} vs ${m.schema.fieldNames.mkString(",")}")
       case _ => 1 to schema.length
     }
+
+  /** Whether `cur` still carries the definition a write bound against:
+    * the `bound` binding itself, or — for a write bound fresh (ids
+    * 1..n) against an empty table — the binding a fresh manifest of
+    * the write schema and spec would have, compared by column NAME
+    * (the write schema may carry metadata the manifest's DDL drops). */
+  def bindingHolds(bound: Option[LedgerSink.Binding], schema: StructType,
+      spec: Seq[LedgerSink.NamedPartField], cur: LedgerSink.Manifest): Boolean =
+    bound match {
+      case Some(b) => cur.binding == b
+      case None =>
+        val f = LedgerSink.Manifest.fresh(schema, spec).binding
+        cur.schema.fieldNames.sameElements(schema.fieldNames) &&
+          cur.binding.copy(schema = f.schema) == f
+    }
+
+  /** Delete the staged files (data, bloom, deletion-vector sidecars)
+    * that a write's task messages name — every abort path. */
+  def dropStaged(dir: Path, messages: Iterable[WriterCommitMessage]): Unit =
+    messages.foreach {
+      case LedgerCommitMessage(es) =>
+        es.foreach(LedgerSink.deleteStagedEntry(dir, _))
+      case LedgerDeltaCommitMessage(dvs, es) =>
+        dvs.foreach { case (_, d) => Files.deleteIfExists(dir.resolve(d)): Unit }
+        es.foreach(LedgerSink.deleteStagedEntry(dir, _))
+      case _ => ()
+    }
 }
 
 private[sources] class LedgerBatchWrite(
@@ -131,6 +158,7 @@ private[sources] class LedgerBatchWrite(
     * not main's. */
   private val baseManifest: Option[LedgerSink.Manifest] =
     if (branch.isDefined) branchBase else LedgerSink.readManifest(dir)
+  private val bound = baseManifest.map(_.binding)
   private val ids: Seq[Int] =
     LedgerWriteSupport.writeIds(baseManifest, schema, truncate)
 
@@ -181,18 +209,18 @@ private[sources] class LedgerBatchWrite(
     * (file sets are disjoint; the union is order-independent), and an
     * append racing an OPTIMIZE/DELETE lands too (those commits never
     * touch files they haven't seen). The one append conflict is a
-    * racing SCHEMA-CHANGING commit (overwrite/evolution): the staged
-    * files' field-id binding was computed against [[baseManifest]],
-    * so if the current definition's (schema, ids) differ the append
-    * aborts rather than alias bytes under the new definition. */
+    * racing DEFINITION change: the staged files encode under the ids,
+    * carry tuples of the spec and passed the constraints of
+    * [[baseManifest]]'s binding, so when the current binding differs
+    * (an overwrite, evolution, spec change or addCheck — whose
+    * validation scan cannot see uncommitted staged rows) the append
+    * aborts rather than land bytes the new definition misreads. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val fresh = messages.toSeq
       .flatMap(_.asInstanceOf[LedgerCommitMessage].entries)
-    def dropStaged(): Unit = messages.foreach {
-      case LedgerCommitMessage(es) =>
-        es.foreach(e => LedgerSink.deleteStagedEntry(dir, e))
-      case _ => ()
-    }
+    def dropStaged(): Unit = LedgerWriteSupport.dropStaged(dir, messages)
+    def holds(cur: LedgerSink.Manifest) =
+      LedgerWriteSupport.bindingHolds(bound, schema, partSpec, cur)
     // BRANCH commit: one append on the branch's own log chain — main
     // is untouched, and the branch's conflict rules mirror main's
     // (a schema/spec change of the BRANCH state since planning
@@ -208,12 +236,7 @@ private[sources] class LedgerBatchWrite(
         val fork = LedgerRefs.branchFork(dir, b) // throws if dropped
         val head = LedgerSink.branchHead(dir, b, fork)
         val cur = LedgerSink.readBranchState(dir, b, fork)
-        val ok = baseManifest.exists(bm => bm.schema == cur.schema &&
-          bm.ids == cur.ids && bm.partitionSpec == cur.partitionSpec &&
-          bm.specId == cur.specId &&
-          LedgerConstraints.constraintsOf(bm.props) ==
-            LedgerConstraints.constraintsOf(cur.props))
-        if (!ok) {
+        if (!holds(cur)) {
           dropStaged()
           throw new java.util.ConcurrentModificationException(
             s"append to branch '$b' of $dir raced a definition change; " +
@@ -244,18 +267,7 @@ private[sources] class LedgerBatchWrite(
               "before re-staging")
         }
         val cur = LedgerSink.readManifest(dir)
-        val bindingValid = (baseManifest, cur) match {
-          case (Some(b), Some(c)) => b.schema == c.schema && b.ids == c.ids &&
-            b.partitionSpec == c.partitionSpec && b.specId == c.specId &&
-            LedgerConstraints.constraintsOf(b.props) ==
-              LedgerConstraints.constraintsOf(c.props)
-          case (None, Some(c)) => c.ids == (1 to schema.length) &&
-            c.schema.fieldNames.sameElements(schema.fieldNames) &&
-            c.namedPartitionSpec == partSpec && c.specId == 0 &&
-            LedgerConstraints.constraintsOf(c.props).isEmpty
-          case (_, None) => baseManifest.isEmpty
-        }
-        if (!bindingValid) {
+        if (!cur.fold(baseManifest.isEmpty)(holds)) {
           dropStaged()
           throw new java.util.ConcurrentModificationException(
             s"wap stage on $dir raced a schema-, spec- or constraint-" +
@@ -275,27 +287,7 @@ private[sources] class LedgerBatchWrite(
     }
     LedgerSink.commitRebase(dir, {
       case Some(old) if !truncate =>
-        // a racing PARTITION-SPEC change conflicts like a schema
-        // change: the staged files' tuples were computed under the
-        // planning spec and would be misread under the new one. A
-        // racing CONSTRAINT change conflicts too: this job's rows were
-        // validated against the planning-time constraint set (the
-        // addCheck validation scan cannot see uncommitted staged rows,
-        // so letting this commit through would land unvalidated data
-        // under the new rule).
-        val bindingValid = baseManifest match {
-          case Some(b) => b.schema == old.schema && b.ids == old.ids &&
-            b.partitionSpec == old.partitionSpec && b.specId == old.specId &&
-            LedgerConstraints.constraintsOf(b.props) ==
-              LedgerConstraints.constraintsOf(old.props)
-          case None => // bound fresh 1..n against an empty table; a
-            // manifest that appeared since must carry that same binding
-            old.ids == (1 to schema.length) &&
-              old.schema.fieldNames.sameElements(schema.fieldNames) &&
-              old.namedPartitionSpec == partSpec && old.specId == 0 &&
-              LedgerConstraints.constraintsOf(old.props).isEmpty
-        }
-        if (bindingValid) Some(old.copy(files = old.files ++ fresh)) else None
+        if (holds(old)) Some(old.copy(files = old.files ++ fresh)) else None
       case existing =>
         val keepSpec = existing.map(_.namedPartitionSpec)
           .getOrElse(requestedSpec)
@@ -309,11 +301,7 @@ private[sources] class LedgerBatchWrite(
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case LedgerCommitMessage(es) =>
-        es.foreach(e => LedgerSink.deleteStagedEntry(dir, e))
-      case _ => ()
-    }
+    LedgerWriteSupport.dropStaged(dir, messages)
 }
 
 /** Group-based copy-on-write row-level operation (see
@@ -362,11 +350,9 @@ private[sources] class LedgerRowLevelOperation(
     new WriteBuilder {
       override def build(): Write = new Write {
         override def toBatch: BatchWrite = new BatchWrite {
-          // (spec, specId, constraints) the writer factory bound its
-          // partition tuples and row checks under — commit verifies
-          // they are still current
-          @volatile private var writeSpec: Option[(
-            Seq[LedgerSink.NamedPartField], Int, Seq[(String, String)])] = None
+          // the binding the writer factory encoded its ids, tuples and
+          // row checks under — commit verifies it is still current
+          @volatile private var bound: Option[LedgerSink.Binding] = None
           override def createBatchWriterFactory(
               pinfo: PhysicalWriteInfo): DataWriterFactory = {
             Files.createDirectories(dir.resolve("_staging"))
@@ -374,8 +360,7 @@ private[sources] class LedgerRowLevelOperation(
             val ddl = LedgerSink.cleanDdl(schema)
             val tag = java.util.UUID.randomUUID().toString.take(8)
             val snapshot = LedgerSink.readManifest(dir)
-            writeSpec = snapshot.map(m => (m.namedPartitionSpec, m.specId,
-              LedgerConstraints.constraintsOf(m.props)))
+            bound = snapshot.map(_.binding)
             val ids = LedgerWriteSupport.writeIds(snapshot, schema,
               truncate = false)
             val partWrites = snapshot
@@ -414,30 +399,24 @@ private[sources] class LedgerRowLevelOperation(
               // concurrent deleteMoR that only swapped a DV also
               // invalidates this operation's scan (see scannedEntries)
               val curPairs = m.files.map(e => (e.file, e.dv)).toSet
-              // a spec or constraint change since the writer factory
-              // bound its tuples/checks is a conflict like any rewrite
-              val specOk = writeSpec.forall { case (spec, sid, cs) =>
-                m.namedPartitionSpec == spec && m.specId == sid &&
-                  LedgerConstraints.constraintsOf(m.props) == cs
-              }
+              // a definition change since the writer factory bound its
+              // ids, tuples and checks is a conflict like any rewrite
+              val bindingOk = LedgerWriteSupport.bindingHolds(bound, schema,
+                Seq.empty, m)
               // an equality delete installed after planning would be
               // escaped by the replacement files' fresh data sequence
               // (the scan only materialized the PLANNED set)
               val eqdOk = m.eqDeletes == plannedEqDeletes
-              if (!specOk || !eqdOk || !replacedPairs.subsetOf(curPairs)) None
+              if (!bindingOk || !eqdOk || !replacedPairs.subsetOf(curPairs)) None
               else Some(m.copy(
                 files = m.files.filterNot(e => replacedNames(e.file)) ++ fresh))
             }, s"row-level $cmd on $dir raced a commit that rewrote one of " +
-              "its scanned files, changed the partition spec, or " +
-              "installed equality deletes; re-run the operation")
+              "its scanned files, redefined the table, or installed " +
+              "equality deletes; re-run the operation")
           }
 
           override def abort(messages: Array[WriterCommitMessage]): Unit =
-            messages.foreach {
-              case LedgerCommitMessage(es) =>
-                es.foreach(e => LedgerSink.deleteStagedEntry(dir, e))
-              case _ => ()
-            }
+            LedgerWriteSupport.dropStaged(dir, messages)
         }
       }
     }
@@ -514,21 +493,20 @@ private[sources] class LedgerStreamingWrite(dir: Path, schema: StructType,
     // file names — see createBatchWriterFactory's naming note
     val tag = java.util.UUID.randomUUID().toString.take(8)
     // epoch writes enforce the table's constraints too — a stream is
-    // just another ingest route. The constraint SET is captured here,
-    // once per stream: the epoch commit conflicts on any later change
-    // (see commit), forcing a restart that re-captures it.
+    // just another ingest route. The binding is captured here: the
+    // epoch commit conflicts on any later change (see commit), forcing
+    // a restart that re-captures it.
     val m0 = LedgerSink.readManifest(dir)
-    boundConstraints = m0.map(m =>
-      LedgerConstraints.constraintsOf(m.props)).getOrElse(Seq.empty)
+    bound = m0.map(_.binding)
     val checks = LedgerConstraints.writeChecks(m0, schema, truncate = false)
     (partitionId: Int, taskId: Long, epochId: Long) =>
       new LedgerDataWriter(base, StructType.fromDDL(ddl), ids, partWrites,
         partitionId, taskId, filePrefix = s"epoch-$epochId-$tag-", checks)
   }
 
-  /** (name, sql) constraint set the writer factory validated under —
+  /** The binding the writer factory encoded and validated under —
     * epoch commits conflict when it changed. */
-  @volatile private var boundConstraints: Seq[(String, String)] = Seq.empty
+  @volatile private var bound: Option[LedgerSink.Binding] = None
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
@@ -542,30 +520,23 @@ private[sources] class LedgerStreamingWrite(dir: Path, schema: StructType,
     // so a replayed epoch can never double-append
     LedgerSink.commitRebase(dir, cur => {
       val m = cur.getOrElse(LedgerSink.Manifest.fresh(schema, partSpec))
-      // a partition-spec change mid-stream invalidates the factory's
-      // tuple bindings — fail the epoch rather than stamp wrong specs;
-      // a constraint change mid-stream means this epoch's rows were
-      // validated under the OLD rule set — fail rather than land them
-      if (m.namedPartitionSpec != partSpec)
+      // a definition change mid-stream invalidates the factory's ids
+      // and tuples, or means this epoch's rows were validated under
+      // the OLD rule set — fail the epoch rather than land them. The
+      // binding is re-captured per epoch but the tuples' spec is
+      // fixed at stream start, so the spec is compared on its own too
+      if (m.namedPartitionSpec != partSpec ||
+          !LedgerWriteSupport.bindingHolds(bound, schema, partSpec, m))
         throw new java.util.ConcurrentModificationException(
-          s"epoch commit on $dir raced a partition-spec change " +
-            s"(${m.namedPartitionSpec} vs writer's $partSpec); restart " +
-            "the stream against the new spec")
-      if (LedgerConstraints.constraintsOf(m.props) != boundConstraints)
-        throw new java.util.ConcurrentModificationException(
-          s"epoch commit on $dir raced a constraint change; restart the " +
-            "stream to enforce the new constraint set")
+          s"epoch commit on $dir raced a schema-, spec- or constraint-" +
+            "changing commit; restart the stream against the new definition")
       if (m.files.exists(_.file.startsWith(marker))) {
         // replayed epoch: the manifest already holds its files — drop
         // the re-staged duplicates instead of double-appending
         // (returning the current manifest unchanged commits nothing)
-        messages.foreach {
-          case LedgerCommitMessage(es) => es.foreach { e =>
-            if (!m.files.exists(_.file == e.file))
-              LedgerSink.deleteStagedEntry(dir, e)
-          }
-          case _ => ()
-        }
+        val present = m.files.map(_.file).toSet
+        LedgerWriteSupport.dropStaged(dir,
+          Seq(LedgerCommitMessage(fresh.filterNot(e => present(e.file)))))
         Some(m)
       } else Some(m.copy(files = m.files ++ fresh))
     }, "unreachable: epoch appends always rebase")
@@ -573,11 +544,7 @@ private[sources] class LedgerStreamingWrite(dir: Path, schema: StructType,
 
   override def abort(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case LedgerCommitMessage(es) =>
-        es.foreach(e => LedgerSink.deleteStagedEntry(dir, e))
-      case _ => ()
-    }
+    LedgerWriteSupport.dropStaged(dir, messages)
 }
 
 /** Task-side writer. Partitioned tables get DYNAMIC sub-files: one
@@ -595,7 +562,8 @@ private[sources] class LedgerDataWriter(
     base: String, schema: StructType, ids: Seq[Int],
     partWrites: Seq[(Int, String, Int)],
     partitionId: Int, taskId: Long, filePrefix: String = "",
-    checks: LedgerConstraints.WriteChecks = LedgerConstraints.WriteChecks.empty)
+    checks: LedgerConstraints.WriteChecks = LedgerConstraints.WriteChecks.empty,
+    bloom: Boolean = true)
     extends DataWriter[InternalRow] {
 
   // CHECK constraints compile once per task; a violating row fails the
@@ -609,7 +577,10 @@ private[sources] class LedgerDataWriter(
 
   private val statIdx = LedgerSink.statColIndex(schema)
   private val statId = statIdx.map(ids(_))
-  private val bloomIdx = LedgerSink.bloomColIndex(schema)
+  // `bloom = false` for files that are read whole, never pruned
+  // (equality-delete sidecars)
+  private val bloomIdx =
+    if (bloom) LedgerSink.bloomColIndex(schema) else None
   private val bloomId = bloomIdx.map(ids(_))
 
   private final class Sub(val rel: String, val partVals: Option[Seq[String]]) {

@@ -43,6 +43,40 @@ class NativeFunctionSpec extends SparkSpec {
     }
   }
 
+  test("register installs each function once per session") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val registry = spark.sessionState.functionRegistry
+    val id = FunctionIdentifier("graft_dot")
+    Native.register(spark)
+    val (builder, info) =
+      (registry.lookupFunctionBuilder(id).get, registry.lookupFunction(id).get)
+    Native.register(spark)
+    assert(registry.lookupFunctionBuilder(id).get eq builder,
+      "a second register must not replace the installed builder")
+    assert(registry.lookupFunction(id).get eq info,
+      "a second register must not re-register the function")
+  }
+
+  test("GraftExtensions installs every native function, graft_hist_l1 too") {
+    import org.apache.spark.sql.SparkSession
+    val base = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val s2 = SparkSession.builder()
+        .master("local[2]")
+        .withExtensions(new graft.functions.GraftExtensions)
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+      // one a and one b differ between the two histograms
+      assert(s2.sql("SELECT graft_hist_l1('aab', 'abb') AS d")
+        .head().getLong(0) == 2L)
+    } finally {
+      SparkSession.setDefaultSession(base)
+      SparkSession.setActiveSession(base)
+    }
+  }
+
   test("graft_nfc composes decomposed input and fast-paths NFC input") {
     Native.register(spark)
     val rows = Seq(

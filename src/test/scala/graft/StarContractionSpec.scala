@@ -52,4 +52,20 @@ class StarContractionSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSeq
     assert(a == b)
   }
+
+  test("label propagation stays O(edges) per round on a 1500-node chain") {
+    // Regression guard for the per-round lineage truncation: before
+    // propagateLabels checkpointed each round, every round silently
+    // re-executed all prior rounds whenever the CacheManager plan-match
+    // missed — geometric cost that only surfaced on graphs needing
+    // many rounds (observed: 130 s for ROUND FOUR on 302 edges, then
+    // OOM). A 1500-node chain needs ~10 pointer-jumping rounds; with
+    // per-round checkpoints it completes in seconds, without them it
+    // effectively hangs (2^10 recompute) — the suite timeout is the
+    // assertion.
+    val chain = (0L until 1499L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val labels = Dedup.propagateLabels(chain).as[(Long, Long)].collect()
+    assert(labels.length == 1500)
+    assert(labels.forall(_._2 == 0L), "chain must collapse to the min id")
+  }
 }

@@ -84,6 +84,28 @@ class EqualityDeleteSpec extends graft.SparkSpec {
     assert(read(dir).count() == 10)
   }
 
+  test("upsertByKeys enforces NOT NULL like an append") {
+    val dir = freshDir()
+    write(dir, spark.range(0, 10).selectExpr("id", "id AS v"), "overwrite")
+    assert(!LedgerSink.readManifest(dir).get.schema("v").nullable)
+    val before = read(dir).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val v = LedgerSink.currentVersion(dir)
+    val ex = intercept[Exception](
+      LedgerMaintenance.upsertByKeys(spark, dir.toString, Seq("id"),
+        spark.range(5, 6).selectExpr("id", "CAST(NULL AS BIGINT) AS v")))
+    assert(Iterator.iterate(ex: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("NOT NULL violation")),
+      s"expected a NOT NULL violation, got $ex")
+    assert(LedgerSink.currentVersion(dir) == v)
+    assert(read(dir).collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      before)
+    // the failed task removed what it staged
+    val committed = LedgerSink.readManifest(dir).get.files.map(_.file).toSet
+    val staged = Files.list(dir.resolve("_staging")).toArray.toSeq
+      .map(p => s"_staging/${p.asInstanceOf[java.nio.file.Path].getFileName}")
+    assert(staged.toSet == committed, s"leftover staged files: $staged")
+  }
+
   test("OPTIMIZE materializes equality deletes and GCs them; answers unchanged") {
     val dir = freshDir()
     write(dir, spark.range(0, 30).selectExpr("id", "id AS v").repartition(3),

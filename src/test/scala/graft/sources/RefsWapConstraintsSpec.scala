@@ -147,6 +147,25 @@ class RefsWapConstraintsSpec extends graft.SparkSpec {
     assert(staged.forall(f => !Files.exists(root.resolve(f))))
   }
 
+  test("wap: a constraint added since the stage refuses the publish") {
+    val dir = freshDir()
+    val root = Paths.get(dir)
+    write(dir, spark.range(0, 10).selectExpr("id", "id AS v"), "overwrite") // v1
+    spark.range(100, 101).selectExpr("id", "id - 101 AS v").write
+      .format(ledger).option("path", dir).option("wapId", "w")
+      .mode("append").save()
+    // staged rows are not live data, so the add's validation scan passes
+    LedgerConstraints.addCheck(spark, dir, "nonneg", "v >= 0")             // v2
+    val v = LedgerSink.currentVersion(root)
+    intercept[java.util.ConcurrentModificationException] {
+      LedgerRefs.publishWap(root, "w")
+    }
+    assert(LedgerSink.currentVersion(root) == v)
+    assert(read(dir).count() == 10 && read(dir).filter("v < 0").count() == 0,
+      "the staged row violating the new constraint must not go live")
+    assert(LedgerSink.listWaps(root) == Seq("w"), "stage survives the refusal")
+  }
+
   test("check constraints: add validates, writes enforce, null passes") {
     val dir = freshDir()
     val root = Paths.get(dir)

@@ -164,6 +164,34 @@ class SpecEvolutionSpec extends graft.SparkSpec {
       .load().count() == 10, "the mis-bound append must not land")
   }
 
+  test("a stream epoch after a spec change aborts instead of mis-stamping") {
+    val dir = freshDir()
+    write(dir, spark.range(0, 10).selectExpr("id", "id % 3 AS g"),
+      "overwrite", partitionBy = Seq("g"))
+    val schema =
+      org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, g BIGINT")
+    val sw = new LedgerStreamingWrite(dir, schema,
+      Seq(LedgerSink.NamedPartField("g", "identity", 0)))
+    def epoch(e: Long, id: Long) = {
+      // the writer factory is re-created every micro-batch
+      val w = sw.createStreamingWriterFactory(null).createWriter(0, e, e)
+      w.write(new org.apache.spark.sql.catalyst.expressions
+        .GenericInternalRow(Array[Any](id, id % 3)))
+      Array(w.commit())
+    }
+    sw.commit(1L, epoch(1L, 100L))
+    LedgerMaintenance.alterPartitionSpec(dir.toString,
+      Seq(("g", "bucket", 4))): Unit
+    val v = LedgerSink.currentVersion(dir)
+    intercept[java.util.ConcurrentModificationException] {
+      sw.commit(2L, epoch(2L, 200L))
+    }
+    assert(LedgerSink.currentVersion(dir) == v)
+    assert(spark.read.format(ledger).option("path", dir.toString)
+      .load().select("id").collect().map(_.getLong(0)).sorted.toSeq ==
+      ((0L until 10L) :+ 100L), "the mis-stamped epoch must not land")
+  }
+
   test("optimize compacts within specs, never across them") {
     val dir = freshDir()
     write(dir, spark.range(0, 50).selectExpr("id").repartition(4),
