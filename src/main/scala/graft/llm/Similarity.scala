@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.io.Tables
@@ -41,19 +41,41 @@ object Similarity {
     s"""e0 AS (SELECT vec_id, label, ${toDoubleArr("embedding", d)} AS v FROM embeddings),
         e AS (SELECT vec_id, label, v, ${norm64("v", d)} AS nrm FROM e0)"""
 
-  /** Brute-force cosine top-10 for query vectors vec_id < 5. */
-  def cosineTopK(spark: SparkSession, dir: String): DataFrame = {
-    val all = vecs(spark, dir)
-    val q = all.filter(col("vec_id") < nQueries)
-      .selectExpr("vec_id AS query_id", "v AS qv", "nrm AS qnrm")
-    val scored = all.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .selectExpr("query_id", "vec_id",
-        s"${cosineWithNorms("qv", "v", "qnrm", "nrm", SparkD)} AS cosine")
+  /** The cosine top-k every tier ranks with: each query in `queries`
+    * scored against the `cands` that share its `keys` (no key: every
+    * pair, the broadcast-queries cross product), the self pair dropped.
+    * Both sides are vector-shaped (`vec_id, v, nrm` plus the keys); the
+    * query side is the broadcast relation, so scan parallelism is the
+    * candidate partitioning. Output: `query_id, vec_id, <carried>,
+    * rank, cosine` ordered by `query_id, rank`. */
+  private def cosineTopKOf(cands: DataFrame, queries: DataFrame,
+      keys: Seq[String], carried: Seq[String] = Nil): DataFrame = {
+    val q = queries.selectExpr(Seq("vec_id AS query_id", "v AS qv", "nrm AS qnrm") ++ keys: _*)
+    val pairs =
+      if (keys.isEmpty) cands.join(broadcast(q), col("vec_id") =!= col("query_id"))
+      else cands.join(broadcast(q), keys).filter(col("vec_id") =!= col("query_id"))
+    rankTopK(pairs.selectExpr(Seq("query_id", "vec_id") ++ carried :+
+      s"${cosineWithNorms("qv", "v", "qnrm", "nrm", SparkD)} AS cosine": _*), carried)
+  }
+
+  /** The ranking step of [[cosineTopKOf]]: scored `(query_id, vec_id,
+    * <carried>, cosine)` rows ranked per query by cosine desc, vec_id
+    * asc (a total order), top [[topK]] kept. */
+  private def rankTopK(scored: DataFrame, carried: Seq[String] = Nil): DataFrame = {
     val w = Window.partitionBy("query_id").orderBy(desc("cosine"), asc("vec_id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= topK)
-      .select("query_id", "vec_id", "rank", "cosine")
+      .select((Seq("query_id", "vec_id") ++ carried ++ Seq("rank", "cosine")).map(col): _*)
       .orderBy("query_id", "rank")
+  }
+
+  /** The query vectors: vec_id < [[nQueries]]. */
+  private def queriesOf(df: DataFrame): DataFrame = df.filter(col("vec_id") < nQueries)
+
+  /** Brute-force cosine top-10 for query vectors vec_id < 5. */
+  def cosineTopK(spark: SparkSession, dir: String): DataFrame = {
+    val all = vecs(spark, dir)
+    cosineTopKOf(all, queriesOf(all), Nil)
   }
 
   val cosineTopKOracle: String =
@@ -87,17 +109,7 @@ object Similarity {
     val bucketed = vecs(spark, dir)
       .selectExpr("vec_id", "v", "nrm",
         s"CAST(${lshBucket("v", nPlanes, SparkD)} AS INTEGER) AS bucket")
-    val q = bucketed.filter(col("vec_id") < nQueries)
-      .selectExpr("vec_id AS query_id", "v AS qv", "nrm AS qnrm", "bucket")
-    val scored = bucketed.join(broadcast(q), Seq("bucket"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .selectExpr("query_id", "vec_id", "bucket",
-        s"${cosineWithNorms("qv", "v", "qnrm", "nrm", SparkD)} AS cosine")
-    val w = Window.partitionBy("query_id").orderBy(desc("cosine"), asc("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .select("query_id", "vec_id", "bucket", "rank", "cosine")
-      .orderBy("query_id", "rank")
+    cosineTopKOf(bucketed, queriesOf(bucketed), Seq("bucket"), Seq("bucket"))
   }
 
   // ---- IVF (inverted-file) variant ----
@@ -115,20 +127,21 @@ object Similarity {
     * bounded at ~maxNlist·(dim·8) bytes ≈ 2 MB forever. The trade is
     * recall, not correctness: past the cap, cells grow as n/nlist, and
     * the recall knob is probing more cells ([[ivfTopKMultiProbe]]) —
-    * the standard IVF trade, now explicit. Override with
-    * `spark.graft.ivf.maxNlist` (the cap-engagement spec lowers it;
-    * the default never binds at fixture scale, so oracles use the
-    * same literal bound). */
-  private[graft] val defaultMaxNlist = 4096
+    * the standard IVF trade, now explicit. The cap never binds at
+    * fixture scale, so oracles use the same literal bound; specs lower
+    * it through the `maxNlist` parameter of [[ivfCells]] and
+    * [[ivfTopK]]. */
+  private[graft] val defaultMaxNlist = 4096L
 
-  private def maxNlist(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.ivf.maxNlist")
-      .map(_.toLong).getOrElse(defaultMaxNlist.toLong)
-
-  /** The bounded centroid-sample predicate (Spark side; conf-aware). */
-  private def centroidPred(spark: SparkSession) =
+  /** The bounded centroid-sample predicate (Spark side). */
+  private def centroidPred(maxNlist: Long = defaultMaxNlist) =
     (col("vec_id") % centroidMod === 0) &&
-      (col("vec_id") < lit(centroidMod.toLong * maxNlist(spark)))
+      (col("vec_id") < lit(centroidMod.toLong * maxNlist))
+
+  /** The coarse quantizer's centroids, `(centroid_id, cv, cnrm)`. */
+  private def centroids(all: DataFrame, maxNlist: Long = defaultMaxNlist): DataFrame =
+    all.filter(centroidPred(maxNlist))
+      .selectExpr("vec_id AS centroid_id", "v AS cv", "nrm AS cnrm")
 
   /** Oracle twin of [[centroidPred]] at the default cap. */
   private def centroidPredSql: String =
@@ -154,11 +167,11 @@ object Similarity {
       .selectExpr("vec_id", "label", "v", "nrm", "centroid_id AS cell", "ccos")
   }
 
-  private def ivfAssigned(spark: SparkSession, dir: String): DataFrame =
-    graft.PlanCache(spark, "ivf_assigned", dir) {
+  private def ivfAssigned(spark: SparkSession, dir: String,
+      maxNlist: Long = defaultMaxNlist): DataFrame =
+    graft.PlanCache(spark, s"ivf_assigned_$maxNlist", dir) {
       val all = vecs(spark, dir)
-      assignTo(all, all.filter(centroidPred(spark))
-        .selectExpr("vec_id AS centroid_id", "v AS cv", "nrm AS cnrm"))
+      assignTo(all, centroids(all, maxNlist))
     }
 
   private def ivfCte(d: Dialect): String =
@@ -173,7 +186,10 @@ object Similarity {
 
   /** Cell assignment (the IVF index structure). */
   def ivfCells(spark: SparkSession, dir: String): DataFrame =
-    ivfAssigned(spark, dir)
+    ivfCells(spark, dir, defaultMaxNlist)
+
+  private[graft] def ivfCells(spark: SparkSession, dir: String, maxNlist: Long): DataFrame =
+    ivfAssigned(spark, dir, maxNlist)
       .select("vec_id", "label", "cell", "ccos")
       .orderBy("vec_id")
 
@@ -182,19 +198,12 @@ object Similarity {
         SELECT vec_id, label, cell, ccos FROM assigned ORDER BY vec_id"""
 
   /** IVF top-k: probe only the query's cell. */
-  def ivfTopK(spark: SparkSession, dir: String): DataFrame = {
-    val assigned = ivfAssigned(spark, dir)
-    val q = assigned.filter(col("vec_id") < nQueries)
-      .selectExpr("vec_id AS query_id", "v AS qv", "nrm AS qnrm", "cell")
-    val scored = assigned.join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .selectExpr("query_id", "vec_id", "cell",
-        s"${cosineWithNorms("qv", "v", "qnrm", "nrm", SparkD)} AS cosine")
-    val w = Window.partitionBy("query_id").orderBy(desc("cosine"), asc("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .select("query_id", "vec_id", "cell", "rank", "cosine")
-      .orderBy("query_id", "rank")
+  def ivfTopK(spark: SparkSession, dir: String): DataFrame =
+    ivfTopK(spark, dir, defaultMaxNlist)
+
+  private[graft] def ivfTopK(spark: SparkSession, dir: String, maxNlist: Long): DataFrame = {
+    val assigned = ivfAssigned(spark, dir, maxNlist)
+    cosineTopKOf(assigned, queriesOf(assigned), Seq("cell"), Seq("cell"))
   }
 
   val ivfTopKOracle: String =
@@ -216,31 +225,25 @@ object Similarity {
     * cells instead of one — THE recall knob of an IVF index (a query
     * near a cell boundary misses true neighbors assigned to the
     * adjacent cell under single-probe). Cost scales linearly in
-    * probed cells while staying an equi-join on cell id; the
-    * query-to-centroid ranking reuses the same broadcast-centroids
-    * pattern as assignment. */
-  def ivfTopKMultiProbe(spark: SparkSession, dir: String): DataFrame = {
+    * probed cells while staying an equi-join on cell id. */
+  def ivfTopKMultiProbe(spark: SparkSession, dir: String): DataFrame =
+    probeTopK(spark, dir, nProbe)
+
+  /** The probe search: each query ranks the centroids by the same
+    * cosine-then-centroid_id order as assignment ([[assignTo]]), keeps
+    * its `p` nearest cells, and ranks the vectors assigned to them. One
+    * body for the probe-2 query and every tier of [[probeSweep]]. */
+  private def probeTopK(spark: SparkSession, dir: String, p: Int): DataFrame = {
     val all = vecs(spark, dir)
-    val cents = all.filter(centroidPred(spark))
-      .selectExpr("vec_id AS centroid_id", "v AS cv", "nrm AS cnrm")
-    val qw = Window.partitionBy("query_id").orderBy(desc("qccos"), asc("centroid_id"))
-    val qCells = all.filter(col("vec_id") < nQueries)
-      .selectExpr("vec_id AS query_id", "v AS qv", "nrm AS qnrm")
-      .crossJoin(broadcast(cents))
-      .selectExpr("query_id", "qv", "qnrm", "centroid_id",
-        s"${cosineWithNorms("qv", "cv", "qnrm", "cnrm", SparkD)} AS qccos")
+    val qw = Window.partitionBy("vec_id").orderBy(desc("qccos"), asc("centroid_id"))
+    val probed = queriesOf(all)
+      .crossJoin(broadcast(centroids(all)))
+      .selectExpr("vec_id", "v", "nrm", "centroid_id",
+        s"${cosineWithNorms("v", "cv", "nrm", "cnrm", SparkD)} AS qccos")
       .withColumn("__pr", row_number().over(qw))
-      .filter(col("__pr") <= nProbe)
-      .selectExpr("query_id", "qv", "qnrm", "centroid_id AS cell")
-    val scored = ivfAssigned(spark, dir).join(broadcast(qCells), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .selectExpr("query_id", "vec_id", "cell",
-        s"${cosineWithNorms("qv", "v", "qnrm", "nrm", SparkD)} AS cosine")
-    val w = Window.partitionBy("query_id").orderBy(desc("cosine"), asc("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .select("query_id", "vec_id", "cell", "rank", "cosine")
-      .orderBy("query_id", "rank")
+      .filter(col("__pr") <= p)
+      .selectExpr("vec_id", "v", "nrm", "centroid_id AS cell")
+    cosineTopKOf(ivfAssigned(spark, dir), probed, Seq("cell"), Seq("cell"))
   }
 
   val ivfTopKMultiProbeOracle: String =
@@ -264,57 +267,16 @@ object Similarity {
 
   private val probeSweepPs = Seq(1, 2, 4, 8)
 
-  /** [[ivfTopKMultiProbe]] with the probe count as a parameter — the
-    * shared body of the probe-2 query and the sweep below. */
-  private def probeTopK(spark: SparkSession, dir: String, p: Int): DataFrame = {
-    val all = vecs(spark, dir)
-    val cents = all.filter(centroidPred(spark))
-      .selectExpr("vec_id AS centroid_id", "v AS cv", "nrm AS cnrm")
-    val qw = Window.partitionBy("query_id").orderBy(desc("qccos"), asc("centroid_id"))
-    val qCells = all.filter(col("vec_id") < nQueries)
-      .selectExpr("vec_id AS query_id", "v AS qv", "nrm AS qnrm")
-      .crossJoin(broadcast(cents))
-      .selectExpr("query_id", "qv", "qnrm", "centroid_id",
-        s"${cosineWithNorms("qv", "cv", "qnrm", "cnrm", SparkD)} AS qccos")
-      .withColumn("__pr", row_number().over(qw))
-      .filter(col("__pr") <= p)
-      .selectExpr("query_id", "qv", "qnrm", "centroid_id AS cell")
-    val scored = ivfAssigned(spark, dir).join(broadcast(qCells), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .selectExpr("query_id", "vec_id",
-        s"${cosineWithNorms("qv", "v", "qnrm", "nrm", SparkD)} AS cosine")
-    val w = Window.partitionBy("query_id").orderBy(desc("cosine"), asc("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .select("query_id", "vec_id")
-  }
-
   /** `ann_probe_sweep`: the recall-vs-probe CURVE (p ∈ 1,2,4,8) against
     * brute-force truth — the measured trade-off an IVF deployment is
     * tuned from (probe count multiplies scanned cells linearly; recall
     * saturates once the probed cells cover the query's true
-    * neighborhood, and THIS table says where). Same all-integer hit
-    * counting as the per-tier recall audit, so the recall doubles are
-    * bit-exact; each probe tier stays the bounded broadcast-cells
-    * equi-join shape regardless of corpus size. */
-  def probeSweep(spark: SparkSession, dir: String): DataFrame = {
-    // r14: cut the brute-force truth — it fed every probe tier's
-    // branch of the union, so the full corpus×queries scan + window
-    // re-executed once per tier (4×)
-    val truth = graft.ops.Checkpoints.cut(
-      cosineTopK(spark, dir).select("query_id", "vec_id"))
-    probeSweepPs.map { p =>
-      truth.join(
-          probeTopK(spark, dir, p).withColumn("__hit", lit(1)),
-          Seq("query_id", "vec_id"), "left_outer")
-        .agg(count(lit(1)).as("n_true"),
-          coalesce(sum(coalesce(col("__hit"), lit(0))), lit(0L))
-            .cast("long").as("n_hit"))
-        .select(lit(p).cast("int").as("n_probe"), col("n_true"), col("n_hit"),
-          expr("CASE WHEN n_true > 0 THEN n_hit / CAST(n_true AS DOUBLE) " +
-            "ELSE CAST(0 AS DOUBLE) END").as("recall_at_k"))
-    }.reduce(_.unionByName(_)).orderBy("n_probe")
-  }
+    * neighborhood, and THIS table says where). Same audit as the
+    * per-tier recall ([[recallAtK]]); each probe tier stays the bounded
+    * broadcast-cells equi-join shape regardless of corpus size. */
+  def probeSweep(spark: SparkSession, dir: String): DataFrame =
+    recallByTier(cosineTruth(spark, dir), "n_probe",
+      probeSweepPs.map(p => lit(p).cast("int") -> probeTopK(spark, dir, p)))
 
   val probeSweepOracle: String = {
     val tiers = probeSweepPs.map { p =>
@@ -463,17 +425,7 @@ object Similarity {
     * separate tier. Same single-probe equi-join shape as [[ivfTopK]]. */
   def ivfTopKRefined(spark: SparkSession, dir: String): DataFrame = {
     val assigned = refinedAssigned(spark, dir)
-    val q = assigned.filter(col("vec_id") < nQueries)
-      .selectExpr("vec_id AS query_id", "v AS qv", "nrm AS qnrm", "cell")
-    val scored = assigned.join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .selectExpr("query_id", "vec_id", "cell",
-        s"${cosineWithNorms("qv", "v", "qnrm", "nrm", SparkD)} AS cosine")
-    val w = Window.partitionBy("query_id").orderBy(desc("cosine"), asc("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .select("query_id", "vec_id", "cell", "rank", "cosine")
-      .orderBy("query_id", "rank")
+    cosineTopKOf(assigned, queriesOf(assigned), Seq("cell"), Seq("cell"))
   }
 
   /** The `a2` CTE chain (refined assignment), shared by the refined
@@ -503,39 +455,52 @@ object Similarity {
         ${updCte("a2", "c2")}
         SELECT cell, dim, n_members, mean_x FROM c2 ORDER BY cell, dim"""
 
+  /** The recall audit: each truth row `(query_id, vec_id)` counts as a
+    * hit when `retrieved` holds it, then `(n_true, n_hit, recall_at_k)`
+    * per group of `by` (none: one row, zero counts on empty truth).
+    * All-integer counting, so the recall doubles are bit-exact across
+    * engines. */
+  private def recallAtK(truth: DataFrame, retrieved: DataFrame, by: String*): DataFrame =
+    // retrieved sets are row_number-deduped: at most one row per
+    // (query_id, vec_id), so the left join cannot fan out truth rows
+    truth.join(
+        retrieved.select("query_id", "vec_id").withColumn("__hit", lit(1)),
+        Seq("query_id", "vec_id"), "left_outer")
+      .groupBy(by.map(col): _*)
+      .agg(count(lit(1)).as("n_true"),
+        coalesce(sum(coalesce(col("__hit"), lit(0))), lit(0L))
+          .cast("long").as("n_hit"))
+      .withColumn("recall_at_k", expr("CASE WHEN n_true > 0 THEN " +
+        "n_hit / CAST(n_true AS DOUBLE) ELSE CAST(0 AS DOUBLE) END"))
+
+  /** One [[recallAtK]] row per tier, the tier named by `label`, ordered
+    * by it. `truth` feeds every tier: callers cut it. */
+  private def recallByTier(truth: DataFrame, label: String,
+      tiers: Seq[(Column, DataFrame)]): DataFrame =
+    tiers.map { case (name, df) =>
+      recallAtK(truth, df).select(name.as(label), col("*"))
+    }.reduce(_.unionByName(_)).orderBy(label)
+
+  /** The brute-force cosine top-k as `(query_id, vec_id)`, cut: it
+    * feeds every tier of an audit, and uncut the corpus × queries scan
+    * and its window would re-execute once per tier. */
+  private def cosineTruth(spark: SparkSession, dir: String): DataFrame =
+    graft.ops.Checkpoints.cut(cosineTopK(spark, dir).select("query_id", "vec_id"))
+
   /** Recall@k of each approximate tier against the brute-force
     * ground truth — THE number an ANN index is judged by. Each tier's
     * retrieved set is semi-joined against [[cosineTopK]]'s top-k and
     * reduced to (n_true, n_hit, recall) per tier; the probe-2 row
     * exhibits the recall knob (more probed cells ⇒ recall can only
-    * grow — pinned as a monotonicity spec). All-integer counting, so
-    * the recall doubles are bit-exact across engines. At scale this
-    * is the standard offline index-quality job: truth for a small
-    * query sample via brute force, then one semi-join per tier. */
-  def annRecall(spark: SparkSession, dir: String): DataFrame = {
-    // r14: cut the truth — it fed all four tiers' branches (see
-    // probeSweep); the brute-force pass now runs once, not 4×
-    val truth = graft.ops.Checkpoints.cut(
-      cosineTopK(spark, dir).select("query_id", "vec_id"))
-    val tiers = Seq(
-      ("ivf_probe1", ivfTopK(spark, dir)),
-      ("ivf_probe2", ivfTopKMultiProbe(spark, dir)),
-      ("ivf_refined", ivfTopKRefined(spark, dir)),
-      ("lsh", lshTopK(spark, dir)))
-    tiers.map { case (name, df) =>
-      // tier results are row_number-deduped: at most one row per
-      // (query_id, vec_id), so the left join cannot fan out truth rows
-      truth.join(
-          df.select("query_id", "vec_id").withColumn("__hit", lit(1)),
-          Seq("query_id", "vec_id"), "left_outer")
-        .agg(count(lit(1)).as("n_true"),
-          coalesce(sum(coalesce(col("__hit"), lit(0))), lit(0L))
-            .cast("long").as("n_hit"))
-        .select(lit(name).as("tier"), col("n_true"), col("n_hit"),
-          expr("CASE WHEN n_true > 0 THEN n_hit / CAST(n_true AS DOUBLE) " +
-            "ELSE CAST(0 AS DOUBLE) END").as("recall_at_k"))
-    }.reduce(_.unionByName(_)).orderBy("tier")
-  }
+    * grow — pinned as a monotonicity spec). At scale this is the
+    * standard offline index-quality job: truth for a small query
+    * sample via brute force, then one semi-join per tier. */
+  def annRecall(spark: SparkSession, dir: String): DataFrame =
+    recallByTier(cosineTruth(spark, dir), "tier", Seq(
+      lit("ivf_probe1") -> ivfTopK(spark, dir),
+      lit("ivf_probe2") -> ivfTopKMultiProbe(spark, dir),
+      lit("ivf_refined") -> ivfTopKRefined(spark, dir),
+      lit("lsh") -> lshTopK(spark, dir)))
 
   val annRecallOracle: String =
     s"""WITH ${ivfCte(DuckD)},
@@ -638,7 +603,7 @@ object Similarity {
     * posexplode to long (vec, subspace) form, one argmin window keyed
     * (vec_id, subspace) — wide enough to spread over any cluster. */
   private def pqCents(spark: SparkSession, dir: String): DataFrame =
-    vecs(spark, dir).filter(centroidPred(spark))
+    vecs(spark, dir).filter(centroidPred())
       .selectExpr("vec_id AS code", "v AS cv")
 
   private def pqCodesDf(spark: SparkSession, dir: String): DataFrame =
@@ -682,43 +647,50 @@ object Similarity {
         SELECT vec_id, subspace, code, dist FROM pq_codes
         ORDER BY vec_id, subspace"""
 
-  /** ADC (asymmetric distance computation) top-k over the PQ index:
-    * each query precomputes its distance table — squared L2 from the
-    * query's sub-vectors to every codebook entry, (queries × codebook
-    * × [[nSub]]) rows, tiny, broadcast — and every corpus vector's
-    * approximate distance is then four table lookups and three adds:
-    * an equi-join of the codes relation on (subspace, code) plus a
-    * fixed-order sum. The corpus side never touches a full vector at
-    * query time — the whole point of PQ at scale.
-    *
-    * Determinism: each per-subspace partial is a fixed-order unrolled
-    * fold; the per-vector total is assembled from the four pivoted
-    * partials in fixed column order, never from an arrival-order
-    * float agg. */
-  def pqAdcTopK(spark: SparkSession, dir: String): DataFrame = {
+  /** The ADC distance table `(query_id, code, subspace, pd)`: squared
+    * L2 from each query's sub-vectors to every codebook entry —
+    * (queries × codebook × [[nSub]]) rows, tiny, broadcast by the ADC
+    * tiers. Each partial is a fixed-order unrolled fold. */
+  private def adcTable(spark: SparkSession, dir: String): DataFrame = {
     val pdcols = (0 until nSub).map(s =>
       s"${l2sqRange("qv", "cv", s * subDim, subDim, SparkD)} AS pd$s")
-    val distTable = vecs(spark, dir).filter(col("vec_id") < nQueries)
+    queriesOf(vecs(spark, dir))
       .selectExpr("vec_id AS query_id", "v AS qv")
       .crossJoin(broadcast(pqCents(spark, dir)))
       .selectExpr(Seq("query_id", "code") ++ pdcols: _*)
       .selectExpr("query_id", "code",
         s"posexplode(array(${(0 until nSub).map("pd" + _).mkString(", ")})) AS (subspace, pd)")
-    val partials = pqCodesDf(spark, dir)
-      .join(broadcast(distTable), Seq("subspace", "code"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy("query_id", "vec_id")
-      .agg(sum(when(col("subspace") === 0, col("pd"))).as("pd0"),
-        sum(when(col("subspace") === 1, col("pd"))).as("pd1"),
-        sum(when(col("subspace") === 2, col("pd"))).as("pd2"),
-        sum(when(col("subspace") === 3, col("pd"))).as("pd3"))
-      .selectExpr("query_id", "vec_id", "pd0 + pd1 + pd2 + pd3 AS adist")
+  }
+
+  /** ADC scoring: `lookups` holds one `(subspace, pd)` table lookup per
+    * subspace for every `(query_id, vec_id, <carried>)` candidate. The
+    * per-subspace partials are pivoted into columns and `adist` is
+    * their fixed-order sum, never an arrival-order float agg; ranked
+    * per query by adist asc, vec_id asc, top [[topK]] kept. */
+  private def adcTopK(lookups: DataFrame, carried: Seq[String] = Nil): DataFrame = {
+    val keys = Seq("query_id", "vec_id") ++ carried
+    val pds = (0 until nSub).map(s =>
+      sum(when(col("subspace") === s, col("pd"))).as(s"pd$s"))
     val w = Window.partitionBy("query_id").orderBy(asc("adist"), asc("vec_id"))
-    partials.withColumn("rank", row_number().over(w))
+    lookups.groupBy(keys.map(col): _*)
+      .agg(pds.head, pds.tail: _*)
+      .selectExpr(keys :+ s"${(0 until nSub).map("pd" + _).mkString(" + ")} AS adist": _*)
+      .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= topK)
-      .select("query_id", "vec_id", "rank", "adist")
+      .select((keys ++ Seq("rank", "adist")).map(col): _*)
       .orderBy("query_id", "rank")
   }
+
+  /** ADC (asymmetric distance computation) top-k over the PQ index:
+    * each query precomputes its distance table ([[adcTable]]), and
+    * every corpus vector's approximate distance is then [[nSub]] table
+    * lookups and a fixed-order sum: an equi-join of the codes relation
+    * on (subspace, code). The corpus side never touches a full vector
+    * at query time — the whole point of PQ at scale. */
+  def pqAdcTopK(spark: SparkSession, dir: String): DataFrame =
+    adcTopK(pqCodesDf(spark, dir)
+      .join(broadcast(adcTable(spark, dir)), Seq("subspace", "code"))
+      .filter(col("vec_id") =!= col("query_id")))
 
   /** CTE chain ending in `pq_adc(query_id, vec_id, rank, adist)`. */
   private def pqAdcCtes(d: Dialect): String = {
@@ -761,11 +733,9 @@ object Similarity {
     * doubles bit-exact. */
   def pqRecall(spark: SparkSession, dir: String): DataFrame = {
     val all = vecs(spark, dir)
-    val q = all.filter(col("vec_id") < nQueries)
-      .selectExpr("vec_id AS query_id", "v AS qv")
+    val q = queriesOf(all).selectExpr("vec_id AS query_id", "v AS qv")
     val w = Window.partitionBy("query_id").orderBy(asc("l2"), asc("vec_id"))
-    // r14: cut — both PQ tiers' branches re-executed this brute-force
-    // L2 pass before
+    // cut: both PQ tiers' audits read this brute-force L2 pass
     val truth = graft.ops.Checkpoints.cut(
       all.join(broadcast(q), col("vec_id") =!= col("query_id"))
         .selectExpr("query_id", "vec_id",
@@ -773,20 +743,9 @@ object Similarity {
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= topK)
         .select("query_id", "vec_id"))
-    val tiers = Seq(
-      ("pq_adc", pqAdcTopK(spark, dir)),
-      ("ivfpq_adc", ivfPqTopK(spark, dir)))
-    tiers.map { case (name, df) =>
-      truth.join(
-          df.select("query_id", "vec_id").withColumn("__hit", lit(1)),
-          Seq("query_id", "vec_id"), "left_outer")
-        .agg(count(lit(1)).as("n_true"),
-          coalesce(sum(coalesce(col("__hit"), lit(0))), lit(0L))
-            .cast("long").as("n_hit"))
-        .select(lit(name).as("tier"), col("n_true"), col("n_hit"),
-          expr("CASE WHEN n_true > 0 THEN n_hit / CAST(n_true AS DOUBLE) " +
-            "ELSE CAST(0 AS DOUBLE) END").as("recall_at_k"))
-    }.reduce(_.unionByName(_)).orderBy("tier")
+    recallByTier(truth, "tier", Seq(
+      lit("pq_adc") -> pqAdcTopK(spark, dir),
+      lit("ivfpq_adc") -> ivfPqTopK(spark, dir)))
   }
 
   private def recallRowSql(tier: String, rel: String): String =
@@ -846,43 +805,17 @@ object Similarity {
     * is why the shape holds at 100 TB: cells bound the work, codes
     * bound the bytes. Both index relations (cell assignment, codes)
     * are session-cached builds shared with the standalone IVF and PQ
-    * tiers. Determinism: the adist total is assembled from pivoted
-    * per-subspace partials in fixed column order, and ties break on
-    * vec_id. */
+    * tiers; the scoring is [[adcTopK]], as in [[pqAdcTopK]]. */
   def ivfPqTopK(spark: SparkSession, dir: String): DataFrame = {
     val assigned = ivfAssigned(spark, dir)
-    val qcells = assigned.filter(col("vec_id") < nQueries)
-      .selectExpr("vec_id AS query_id", "cell")
-    val cands = assigned.selectExpr("vec_id AS cand_id", "cell")
-      .join(broadcast(qcells), Seq("cell"))
-      .filter(col("cand_id") =!= col("query_id"))
-    val pdcols = (0 until nSub).map(s =>
-      s"${l2sqRange("qv", "cv", s * subDim, subDim, SparkD)} AS pd$s")
-    val distTable = vecs(spark, dir).filter(col("vec_id") < nQueries)
-      .selectExpr("vec_id AS query_id", "v AS qv")
-      .crossJoin(broadcast(pqCents(spark, dir)))
-      .selectExpr(Seq("query_id", "code") ++ pdcols: _*)
-      .selectExpr("query_id", "code",
-        s"posexplode(array(${(0 until nSub).map("pd" + _).mkString(", ")})) AS (subspace, pd)")
-      .selectExpr("query_id AS q2", "code", "subspace", "pd")
-    val partials = pqCodesDf(spark, dir)
-      .selectExpr("vec_id AS cand_id2", "subspace AS s2", "code AS c2")
-      .join(cands, col("cand_id2") === col("cand_id"))
-      .join(broadcast(distTable),
-        col("q2") === col("query_id") && col("s2") === col("subspace") &&
-          col("c2") === col("code"))
-      .groupBy("query_id", "cand_id", "cell")
-      .agg(sum(when(col("s2") === 0, col("pd"))).as("pd0"),
-        sum(when(col("s2") === 1, col("pd"))).as("pd1"),
-        sum(when(col("s2") === 2, col("pd"))).as("pd2"),
-        sum(when(col("s2") === 3, col("pd"))).as("pd3"))
-      .selectExpr("query_id", "cand_id AS vec_id", "cell",
-        "pd0 + pd1 + pd2 + pd3 AS adist")
-    val w = Window.partitionBy("query_id").orderBy(asc("adist"), asc("vec_id"))
-    partials.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .select("query_id", "vec_id", "cell", "rank", "adist")
-      .orderBy("query_id", "rank")
+    val cands = assigned.select("vec_id", "cell")
+      .join(broadcast(queriesOf(assigned).selectExpr("vec_id AS query_id", "cell")),
+        Seq("cell"))
+      .filter(col("vec_id") =!= col("query_id"))
+    adcTopK(pqCodesDf(spark, dir)
+      .join(cands, Seq("vec_id"))
+      .join(broadcast(adcTable(spark, dir)), Seq("query_id", "subspace", "code")),
+      Seq("cell"))
   }
 
   /** CTE chain ending in `ivfpq_adc(query_id, vec_id, cell, rank,
@@ -1586,7 +1519,7 @@ object Similarity {
 
   private def graphVisitedUncached(spark: SparkSession, dir: String): DataFrame = {
     val all = vecs(spark, dir)
-    val q = all.filter(col("vec_id") < nQueries)
+    val q = queriesOf(all)
       .selectExpr("vec_id AS query_id", "v AS qv", "nrm AS qnrm")
     // Lineage discipline (the propagateLabels lesson): `visited` is
     // referenced twice per hop (beam + union) and the edge relation
@@ -1603,7 +1536,7 @@ object Similarity {
         .join(broadcast(q), Seq("query_id"))
         .selectExpr("query_id", "vec_id",
           s"${cosineWithNorms("qv", "v", "qnrm", "nrm", SparkD)} AS cosine")
-    val entries = all.filter(centroidPred(spark)).select("vec_id")
+    val entries = all.filter(centroidPred()).select("vec_id")
     var visited = graft.ops.Checkpoints.cut(score(
       q.select("query_id").crossJoin(broadcast(entries))
         .filter(col("vec_id") =!= col("query_id"))))
@@ -1623,14 +1556,8 @@ object Similarity {
   }
 
   /** Graph-search top-k readout (rank, cosine per query). */
-  def graphSearchTopK(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("query_id").orderBy(desc("cosine"), asc("vec_id"))
-    graphVisited(spark, dir)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .select("query_id", "vec_id", "rank", "cosine")
-      .orderBy("query_id", "rank")
-  }
+  def graphSearchTopK(spark: SparkSession, dir: String): DataFrame =
+    rankTopK(graphVisited(spark, dir))
 
   /** CTE chain ending in `gvis$searchHops(query_id, vec_id, cosine)` —
     * the search unrolled round by round; requires ivfCte + knnCtes
@@ -1703,21 +1630,9 @@ object Similarity {
   /** Recall of the graph search against the brute-force truth — the
     * audit row that keeps the navigable-graph tier honest (the same
     * pattern as [[annRecall]]; `AnnSpec` pins a recall floor). */
-  def graphSearchRecall(spark: SparkSession, dir: String): DataFrame = {
-    val truth = cosineTopK(spark, dir).select("query_id", "vec_id")
-    truth.join(
-        graphSearchTopK(spark, dir).select("query_id", "vec_id")
-          .withColumn("__hit", lit(1)),
-        Seq("query_id", "vec_id"), "left_outer")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_true"),
-        coalesce(sum(coalesce(col("__hit"), lit(0))), lit(0L))
-          .cast("long").as("n_hit"))
-      .selectExpr("query_id", "CAST(n_true AS BIGINT) AS n_true", "n_hit",
-        "CASE WHEN n_true > 0 THEN n_hit / CAST(n_true AS DOUBLE) " +
-          "ELSE CAST(0 AS DOUBLE) END AS recall_at_k")
-      .orderBy("query_id")
-  }
+  def graphSearchRecall(spark: SparkSession, dir: String): DataFrame =
+    recallAtK(cosineTopK(spark, dir).select("query_id", "vec_id"),
+      graphSearchTopK(spark, dir), "query_id").orderBy("query_id")
 
   val graphSearchRecallOracle: String =
     s"""WITH ${ivfCte(DuckD)},
@@ -1944,18 +1859,7 @@ object Similarity {
     * neither). Same broadcast-queries shape as [[cosineTopK]]. */
   def filteredTopK(spark: SparkSession, dir: String): DataFrame = {
     val all = vecs(spark, dir)
-    val q = all.filter(col("vec_id") < nQueries)
-      .selectExpr("vec_id AS query_id", "v AS qv", "nrm AS qnrm")
-    val admissible = all.filter("label % 2 = 0")
-    val scored = admissible
-      .join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .selectExpr("query_id", "vec_id", "label",
-        s"${cosineWithNorms("qv", "v", "qnrm", "nrm", SparkD)} AS cosine")
-    val w = Window.partitionBy("query_id").orderBy(desc("cosine"), asc("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .select("query_id", "vec_id", "label", "rank", "cosine")
-      .orderBy("query_id", "rank")
+    cosineTopKOf(all.filter("label % 2 = 0"), queriesOf(all), Nil, Seq("label"))
   }
 
   val filteredTopKOracle: String =

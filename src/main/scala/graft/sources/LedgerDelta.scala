@@ -30,9 +30,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * [[LedgerMaintenance.deleteMoR]] / `updateMoR` drive this same
   * writer and commit.
   *
-  * Selected per session via `graft.ledger.rowLevelMode=mor`; the
-  * group-based copy-on-write path stays the default (partition-tuple
-  * clustering on large rewrites keeps file sizes uniform there).
+  * Selected per table via the `graft.ledger.rowLevelMode=mor` table
+  * property (the session conf of the same name covers tables that
+  * declare none); the group-based copy-on-write path stays the
+  * default (partition-tuple clustering on large rewrites keeps file
+  * sizes uniform there).
   */
 private[sources] class LedgerDeltaOperation(
     dir: Path, schema: StructType,

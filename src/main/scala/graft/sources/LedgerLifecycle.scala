@@ -1101,17 +1101,11 @@ object LedgerLifecycle {
     spark.sql(s"INSERT INTO $t SELECT doc_id, fp, n_chars FROM kl_docs_$g")
     val pre = LedgerSink.readManifest(tDir).get.files.map(_.file).toSet
     val preVersion = LedgerSink.currentVersion(tDir)
-    // ensure no session override shadows the table property
-    val saved = spark.conf.getOption("graft.ledger.rowLevelMode")
-    try {
-      if (saved.nonEmpty) spark.conf.unset("graft.ledger.rowLevelMode")
-      spark.sql(
-        s"""DELETE FROM $t WHERE doc_id IN (
-              SELECT doc_id FROM (
-                SELECT doc_id, min(doc_id) OVER (PARTITION BY fp) AS keep
-                FROM kl_docs_$g) WHERE doc_id <> keep)""")
-    } finally saved.foreach(v =>
-      spark.conf.set("graft.ledger.rowLevelMode", v))
+    spark.sql(
+      s"""DELETE FROM $t WHERE doc_id IN (
+            SELECT doc_id FROM (
+              SELECT doc_id, min(doc_id) OVER (PARTITION BY fp) AS keep
+              FROM kl_docs_$g) WHERE doc_id <> keep)""")
     val post = LedgerSink.readManifest(tDir).get
     val preserved = post.files.map(_.file).toSet == pre
     val dvPresent = post.files.exists(_.dv.nonEmpty)
@@ -1184,37 +1178,33 @@ object LedgerLifecycle {
     val g = tag(sfDir)
     val src = scratch(spark, "upsrc", sfDir)
     val ct = catalogTable(spark, "rlo", "stream_upsert", sfDir,
-      "(ckey BIGINT, val BIGINT)")
+      "(ckey BIGINT, val BIGINT)" +
+        " TBLPROPERTIES ('graft.ledger.rowLevelMode'='mor')")
     val (t, tDir) = (ct.name, ct.root)
     upsertBatches(spark, sfDir, src): Unit
     val ckpt = s"${src.dir}/_checkpoint"
     val baseFiles = scala.collection.mutable.Set.empty[String]
-    try {
-      spark.conf.set("graft.ledger.rowLevelMode", "mor")
-      val q = src.readStream("maxFilesPerTrigger" -> "1")
-        .writeStream.option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.createOrReplaceTempView(s"up_batch_$g")
-          batch.sparkSession.sql(
-            s"""MERGE INTO $t AS tgt USING (
-                  SELECT ckey, val FROM (
-                    SELECT ckey, val,
-                      row_number() OVER (PARTITION BY ckey
-                        ORDER BY v DESC) AS rn
-                    FROM up_batch_$g) WHERE rn = 1) AS src
-                ON tgt.ckey = src.ckey
-                WHEN MATCHED THEN UPDATE SET val = src.val
-                WHEN NOT MATCHED THEN INSERT (ckey, val)
-                  VALUES (src.ckey, src.val)""")
-          if (baseFiles.isEmpty)
-            baseFiles ++= LedgerSink.readManifest(tDir).get.files.map(_.file)
-          (): Unit
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally spark.conf.unset("graft.ledger.rowLevelMode")
-    // unset, not set-to-cow: leaving "cow" SET would override
-    // table-PROPERTY routing for everything else on this session
+    val q = src.readStream("maxFilesPerTrigger" -> "1")
+      .writeStream.option("checkpointLocation", ckpt)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.createOrReplaceTempView(s"up_batch_$g")
+        batch.sparkSession.sql(
+          s"""MERGE INTO $t AS tgt USING (
+                SELECT ckey, val FROM (
+                  SELECT ckey, val,
+                    row_number() OVER (PARTITION BY ckey
+                      ORDER BY v DESC) AS rn
+                  FROM up_batch_$g) WHERE rn = 1) AS src
+              ON tgt.ckey = src.ckey
+              WHEN MATCHED THEN UPDATE SET val = src.val
+              WHEN NOT MATCHED THEN INSERT (ckey, val)
+                VALUES (src.ckey, src.val)""")
+        if (baseFiles.isEmpty)
+          baseFiles ++= LedgerSink.readManifest(tDir).get.files.map(_.file)
+        (): Unit
+      }
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
     val post = LedgerSink.readManifest(tDir).get
     val morDvs = post.files.exists(_.dv.nonEmpty)
     val baseKept = baseFiles.toSet.subsetOf(post.files.map(_.file).toSet)

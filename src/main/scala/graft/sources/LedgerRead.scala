@@ -154,20 +154,20 @@ private[sources] class LedgerTable(dir: Path, schema0: StructType,
       info: RowLevelOperationInfo): RowLevelOperationBuilder = {
     requireCurrent(info.command.toString)
     requireNotBranch(info.command.toString)
-    // row-level mode resolution: the session conf
-    // `graft.ledger.rowLevelMode` wins when set; otherwise the TABLE
-    // PROPERTY of the same name (declared at CREATE TABLE or via
+    // row-level mode resolution: the TABLE PROPERTY
+    // `graft.ledger.rowLevelMode` (declared at CREATE TABLE or via
     // ALTER TABLE SET TBLPROPERTIES — the Delta enableDeletionVectors
-    // shape); default "cow". "mor" plans the DELTA path — Spark
-    // rewrites the command into WriteDelta keyed on the (_file, _pos)
-    // rowId, and the commit installs deletion vectors plus appended
-    // files instead of rewriting any touched file.
-    val conf = org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("graft.ledger.rowLevelMode", "")
-    val mode =
-      if (conf.nonEmpty) conf
-      else LedgerSink.readManifest(dir)
-        .flatMap(_.props.get("graft.ledger.rowLevelMode")).getOrElse("cow")
+    // shape) wins; the session conf of the same name applies only to
+    // tables that declare none; default "cow". A table's declared mode
+    // is part of its definition, so no session setting re-routes it.
+    // "mor" plans the DELTA path — Spark rewrites the command into
+    // WriteDelta keyed on the (_file, _pos) rowId, and the commit
+    // installs deletion vectors plus appended files instead of
+    // rewriting any touched file.
+    val mode = LedgerSink.readManifest(dir)
+      .flatMap(_.props.get("graft.ledger.rowLevelMode"))
+      .getOrElse(org.apache.spark.sql.internal.SQLConf.get
+        .getConfString("graft.ledger.rowLevelMode", "cow"))
     if (mode == "mor")
       () => new LedgerDeltaOperation(dir, schema0, info.command)
     else () => new LedgerRowLevelOperation(dir, schema0, info.command)

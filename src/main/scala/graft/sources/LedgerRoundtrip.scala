@@ -152,10 +152,11 @@ object LedgerRoundtrip {
         FROM merged"""
 
   /** `dsv2_merge_mor`: the same SQL MERGE surface through the DELTA
-    * (merge-on-read) path — `graft.ledger.rowLevelMode=mor` makes the
-    * table's row-level operation implement [[SupportsDelta]], so
-    * Spark plans `WriteDelta` against the `(_file, _pos)` rowId and
-    * the commit installs deletion vectors + appended files with NO
+    * (merge-on-read) path — the table property
+    * `graft.ledger.rowLevelMode=mor` makes the table's row-level
+    * operation implement [[SupportsDelta]], so Spark plans
+    * `WriteDelta` against the `(_file, _pos)` rowId and the commit
+    * installs deletion vectors + appended files with NO
     * touched file rewritten. Three connector verdicts fold into the
     * oracle hash alongside the replayed state digest:
     * `files_preserved` (every pre-merge data file name survives — a
@@ -165,7 +166,8 @@ object LedgerRoundtrip {
   def mergeMoRRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     val tag = LedgerGate.tag(sfDir)
     val ct = catalogTable(spark, "rlo", "mor_merge", sfDir,
-      "(c_custkey BIGINT, bal_c BIGINT)")
+      "(c_custkey BIGINT, bal_c BIGINT)" +
+        " TBLPROPERTIES ('graft.ledger.rowLevelMode'='mor')")
     val (t, dir) = (ct.name, ct.root)
     graft.io.Tables.customer(spark, sfDir)
       .selectExpr("CAST(c_custkey AS BIGINT) AS c_custkey",
@@ -187,16 +189,13 @@ object LedgerRoundtrip {
       .createOrReplaceTempView(s"mm_src_$tag")
     val preFiles = LedgerSink.readManifest(dir).get.files.map(_.file).toSet
     val preVersion = LedgerSink.currentVersion(dir)
-    try {
-      spark.conf.set("graft.ledger.rowLevelMode", "mor")
-      spark.sql(
-        s"""MERGE INTO $t AS tgt USING mm_src_$tag AS src
-            ON tgt.c_custkey = src.id
-            WHEN MATCHED AND src.kind = 'del' THEN DELETE
-            WHEN MATCHED THEN UPDATE SET bal_c = src.nv
-            WHEN NOT MATCHED THEN INSERT (c_custkey, bal_c)
-              VALUES (src.id, src.nv)""")
-    } finally spark.conf.set("graft.ledger.rowLevelMode", "cow")
+    spark.sql(
+      s"""MERGE INTO $t AS tgt USING mm_src_$tag AS src
+          ON tgt.c_custkey = src.id
+          WHEN MATCHED AND src.kind = 'del' THEN DELETE
+          WHEN MATCHED THEN UPDATE SET bal_c = src.nv
+          WHEN NOT MATCHED THEN INSERT (c_custkey, bal_c)
+            VALUES (src.id, src.nv)""")
     val post = LedgerSink.readManifest(dir).get
     val preserved = preFiles.subsetOf(post.files.map(_.file).toSet)
     val oneCommit = LedgerSink.currentVersion(dir) == preVersion + 1

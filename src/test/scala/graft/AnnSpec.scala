@@ -3,7 +3,9 @@ package graft
 import graft.llm.Similarity
 
 /** Properties of the ANN surface that the value-equality oracles can't
-  * express: recall bounds and the multi-probe monotonicity knob. */
+  * express: recall bounds, the multi-probe monotonicity knob, and the
+  * shape invariants of the kNN graph, semantic clusters, label
+  * outliers and incremental assignment. */
 class AnnSpec extends SparkSpec {
   import spark.implicits._
 
@@ -141,5 +143,104 @@ class AnnSpec extends SparkSpec {
     assert(mean >= 0.8, s"graph-search mean recall $mean below 0.8")
     rows.foreach { case (q, r) =>
       assert(r >= 0.5, s"query $q recall $r below 0.5") }
+  }
+
+  test("probe search: annRecall's probe rows equal probeSweep's p = 1 and 2 rows") {
+    // one probe search serves both audits; p = 1 probes exactly the
+    // assigned cell, because assignment and probing rank centroids by
+    // the same cosine-then-centroid_id argmax
+    val tiers = Similarity.annRecall(spark, sfTiny)
+      .select("tier", "n_true", "n_hit", "recall_at_k")
+      .as[(String, Long, Long, Double)].collect()
+      .map(r => r._1 -> (r._2, r._3, r._4)).toMap
+    val sweep = Similarity.probeSweep(spark, sfTiny)
+      .select("n_probe", "n_true", "n_hit", "recall_at_k")
+      .as[(Int, Long, Long, Double)].collect()
+      .map(r => r._1 -> (r._2, r._3, r._4)).toMap
+    assert(tiers("ivf_probe1") == sweep(1))
+    assert(tiers("ivf_probe2") == sweep(2))
+  }
+
+  test("knn graph: <= k in-cell neighbors per vector, rank-ordered") {
+    val g = Similarity.knnGraph(spark, sfTiny)
+      .select("vec_id", "nbr_id", "cell", "rank", "cosine")
+      .as[(Long, Long, Long, Int, Double)].collect()
+    assert(g.nonEmpty)
+    g.groupBy(_._1).foreach { case (v, rows) =>
+      assert(rows.length <= 3, s"vec $v has ${rows.length} neighbors")
+      assert(rows.map(_._4).sorted.sameElements(1 to rows.length), s"vec $v ranks")
+      // cosine non-increasing in rank (ties broken by nbr_id asc)
+      val byRank = rows.sortBy(_._4)
+      byRank.sliding(2).foreach {
+        case Array(a, b) =>
+          assert(a._5 > b._5 || (a._5 == b._5 && a._2 < b._2), s"vec $v order")
+        case _ =>
+      }
+      assert(rows.forall(r => r._2 != v), s"vec $v self-edge")
+    }
+    // neighbors come from the vector's own IVF cell
+    val cells = Similarity.ivfCells(spark, sfTiny)
+      .select("vec_id", "cell").as[(Long, Long)].collect().toMap
+    g.foreach { case (v, n, cell, _, _) =>
+      assert(cells(v) == cell && cells(n) == cell, s"edge $v->$n crosses cells")
+    }
+  }
+
+  test("semantic clusters: mutual edges land in one cluster; singletons label themselves") {
+    val labels = Similarity.semanticClusters(spark, sfTiny)
+      .select("vec_id", "cluster_id", "is_clustered")
+      .as[(Long, Long, Int)].collect()
+    val byId = labels.map(r => r._1 -> r._2).toMap
+    // every vector present exactly once, labels are component minima
+    assert(labels.length == byId.size)
+    labels.foreach { case (v, c, flag) =>
+      assert(c <= v, s"label above own id for $v")
+      if (flag == 0) assert(c == v, s"singleton $v mislabeled $c")
+    }
+    // recompute the mutual edge set from the knn graph and assert both
+    // endpoints share a label (soundness of the collapse)
+    val knn = Similarity.knnGraph(spark, sfTiny)
+      .select("vec_id", "nbr_id", "cosine").as[(Long, Long, Double)].collect()
+    val fwd = knn.map(r => (r._1, r._2)).toSet
+    val mutual = knn.filter(r => r._3 >= 0.3 && r._1 < r._2 && fwd((r._2, r._1)))
+    assert(mutual.nonEmpty, "fixture produced no mutual edges — spec is vacuous")
+    mutual.foreach { case (a, b, _) =>
+      assert(byId(a) == byId(b), s"mutual edge ($a,$b) split across clusters")
+      assert(labels.find(_._1 == a).get._3 == 1 && labels.find(_._1 == b).get._3 == 1)
+    }
+  }
+
+  test("label outliers: a per-label rank permutation flagging the top 5") {
+    val rows = Similarity.labelOutliers(spark, sfTiny)
+      .select("vec_id", "label", "dist2", "dist_rank", "is_outlier")
+      .as[(Long, String, Double, Int, Int)].collect()
+    assert(rows.forall(_._3 >= 0.0), "squared distance must be non-negative")
+    rows.groupBy(_._2).foreach { case (label, rs) =>
+      assert(rs.map(_._4).sorted.sameElements(1 to rs.length), s"$label ranks")
+      assert(rs.count(_._5 == 1) == math.min(5, rs.length), s"$label outlier count")
+      val byRank = rs.sortBy(_._4)
+      byRank.sliding(2).foreach {
+        case Array(a, b) =>
+          assert(a._3 > b._3 || (a._3 == b._3 && a._1 < b._1), s"$label order")
+        case _ =>
+      }
+    }
+  }
+
+  test("incremental assign: occupancy reconciles with the full index") {
+    val inc = Similarity.incrementalAssign(spark, sfTiny)
+      .select("cell", "old_n", "n_added", "new_n")
+      .as[(Long, Long, Long, Long)].collect()
+    assert(inc.nonEmpty)
+    inc.foreach { case (c, o, a, n) => assert(o + a == n, s"cell $c") }
+    // per-cell new_n must equal the full ivfCells occupancy (frozen
+    // centroids: batch assignment == full assignment restricted)
+    val full = Similarity.ivfCells(spark, sfTiny)
+      .groupBy("cell").count().as[(Long, Long)].collect().toMap
+    assert(inc.map(r => r._1 -> r._4).toMap == full)
+    // and the appended count is exactly the batch-membership count
+    val batchN = graft.io.Tables.embeddings(spark, sfTiny)
+      .filter("vec_id % 10 = 9").count()
+    assert(inc.map(_._3).sum == batchN)
   }
 }

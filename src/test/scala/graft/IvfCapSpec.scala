@@ -3,11 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** IVF coarse-quantizer nlist cap (VERDICT r7 #2): the centroid sample
-  * is bounded at `spark.graft.ivf.maxNlist` entries (default 4096), so
-  * the broadcast side of cell assignment can never grow with the
-  * corpus. The default never binds at fixture scale (oracles
-  * unchanged); this spec lowers the conf to force the cap to engage and
-  * asserts the bound actually holds in the produced index.
+  * is bounded at `Similarity.defaultMaxNlist` entries (4096), so the
+  * broadcast side of cell assignment can never grow with the corpus.
+  * The cap never binds at fixture scale (oracles unchanged); this spec
+  * lowers it through the builders' `maxNlist` parameter to force the
+  * cap to engage and asserts the bound actually holds in the produced
+  * index.
   */
 class IvfCapSpec extends SparkSpec {
 
@@ -20,26 +21,24 @@ class IvfCapSpec extends SparkSpec {
   }
 
   test("lowered maxNlist bounds the centroid set and the index stays total") {
-    spark.conf.set("spark.graft.ivf.maxNlist", "2")
-    try {
-      val cells = graft.llm.Similarity.ivfCells(spark, sfTiny)
-      // Every vector still gets exactly one cell...
-      val n = cells.count()
-      assert(n === 500)
-      assert(cells.select("vec_id").distinct().count() === n)
-      // ...drawn from a centroid set no larger than the cap, and the
-      // capped sample is the FIRST sampled vec_ids (0 and 100).
-      val cellIds = cells.select("cell").distinct()
-        .collect().map(_.getLong(0)).sorted.toSeq
-      assert(cellIds.size <= 2)
-      assert(cellIds === Seq(0L, 100L))
-      // Search stays well-formed under the cap: per-query top-k from
-      // the probed cell only, ranks dense from 1.
-      val topk = graft.llm.Similarity.ivfTopK(spark, sfTiny)
-      val badRank = topk.groupBy("query_id")
-        .agg(min("rank").as("mn"), max("rank").as("mx"), count(lit(1)).as("c"))
-        .filter(col("mn") =!= 1 || col("mx") =!= col("c"))
-      assert(badRank.count() === 0)
-    } finally spark.conf.unset("spark.graft.ivf.maxNlist")
+    val maxNlist = 2L
+    val cells = graft.llm.Similarity.ivfCells(spark, sfTiny, maxNlist)
+    // Every vector still gets exactly one cell...
+    val n = cells.count()
+    assert(n === 500)
+    assert(cells.select("vec_id").distinct().count() === n)
+    // ...drawn from a centroid set no larger than the cap, and the
+    // capped sample is the FIRST sampled vec_ids (0 and 100).
+    val cellIds = cells.select("cell").distinct()
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(cellIds.size <= 2)
+    assert(cellIds === Seq(0L, 100L))
+    // Search stays well-formed under the cap: per-query top-k from
+    // the probed cell only, ranks dense from 1.
+    val topk = graft.llm.Similarity.ivfTopK(spark, sfTiny, maxNlist)
+    val badRank = topk.groupBy("query_id")
+      .agg(min("rank").as("mn"), max("rank").as("mx"), count(lit(1)).as("c"))
+      .filter(col("mn") =!= 1 || col("mx") =!= col("c"))
+    assert(badRank.count() === 0)
   }
 }

@@ -58,13 +58,35 @@ class TablePropertiesSpec extends graft.SparkSpec {
     assert(m.files.exists(_.dv.nonEmpty))
     assert(spark.sql(s"SELECT count(*) FROM $t").head().getLong(0)
       == (0 until 100).count(_ % 3 != 0))
-    // session conf set to cow OVERRIDES the table property
+    // the declared property wins over a session conf set to cow
     try {
       spark.conf.set("graft.ledger.rowLevelMode", "cow")
       spark.sql(s"DELETE FROM $t WHERE id % 7 = 0")
       val m2 = manifest("morprop")
-      assert(m2.files.map(_.file).toSet.intersect(pre).isEmpty,
-        "conf=cow must rewrite (override the property)")
+      assert(m2.files.map(_.file).toSet == pre,
+        "conf=cow must not rewrite a table that declares mor")
+      assert(m2.files.map(_.dv).toSet != m.files.map(_.dv).toSet,
+        "the second delete must install deletion vectors")
+      assert(spark.sql(s"SELECT count(*) FROM $t").head().getLong(0)
+        == (0 until 100).count(i => i % 3 != 0 && i % 7 != 0))
+    } finally spark.conf.unset("graft.ledger.rowLevelMode")
+    }
+  }
+
+  test("the mor gates hold their verdicts under a session conf of cow, and leave it set") {
+    graft.SparkSpec.rowLevelConfLock.synchronized {
+    try {
+      spark.conf.set("graft.ledger.rowLevelMode", "cow")
+      val verdicts = Map(
+        "dsv2_merge_mor" -> Seq("files_preserved", "one_commit", "dv_present"),
+        "dsv2_stream_upsert" -> Seq("mor_dvs", "base_files_kept"),
+        "dedup_kill_list_mor" -> Seq("files_preserved", "dv_present", "one_commit"))
+      verdicts.foreach { case (q, cols) =>
+        val row = graft.SparkEntry.queries(q)(spark, sfTiny).head()
+        cols.foreach(c => assert(row.getAs[Int](c) == 1, s"$q.$c"))
+        assert(spark.conf.getOption("graft.ledger.rowLevelMode").contains("cow"),
+          s"$q changed the session conf")
+      }
     } finally spark.conf.unset("graft.ledger.rowLevelMode")
     }
   }
